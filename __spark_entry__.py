@@ -18,36 +18,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, "/root/repo")
 
-
-def _registry():
-    from employee_analytics_etl_spark.plans import (  # noqa: F401
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
-
-    return registry.QUERIES, registry.ORACLE
+from employee_analytics_etl_spark.plans import load_all  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: TPC-H-Q1-shaped pricing summary on sf0.001."""
-    queries_map, _ = _registry()
+    queries_map, _ = load_all()
     return queries_map["tpch_q1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ the
     extension tier). Each callable takes (spark, sf_dir)."""
-    queries_map, _ = _registry()
+    queries_map, _ = load_all()
     return dict(queries_map)
 
 
@@ -55,5 +38,5 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI-SQL equivalents (same column names/types).
     Keys absent here (e.g. knn_lsh_hyperplane) are genuinely
     non-SQL-expressible → rows-only check."""
-    _, oracle_map = _registry()
+    _, oracle_map = load_all()
     return dict(oracle_map)

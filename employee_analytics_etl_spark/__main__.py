@@ -43,33 +43,21 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     if args.command in ("query", "sql", "explain"):
-        from .plans import (  # noqa: F401 — imports register queries
-            registry,
-            registry_ext,
-            registry_funcs,
-            registry_more,
-            registry_r5,
-            registry_r6,
-            registry_r7,
-            registry_r8,
-            registry_r9,
-            registry_r10,
-            registry_r11,
-            registry_r12,
-        )
+        from .plans import load_all
         from .session import build_session
         from .sources.readers import register_views
 
+        queries, _ = load_all()
         spark = build_session(app_name=f"eae-{args.command}")
         if args.command in ("query", "explain"):
-            if args.name not in registry.QUERIES:
+            if args.name not in queries:
                 print(
                     f"unknown query {args.name!r}; available: "
-                    + ", ".join(sorted(registry.QUERIES)),
+                    + ", ".join(sorted(queries)),
                     file=sys.stderr,
                 )
                 return 2
-            df = registry.QUERIES[args.name](spark, args.sf_dir)
+            df = queries[args.name](spark, args.sf_dir)
             if args.command == "explain":
                 df.explain("formatted")
             else:

@@ -369,22 +369,6 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Long-form (id, seed, minhash) view of the wide signatures (kept
-    for API symmetry with the oracle SQL's shape)."""
-    wide = minhash_signatures_wide(df, id_col, text_col, num_hashes, shingle_n)
-    stack = ", ".join(f"{s}, m{s}" for s in range(num_hashes))
-    return wide.selectExpr(
-        "id", f"stack({num_hashes}, {stack}) as (seed, minhash)"
-    )
-
-
 def minhash_band_rows(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -33,9 +33,6 @@ def _oriented_edge_triangles(
     u_col: str = "u",
     v_col: str = "v",
     assume_distinct: bool = False,
-    broadcast_adj_cells_max: int = 16_000_000,
-    broadcast_adj: bool | None = None,
-    adj_cells: int | None = None,
 ):
     """Shared core for exact triangle analytics: degree-oriented
     adjacency-set intersection (the compact-forward / GraphFrames
@@ -53,34 +50,13 @@ def _oriented_edge_triangles(
     consumers). Degrees are folded on via broadcast (the node table
     is |V|, edges are the corpus-scale object).
 
-    The N+(v)-attach join is SIZE-GATED between two physical
-    strategies (same idiom as the union-find gate in
-    dedup.connected_components): when the adjacency table holds at
-    most ``broadcast_adj_cells_max`` total neighbor cells (= oriented
-    edge count; 16 M longs ≈ 128 MB), it is BROADCAST to the dst side
-    — the exploded rows, each dragging its |N+(src)|-element array,
-    then never shuffle, removing the plan's largest exchange
-    (Σ_u |N+(u)|² ≈ 72 M cells ≈ 600 MB on the sf0.1 co-purchase
-    graph vs its 1.2 M-cell adjacency). Measured on
-    local_clustering_topk: within noise at sf0.1 (the exchange is not
-    the local bottleneck — see the PERF.md stage profile), 7.6 → 6.9 s
-    min-of-3 at the 10× multifile layout, and the gap is what grows
-    with data: the exchange scales with wedge mass, the broadcast with
-    |E|. Graphs past the gate (a 100 TB web graph) fall back to the
-    shuffle join, whose volume is the same orientation-bounded wedge
-    mass as before.
-
-    Gate laziness (r7/r8 ADVICE): construction NEVER runs a job. The
-    default (no ``broadcast_adj``, no ``adj_cells``) is the shuffle
-    join — the plan that is safe at unbounded |E| — so the plan
-    explain_audit audits is the plan production executes, in every
-    mode. The gate only flips to broadcast on caller-supplied
-    knowledge: ``broadcast_adj=True`` or an ``adj_cells`` upper bound
-    (cells = oriented edge count = |distinct E|) at most
-    ``broadcast_adj_cells_max``. The broadcast variant measured
-    within noise at sf0.1 and ~10% at the 10× multifile layout, so
-    defaulting to shuffle costs little where it is wrong and prevents
-    a ≥100 MB broadcast where it would be fatal.
+    The N+(v)-attach join is always a shuffle join, so construction
+    never runs a job and the plan explain_audit audits is the plan
+    production executes. A broadcast of the adjacency measured
+    within noise at sf0.1 and ~10% faster at the 10× multifile layout,
+    but past ~13 M adjacency cells the broadcast itself becomes the
+    memory hazard; the shuffle join is the plan that is safe at
+    unbounded |E|.
 
     Returns (e, deg, tri) where ``tri`` is one row per oriented edge
     with ``ws`` = the array of third corners closing it. All counts
@@ -131,54 +107,34 @@ def _oriented_edge_triangles(
     # and 3.80 -> 3.20 s under local-cluster[4,8,8192] combined with
     # the shuffle_hash hint below.
     adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbr"))
-    if broadcast_adj is None:
-        # Lazy, deterministic default: the shuffle join. The former
-        # auto mode ran an eager e.count() at DataFrame-construction
-        # time, and suppressing that under SPARK_GRAFT_PLAN_ONLY meant
-        # explain_audit audited a different physical plan than
-        # production executed (r8 ADVICE). Measured: the broadcast
-        # variant is within noise at sf0.1 and ~10% at the 10×
-        # multifile layout, but past ~13 M adjacency cells the
-        # broadcast itself becomes the memory hazard — the unbounded-
-        # scale-safe plan is the shuffle join, so that is the default
-        # and the SAME plan is constructed in every mode. Callers with
-        # a known-small graph opt in via broadcast_adj=True or a
-        # caller-computed adj_cells bound.
-        broadcast_adj = (
-            adj_cells is not None and adj_cells <= broadcast_adj_cells_max
-        )
-    adj_dst = adj.select(F.col("src").alias("dst"), F.col("nbr").alias("nb"))
-    if broadcast_adj:
-        adj_dst = F.broadcast(adj_dst)
-    else:
-        # FORCE a shuffle join with the COMPACT adjacency as the build
-        # side (r12 established the hazard, r13 the strategy). Leaving
-        # the choice to the optimizer let it broadcast the EXPLODED
-        # left side: Catalyst's Generate estimate is the pre-explode
-        # relation, so the per-edge rows each dragging their
-        # |N+(src)|-element array — the Σ|N+(u)|² wedge-mass object —
-        # priced as the compact adjacency and slid under the session's
-        # 64 MB threshold. At the factor-10 multifile layout
-        # (1.2 M edges, 148 M wedges) the deserialized
-        # LongToUnsafeRowMap blew an 8 GiB executor heap in
-        # local-cluster mode, single query, reproducibly. r12 pinned a
-        # sort-merge join; r13 switches the pin to SHUFFLE_HASH with
-        # adj_dst as the hinted (build) side: both sides still shuffle
-        # — the plan the docstring promises — but neither sorts, and
-        # the sort SMJ paid on the streamed side was over the wedge-
-        # mass rows each dragging its array (guide §3.1: per-partition
-        # hash build beats sort-merge when one side is per-partition
-        # small — the build side here is the |E|-cell adjacency split
-        # across partitions, never the exploded side). Measured
-        # (interleaved min-of-5/6, sf0.1): merge -> shuffle_hash is
-        # 3.68 -> 3.23 s on local[32], 3.80 -> 3.40 s under
-        # local-cluster[4,8,8192]; the factor-10 multifile cluster
-        # layout that OOM'd the broadcast plan runs green (see
-        # OPTIMIZATION_r13.md). AQE skew-join splitting still applies
-        # to shuffled-hash joins, and the opt-in broadcast_adj path
-        # above is untouched (its build side is the aggregated
-        # adjacency, bounded by the caller's adj_cells).
-        adj_dst = adj_dst.hint("shuffle_hash")
+    # FORCE a shuffle join with the COMPACT adjacency as the build
+    # side (r12 established the hazard, r13 the strategy). Leaving
+    # the choice to the optimizer let it broadcast the EXPLODED
+    # left side: Catalyst's Generate estimate is the pre-explode
+    # relation, so the per-edge rows each dragging their
+    # |N+(src)|-element array — the Σ|N+(u)|² wedge-mass object —
+    # priced as the compact adjacency and slid under the session's
+    # 64 MB threshold. At the factor-10 multifile layout
+    # (1.2 M edges, 148 M wedges) the deserialized
+    # LongToUnsafeRowMap blew an 8 GiB executor heap in
+    # local-cluster mode, single query, reproducibly. r12 pinned a
+    # sort-merge join; r13 switches the pin to SHUFFLE_HASH with
+    # adj_dst as the hinted (build) side: both sides still shuffle
+    # — the plan the docstring promises — but neither sorts, and
+    # the sort SMJ paid on the streamed side was over the wedge-
+    # mass rows each dragging its array (guide §3.1: per-partition
+    # hash build beats sort-merge when one side is per-partition
+    # small — the build side here is the |E|-cell adjacency split
+    # across partitions, never the exploded side). Measured
+    # (interleaved min-of-5/6, sf0.1): merge -> shuffle_hash is
+    # 3.68 -> 3.23 s on local[32], 3.80 -> 3.40 s under
+    # local-cluster[4,8,8192]; the factor-10 multifile cluster
+    # layout that OOM'd the broadcast plan runs green (see
+    # OPTIMIZATION_r13.md). AQE skew-join splitting still applies
+    # to shuffled-hash joins.
+    adj_dst = adj.select(
+        F.col("src").alias("dst"), F.col("nbr").alias("nb")
+    ).hint("shuffle_hash")
     tri = (
         adj.select(
             F.col("src"),
@@ -197,8 +153,6 @@ def triangle_stats(
     u_col: str = "u",
     v_col: str = "v",
     assume_distinct: bool = False,
-    broadcast_adj: bool | None = None,
-    adj_cells: int | None = None,
 ) -> DataFrame:
     """Distributed exact triangle counting over an undirected
     canonical edge set (one row per edge, ``u < v``). Returns one
@@ -210,12 +164,7 @@ def triangle_stats(
     exact integers → engine-independent, no float tolerance needed.
     """
     e, deg, tri_sets = _oriented_edge_triangles(
-        edges_canonical,
-        u_col,
-        v_col,
-        assume_distinct,
-        broadcast_adj=broadcast_adj,
-        adj_cells=adj_cells,
+        edges_canonical, u_col, v_col, assume_distinct
     )
     tri = tri_sets.agg(
         F.coalesce(F.sum(F.size("ws")), F.lit(0))
@@ -573,8 +522,6 @@ def local_clustering_topk(
     u_col: str = "u",
     v_col: str = "v",
     assume_distinct: bool = False,
-    broadcast_adj: bool | None = None,
-    adj_cells: int | None = None,
 ) -> DataFrame:
     """Per-node local clustering coefficient, top-k: for each node
     with degree ≥ 2, triangles(v) / C(deg(v), 2) — how close the
@@ -590,12 +537,7 @@ def local_clustering_topk(
     TakeOrdered — no global sort. Counts are exact integers; the
     coefficient is a single IEEE division."""
     _e, deg, tri_sets = _oriented_edge_triangles(
-        edges_canonical,
-        u_col,
-        v_col,
-        assume_distinct,
-        broadcast_adj=broadcast_adj,
-        adj_cells=adj_cells,
+        edges_canonical, u_col, v_col, assume_distinct
     )
     # each closed edge row stands for size(ws) triangles: w is one
     # corner of exactly one of them, but src and dst corner EVERY one

@@ -8,7 +8,7 @@ after load, lay the data out so the expensive operation never shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -109,13 +109,6 @@ def salted_join(
     return big_s.join(small_r.hint("shuffle_hash"), [key, "_salt"], how).drop(
         "_salt"
     )
-
-
-def repartition_for_join(df: DataFrame, key: str, num_partitions: int) -> DataFrame:
-    """Explicit hash-repartition on a join key — pre-shuffles once so
-    several downstream joins/aggs on the same key reuse the exchange
-    (Catalyst's ReuseExchange)."""
-    return df.repartition(num_partitions, F.col(key))
 
 
 def upsert_parquet(

@@ -43,10 +43,6 @@ def tokens_col(text_col: str) -> Column:
     return F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
 
 
-def token_count(text_col: str) -> Column:
-    return F.size(tokens_col(text_col))
-
-
 def bpe_token_count(text_col: str) -> Column:
     """Whitespace-free BPE-ish pre-token count (regex pre-tokenizer)."""
     return F.size(F.expr(f"regexp_extract_all(lower({text_col}), '{BPE_RE}', 0)"))

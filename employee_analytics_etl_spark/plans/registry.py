@@ -40,7 +40,13 @@ ORACLE: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
+    """Decorator registering a query builder as ``name``, with its
+    DuckDB oracle SQL. The only writer of QUERIES/ORACLE; a name
+    registers once."""
+
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle

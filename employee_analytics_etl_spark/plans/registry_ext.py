@@ -16,7 +16,7 @@ from ..operators import dedup as D
 from ..operators.partitioning import fan_out
 from ..operators import similarity as S
 from ..operators import text as TX
-from .registry import ORACLE, QUERIES, query, t
+from .registry import query, t
 
 # Shared oracle SQL fragments -------------------------------------------------
 
@@ -59,8 +59,6 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lang_count_sql(lang: str) -> str:
-    import re
-
     words = "|".join(TX.LANG_STOPWORDS[lang])
     return f"len(regexp_extract_all(lower(text), '\\b({words})\\b'))"
 
@@ -2168,9 +2166,7 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "doc_bigram_lm_score",
-    oracle="""
+_BIGRAM_LM_ORACLE = """
     WITH toks AS (
       SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tk
       FROM documents
@@ -2195,8 +2191,10 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN uc ON grams.w1 = uc.w
     CROSS JOIN v
     GROUP BY doc_id
-    """,
-)
+    """
+
+
+@query("doc_bigram_lm_score", oracle=_BIGRAM_LM_ORACLE)
 def doc_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Add-one-smoothed bigram LM trained on the corpus, scoring each
     document by mean bigram log-probability (the CCNet/KenLM-style

@@ -1273,93 +1273,6 @@ def orders_price_decile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "lineitem_corr_matrix",
-    oracle="""
-    WITH m AS (
-      SELECT COUNT(*) AS n,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s_q,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s_p,
-        CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS s_d,
-        CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS s_qq,
-        CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) AS s_pp,
-        CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(28,6))) AS DOUBLE) AS s_dd,
-        CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) AS s_qp,
-        CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(28,6))) AS DOUBLE) AS s_qd,
-        CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(28,6))) AS DOUBLE) AS s_pd
-      FROM lineitem
-    )
-    SELECT 'quantity' AS col_a, 'extendedprice' AS col_b, CAST(n AS BIGINT) AS n,
-      ROUND((n * s_qp - s_q * s_p)
-            / sqrt((n * s_qq - s_q * s_q) * (n * s_pp - s_p * s_p)), 9) AS corr
-    FROM m
-    UNION ALL
-    SELECT 'quantity', 'discount', CAST(n AS BIGINT),
-      ROUND((n * s_qd - s_q * s_d)
-            / sqrt((n * s_qq - s_q * s_q) * (n * s_dd - s_d * s_d)), 9)
-    FROM m
-    UNION ALL
-    SELECT 'extendedprice', 'discount', CAST(n AS BIGINT),
-      ROUND((n * s_pd - s_p * s_d)
-            / sqrt((n * s_pp - s_p * s_p) * (n * s_dd - s_d * s_d)), 9)
-    FROM m
-    """,
-)
-def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlation matrix over (quantity,
-    extendedprice, discount) from ONE moment-sum aggregate — the
-    multi-column generalization of lineitem_qty_price_corr: 9 sums in
-    a single scan (map-side combine; constant state), then each pair's
-    correlation is fixed scalar arithmetic on the same exact inputs.
-    Products are single IEEE multiplies summed through DECIMAL
-    (order-independent); outputs ROUND-snapped per the OLS/FMA
-    precedent. The engine-native corr() aggregates doubles in
-    plan-dependent order and cannot hash-match across engines."""
-    li = t(spark, sf_dir, "lineitem")
-
-    def dsum2(a: str, b: str, alias: str):
-        return (
-            F.sum((F.col(a) * F.col(b)).cast("decimal(28,6)"))
-            .cast("double")
-            .alias(alias)
-        )
-
-    m = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("s_q"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("s_p"),
-        F.sum(F.col("l_discount").cast("decimal(18,2)")).cast("double").alias("s_d"),
-        dsum2("l_quantity", "l_quantity", "s_qq"),
-        dsum2("l_extendedprice", "l_extendedprice", "s_pp"),
-        dsum2("l_discount", "l_discount", "s_dd"),
-        dsum2("l_quantity", "l_extendedprice", "s_qp"),
-        dsum2("l_quantity", "l_discount", "s_qd"),
-        dsum2("l_extendedprice", "l_discount", "s_pd"),
-    )
-
-    def corr_of(sa, sb, saa, sbb, sab):
-        return (F.col("n") * F.col(sab) - F.col(sa) * F.col(sb)) / F.sqrt(
-            (F.col("n") * F.col(saa) - F.col(sa) * F.col(sa))
-            * (F.col("n") * F.col(sbb) - F.col(sb) * F.col(sb))
-        )
-
-    pairs = [
-        ("quantity", "extendedprice", "s_q", "s_p", "s_qq", "s_pp", "s_qp"),
-        ("quantity", "discount", "s_q", "s_d", "s_qq", "s_dd", "s_qd"),
-        ("extendedprice", "discount", "s_p", "s_d", "s_pp", "s_dd", "s_pd"),
-    ]
-    out = None
-    for a, b, sa, sb, saa, sbb, sab in pairs:
-        row = m.select(
-            F.lit(a).alias("col_a"),
-            F.lit(b).alias("col_b"),
-            F.col("n").cast("long").alias("n"),
-            F.round(corr_of(sa, sb, saa, sbb, sab), 9).alias("corr"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-@query(
     "orders_incremental_agg_merge",
     oracle="""
     WITH base AS (

@@ -3149,64 +3149,6 @@ def orders_quantile_sketch_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "events_rolling_7d_active_users",
-    oracle="""
-    WITH ud AS (
-      SELECT DISTINCT user_id,
-             CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
-      FROM events
-    ),
-    expanded AS (
-      SELECT DISTINCT user_id, ud.day + o.o AS win_day
-      FROM ud, UNNEST(range(0, 7)) AS o(o)
-    ),
-    days AS (SELECT DISTINCT day FROM ud)
-    SELECT e.win_day AS day_epoch,
-           CAST(COUNT(*) AS BIGINT) AS active_users_7d
-    FROM expanded e JOIN days d ON d.day = e.win_day
-    GROUP BY e.win_day
-    """,
-)
-def events_rolling_7d_active_users(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """EXACT rolling 7-day active users (WAU) per observed day — the
-    engagement metric sketches can only approximate, computed exactly
-    with the day-explosion trick: distinct COUNT is not decomposable
-    over sliding windows, so instead each (user, active day) row
-    claims the 7 window-ending days it contributes to (a 7× explode of
-    the user-day table — DIMENSION-scale after the first distinct, not
-    event-scale), dedupes per (user, window day), and one count per
-    day finishes it. Window days are restricted to observed activity
-    days (semi-join) so the output matches the calendar the data
-    actually covers. At 100 TB this is the standard exact-WAU shape:
-    the raw event table is touched once, everything after is
-    user×day."""
-    ev = t(spark, sf_dir, "events")
-    ud = ev.select(
-        "user_id",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000").alias(
-            "day"
-        ),
-    ).distinct()
-    expanded = (
-        ud.select(
-            "user_id",
-            F.explode(
-                F.expr("transform(sequence(0, 6), o -> day + o)")
-            ).alias("win_day"),
-        )
-        .distinct()
-    )
-    days = ud.select(F.col("day").alias("win_day")).distinct()
-    return (
-        expanded.join(days, "win_day", "leftsemi")
-        .groupBy(F.col("win_day").alias("day_epoch"))
-        .agg(F.count(F.lit(1)).cast("long").alias("active_users_7d"))
-    )
-
-
-@query(
     "session_path_trigrams",
     oracle="""
     WITH flagged AS (

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import query, t
+from .registry_ext import _BIGRAM_LM_ORACLE, doc_bigram_lm_score
+from .registry_r7 import _LPA_EDGES_CTE, _LPA_LABELS_CTE, lpa_trade_graph_labels
 
 # (n_hashes, bands, rows_per_band) factorization grid the planner
 # scores: the engine's production signature width (8, used by every
@@ -365,10 +367,39 @@ def events_watermark_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "graph_modularity_score",
-    oracle=None,  # composed below after registry_r7 import
-)
+_MODULARITY_ORACLE = f"""
+    WITH {_LPA_EDGES_CTE},
+    {_LPA_LABELS_CTE},
+    m AS (SELECT COUNT(*) AS m FROM e0),
+    within AS (
+      SELECT la.label AS community, COUNT(*) AS l_c
+      FROM e0
+      JOIN lab2 la ON la.node = e0.src
+      JOIN lab2 lb ON lb.node = e0.dst
+      WHERE la.label = lb.label
+      GROUP BY la.label
+    ),
+    deg AS (SELECT src AS node, COUNT(*) AS d FROM e GROUP BY src),
+    dmass AS (
+      SELECT l.label AS community, SUM(d.d) AS d_c, COUNT(*) AS n_members
+      FROM lab2 l JOIN deg d ON d.node = l.node
+      GROUP BY l.label
+    )
+    SELECT CAST(dm.community AS BIGINT) AS community,
+           CAST(dm.n_members AS BIGINT) AS n_members,
+           CAST(COALESCE(w.l_c, 0) AS BIGINT) AS internal_edges,
+           CAST(dm.d_c AS BIGINT) AS degree_mass,
+           round(CAST(COALESCE(w.l_c, 0) AS DOUBLE) / CAST(m.m AS DOUBLE)
+                 - (CAST(dm.d_c AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE)))
+                   * (CAST(dm.d_c AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE))),
+                 6) + 0.0 AS contribution
+    FROM dmass dm
+    LEFT JOIN within w ON w.community = dm.community
+    CROSS JOIN m
+"""
+
+
+@query("graph_modularity_score", oracle=_MODULARITY_ORACLE)
 def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MODULARITY of the LPA communities (Newman-Girvan Q) — the
     quality metric that closes the community loop the way
@@ -387,8 +418,6 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge table (equi-joins on node id), one degree aggregate, one
     per-community rollup — all node/edge-dimension shuffles; m is a
     1-row scalar broadcast."""
-    from .registry_r7 import lpa_trade_graph_labels
-
     e0, e, lab = lpa_trade_graph_labels(spark, sf_dir)
     lab = lab.localCheckpoint(eager=False)  # attached to edges twice
     m = e0.agg(F.count(F.lit(1)).alias("m"))
@@ -438,41 +467,6 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("contribution"),
         )
     )
-
-
-from .registry import ORACLE as _ORACLE  # noqa: E402
-from .registry_r7 import _LPA_EDGES_CTE, _LPA_LABELS_CTE  # noqa: E402
-
-_ORACLE["graph_modularity_score"] = f"""
-    WITH {_LPA_EDGES_CTE},
-    {_LPA_LABELS_CTE},
-    m AS (SELECT COUNT(*) AS m FROM e0),
-    within AS (
-      SELECT la.label AS community, COUNT(*) AS l_c
-      FROM e0
-      JOIN lab2 la ON la.node = e0.src
-      JOIN lab2 lb ON lb.node = e0.dst
-      WHERE la.label = lb.label
-      GROUP BY la.label
-    ),
-    deg AS (SELECT src AS node, COUNT(*) AS d FROM e GROUP BY src),
-    dmass AS (
-      SELECT l.label AS community, SUM(d.d) AS d_c, COUNT(*) AS n_members
-      FROM lab2 l JOIN deg d ON d.node = l.node
-      GROUP BY l.label
-    )
-    SELECT CAST(dm.community AS BIGINT) AS community,
-           CAST(dm.n_members AS BIGINT) AS n_members,
-           CAST(COALESCE(w.l_c, 0) AS BIGINT) AS internal_edges,
-           CAST(dm.d_c AS BIGINT) AS degree_mass,
-           round(CAST(COALESCE(w.l_c, 0) AS DOUBLE) / CAST(m.m AS DOUBLE)
-                 - (CAST(dm.d_c AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE)))
-                   * (CAST(dm.d_c AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE))),
-                 6) + 0.0 AS contribution
-    FROM dmass dm
-    LEFT JOIN within w ON w.community = dm.community
-    CROSS JOIN m
-"""
 
 
 _WM_FLOORS = (0.0, 0.01, 0.05, 0.1, 0.25)  # candidate loss floors
@@ -720,10 +714,25 @@ def doc_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "doc_ccnet_perplexity_bucket",
-    oracle=None,  # composed below from the doc_bigram_lm_score oracle
-)
+_CCNET_BUCKET_ORACLE = f"""
+    WITH scores AS ({_BIGRAM_LM_ORACLE}),
+    ranked AS (
+      SELECT doc_id, avg_logp,
+             ROW_NUMBER() OVER (ORDER BY avg_logp DESC, doc_id ASC) AS r,
+             COUNT(*) OVER () AS n
+      FROM scores
+    )
+    SELECT CAST(1 + ((r - 1) * 3) // n AS BIGINT) AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           round(AVG(avg_logp), 6) AS mean_logp,
+           round(MAX(avg_logp), 6) AS best_logp,
+           round(MIN(avg_logp), 6) AS worst_logp
+    FROM ranked
+    GROUP BY 1
+"""
+
+
+@query("doc_ccnet_perplexity_bucket", oracle=_CCNET_BUCKET_ORACLE)
 def doc_ccnet_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-STYLE PERPLEXITY BUCKETING (Wenzek et al., LREC 2020):
     rank every document by its corpus-trained bigram-LM mean log-prob
@@ -744,7 +753,6 @@ def doc_ccnet_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-scale aggregation; ranking is the two-pass range-partition
     scheme; the report is one groupBy over three keys."""
     from ..operators import ranking as R
-    from .registry_ext import doc_bigram_lm_score
 
     scores = doc_bigram_lm_score(spark, sf_dir)
     ranked_df, n = R.ranked(
@@ -767,27 +775,6 @@ def doc_ccnet_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("avg_logp"), 6).alias("worst_logp"),
         )
     )
-
-
-from .registry import ORACLE as _ORACLE2  # noqa: E402
-from . import registry_ext as _rext  # noqa: E402,F401 — registers the LM oracle
-
-_ORACLE2["doc_ccnet_perplexity_bucket"] = f"""
-    WITH scores AS ({_ORACLE2["doc_bigram_lm_score"]}),
-    ranked AS (
-      SELECT doc_id, avg_logp,
-             ROW_NUMBER() OVER (ORDER BY avg_logp DESC, doc_id ASC) AS r,
-             COUNT(*) OVER () AS n
-      FROM scores
-    )
-    SELECT CAST(1 + ((r - 1) * 3) // n AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           round(AVG(avg_logp), 6) AS mean_logp,
-           round(MAX(avg_logp), 6) AS best_logp,
-           round(MIN(avg_logp), 6) AS worst_logp
-    FROM ranked
-    GROUP BY 1
-"""
 
 
 _EPOCH_RMAX = 4  # Muennighoff et al. 2023: returns decay fast past ~4 epochs

@@ -42,7 +42,10 @@ def build_session(
     """Create (or get) the engine's SparkSession.
 
     Parameters are overridable for tests; environment variables
-    ``SPARK_GRAFT_CPUS`` control local parallelism.
+    ``SPARK_GRAFT_CPUS`` control local parallelism. ``extra_conf`` sets
+    any other Spark conf, e.g. RocksDB as
+    ``spark.sql.streaming.stateStore.providerClass`` for stream state
+    larger than the heap.
     """
     cpus = DEFAULT_CPUS
     # SPARK_GRAFT_MASTER lets the bench/selfcheck harnesses swap the
@@ -96,10 +99,7 @@ def build_session(
         # a silent no-op — on such a deployment this mitigation is
         # inert and the leak returns; either drop that JVM flag for the
         # driver or use -XX:+ExplicitGCInvokesConcurrent instead.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "1min")
         # driver testdata ships TIMESTAMP(NANOS) parquet columns (events.ts);
         # Spark has no nanos type — read as epoch-nanos long, normalized in
         # sources.readers.read_parquet_table.
@@ -123,21 +123,6 @@ def build_session(
         "spark.executorEnv.PYTHONPATH",
         repo_root + (os.pathsep + existing if existing else ""),
     )
-    # r13 (streaming tier, guide §5): the stateful-streaming state
-    # store is heap-backed by default — fastest where state fits (the
-    # measured local trade: p50 batch 1.31 s vs 3.16 s at 100k rows/s
-    # sessionization), but 1M session rows cost ~770 MB of executor
-    # HEAP. SPARK_GRAFT_STATE_STORE=rocksdb moves state to native
-    # memory + local SST files (~270 MB for the same rows, measured —
-    # BENCH_streaming_r13.json), the right arm when state exceeds
-    # heap at production rates. Env-parameterized, local default
-    # unchanged.
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider",
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

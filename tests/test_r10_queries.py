@@ -219,14 +219,14 @@ class TestRetrievalRankWindowsLimitBounded:
 
 
 def test_import_indent():
-    """__main__'s registry import tuple is consistently indented
-    (r9 ADVICE #5) — every member line of the parenthesized import
-    uses the same indent."""
-    import employee_analytics_etl_spark.__main__ as m
+    """The registry module list in ``plans.load_all`` is consistently
+    indented (r9 ADVICE #5) — every member line of the parenthesized
+    import uses the same indent."""
+    import employee_analytics_etl_spark.plans as m
 
     src = open(m.__file__).read()
     block = re.search(
-        r"from \.plans import \(([^)]*)\)", src, re.S
+        r"from \. import \(([^)]*)\)", src, re.S
     ).group(1)
     indents = {
         len(line) - len(line.lstrip())

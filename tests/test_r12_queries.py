@@ -381,18 +381,6 @@ class TestTriangleJoinNeverBroadcastsExplodedSide:
             plan2 = df2._jdf.queryExecution().executedPlan().toString()
             assert broadcast_over_generate(plan2) == []
 
-    def test_opt_in_broadcast_path_still_broadcasts(self, spark):
-        from employee_analytics_etl_spark.operators import graph as G
-
-        df = G.triangle_stats(
-            self._edges(spark), assume_distinct=True, broadcast_adj=True
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        na_joins = [
-            l for l in plan.splitlines() if "Join" in l and "na#" in l
-        ]
-        assert na_joins and all("BroadcastHashJoin" in l for l in na_joins)
-
     def test_counts_unchanged_by_the_hint(self, spark):
         from employee_analytics_etl_spark.operators import graph as G
 

@@ -555,27 +555,9 @@ EXCLUDE_FROM_FULL_RUN = frozenset(
 
 
 def main() -> None:
-    # This tool only CONSTRUCTS plans (explain), never runs them —
-    # plan-only mode keeps data-observing size gates (e.g. the triangle
-    # broadcast-adjacency gate) from launching eager Spark jobs at
-    # DataFrame-construction time (r7 ADVICE #1).
-    os.environ["SPARK_GRAFT_PLAN_ONLY"] = "1"
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from bench import HEADLINE
-    from employee_analytics_etl_spark.plans import (  # noqa: F401 — imports register queries
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
+    from employee_analytics_etl_spark.plans import load_all
     from employee_analytics_etl_spark.session import build_session
 
     # Non-headline queries still audited by default (headline set stays
@@ -624,7 +606,8 @@ def main() -> None:
     # default: audit EVERY registry query — headline+extra carry the
     # targeted pushdown/broadcast/budget assertions, the rest get the
     # universal checks (no cross products, codegen present).
-    all_names = [n for n in registry.QUERIES if n not in exclude]
+    queries, _ = load_all()
+    all_names = [n for n in queries if n not in exclude]
     ordered = HEADLINE + extra
     ordered += [n for n in sorted(all_names) if n not in set(ordered)]
     ordered = [n for n in ordered if n not in exclude]
@@ -640,7 +623,7 @@ def main() -> None:
     fmt, cg = explain_mode("formatted"), explain_mode("codegen")
     failed = 0
     for name in names:
-        df = registry.QUERIES[name](spark, sf_dir)
+        df = queries[name](spark, sf_dir)
         qe = df._jdf.queryExecution()
         problems = audit(
             name,

@@ -20,20 +20,9 @@ OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 
 
 def render() -> str:
-    from employee_analytics_etl_spark.plans import (  # noqa: F401 — imports register queries
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
+    from employee_analytics_etl_spark.plans import load_all
+
+    queries, oracle = load_all()
 
     lines = [
         "# QUERY_INDEX — registry query → operator → code",
@@ -44,15 +33,15 @@ def render() -> str:
         "it exercises (the first line of its docstring). The forward map",
         "(SURVEY §2 op → query) lives in COVERAGE.md.",
         "",
-        f"Queries: {len(registry.QUERIES)} — "
-        f"with value-hash oracle: {len(registry.ORACLE)} — "
-        f"rows-only: {len(registry.QUERIES) - len(registry.ORACLE)}",
+        f"Queries: {len(queries)} — "
+        f"with value-hash oracle: {len(oracle)} — "
+        f"rows-only: {len(queries) - len(oracle)}",
         "",
         "| Query | Oracle | Defined at | Operator exercised |",
         "|---|---|---|---|",
     ]
-    for name in sorted(registry.QUERIES):
-        fn = registry.QUERIES[name]
+    for name in sorted(queries):
+        fn = queries[name]
         code = fn.__code__
         rel = os.path.relpath(code.co_filename, os.path.dirname(OUT))
         doc = (fn.__doc__ or "").strip().splitlines()
@@ -60,8 +49,8 @@ def render() -> str:
         # keep the cell one-line and short
         if len(first) > 110:
             first = first[:107] + "..."
-        oracle = "hash" if name in registry.ORACLE else "rows-only"
-        lines.append(f"| `{name}` | {oracle} | `{rel}:{code.co_firstlineno}` | {first} |")
+        gate = "hash" if name in oracle else "rows-only"
+        lines.append(f"| `{name}` | {gate} | `{rel}:{code.co_firstlineno}` | {first} |")
     lines.append("")
     return "\n".join(lines)
 

@@ -42,20 +42,7 @@ def main() -> int:
 
     import duckdb
 
-    from employee_analytics_etl_spark.plans import (  # noqa: F401
-        registry,
-        registry_ext,
-        registry_funcs,
-        registry_more,
-        registry_r5,
-        registry_r6,
-        registry_r7,
-        registry_r8,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-    )
+    from employee_analytics_etl_spark.plans import load_all
     from employee_analytics_etl_spark.session import build_session
 
     # SPARK_GRAFT_SELFCHECK_PARTS sweeps shuffle parallelism — results
@@ -75,6 +62,7 @@ def main() -> int:
         if "=" in kv:
             k, _, v = kv.partition("=")
             extra[k.strip()] = v.strip()
+    queries, oracle = load_all()
     spark = build_session(
         shuffle_partitions=int(
             _os.environ.get("SPARK_GRAFT_SELFCHECK_PARTS", "8")
@@ -93,23 +81,23 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
         )
 
-    names = [n for n in registry.QUERIES if not only or n in only]
+    names = [n for n in queries if not only or n in only]
     failures = []
     for name in names:
         t0 = time.time()
         try:
-            sdf = registry.QUERIES[name](spark, sf_dir)
+            sdf = queries[name](spark, sf_dir)
             scols = sdf.columns
             srows = sdf.collect()
         except Exception as e:
             print(f"SPARK-ERROR {name}: {str(e).splitlines()[0][:200]}")
             failures.append(name)
             continue
-        if name not in registry.ORACLE:
+        if name not in oracle:
             print(f"ROWS-ONLY  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
             continue
         try:
-            res = con.execute(registry.ORACLE[name])
+            res = con.execute(oracle[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
         except Exception as e:
