@@ -14,6 +14,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
+
 
 def top_dept_by_avg_salary(dept_summary: DataFrame) -> DataFrame:
     """T1 (reference scripts/reporting.py:85-87)."""
@@ -52,9 +54,21 @@ def generate_summary_report(
 ) -> str:
     """Assemble the text report (reference scripts/reporting.py:5-123).
 
-    One ``collect`` per insight — five tiny driver-side actions on
-    already-aggregated summaries.
+    Five tiny ``collect``s on already-aggregated summaries, run
+    concurrently.
     """
+    ds, ep = outputs["summary_dept_metrics"], outputs["summary_emp_performance"]
+    top_salary, top5, top_active, top_tenure, avg_dur = run_concurrently(
+        ds.sparkSession,
+        [
+            top_dept_by_avg_salary(ds).collect,
+            top_employees_by_rating(ep).collect,
+            top_dept_by_active_projects(ds).collect,
+            top_employee_by_tenure(ep).collect,
+            lambda: avg_project_duration(projects_clean),
+        ],
+    )
+
     lines: list[str] = []
     add = lines.append
     add("=" * 64)
@@ -76,25 +90,21 @@ def generate_summary_report(
         add(f"  ! {issue}")
 
     add("\n-- BUSINESS INSIGHTS --")
-    ds, ep = outputs["summary_dept_metrics"], outputs["summary_emp_performance"]
+    if top_salary:
+        r = top_salary[0]
+        add(f"A. Highest avg salary: {r['name']} (${r['avg_salary']:,.2f})")
 
-    r = top_dept_by_avg_salary(ds).collect()
-    if r:
-        add(f"A. Highest avg salary: {r[0]['name']} (${r[0]['avg_salary']:,.2f})")
-
-    top5 = top_employees_by_rating(ep).collect()
     names = ", ".join(x["name"] for x in top5 if x["avg_rating"] is not None)
     add(f"B. Top performers by avg rating: {names}")
 
-    r = top_dept_by_active_projects(ds).collect()
-    if r:
-        add(f"C. Most active projects: {r[0]['name']} ({r[0]['active_projects']})")
+    if top_active:
+        r = top_active[0]
+        add(f"C. Most active projects: {r['name']} ({r['active_projects']})")
 
-    r = top_employee_by_tenure(ep).collect()
-    if r:
-        add(f"D. Longest tenure: {r[0]['name']} ({r[0]['tenure_years']} years)")
+    if top_tenure:
+        r = top_tenure[0]
+        add(f"D. Longest tenure: {r['name']} ({r['tenure_years']} years)")
 
-    avg_dur = avg_project_duration(projects_clean)
     add(f"E. Avg project duration: {avg_dur} days")
 
     add("\n" + "=" * 64)

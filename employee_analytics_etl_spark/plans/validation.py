@@ -11,6 +11,9 @@ checks for a table are fused into ONE aggregate pass:
 (SURVEY.md §4.3 item 3). Referential-integrity checks (V4) are hash
 anti-joins — replacing the reference's O(n·m) Python list scan
 (reference scripts/validation.py:41) with a distributed hash join.
+Each validator makes one action: the fused aggregate, the PK-duplicate
+count (V2) and the RI counts are one-row frames, cross-joined and
+collected together.
 
 At scale: the fused pass is one shuffle-free map + tiny reduce;
 anti-joins broadcast the parent key set when small.
@@ -18,6 +21,7 @@ anti-joins broadcast the parent key set when small.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -92,37 +96,79 @@ def positive_or_null(col: str) -> Check:
     return Check(f"positive_{col}", c.isNotNull() & (c <= 0))
 
 
-def run_checks(df: DataFrame, table: str, checks: list[Check]) -> TableReport:
-    """Fused single-pass evaluation of row-level checks (V9 fusion)."""
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
-        F.sum(F.when(c.violation, 1).otherwise(0)).cast("long").alias(c.name)
-        for c in checks
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
+def _check_frame(df: DataFrame, checks: list[Check]) -> DataFrame:
+    """One row: ``__total`` plus one violation count per check (V9 fusion)."""
+    return df.agg(
+        F.count(F.lit(1)).alias("__total"),
+        *[
+            F.sum(F.when(c.violation, 1).otherwise(0)).cast("long").alias(c.name)
+            for c in checks
+        ],
+    )
+
+
+def _pk_dup_frame(df: DataFrame, pk: str) -> DataFrame:
+    """V2, one row ``n``: count of duplicated PK values (groupBy + having
+    count>1)."""
+    return (
+        df.groupBy(pk).count().filter(F.col("count") > 1)
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _ri_frame(
+    child: DataFrame, fk: str, parent: DataFrame, pk: str, sentinel: int = -1
+) -> DataFrame:
+    """V4, one row ``n``: distinct child FKs (excluding the −1 sentinel)
+    not present in the parent PK set — a hash LEFT ANTI join (reference
+    scripts/validation.py:28-45 does this with a quadratic list scan)."""
+    child_keys = child.filter(F.col(fk) != sentinel).select(fk).distinct()
+    parent_keys = parent.select(F.col(pk).alias(fk))
+    return (
+        child_keys.join(F.broadcast(parent_keys), fk, "left_anti")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _validate(
+    df: DataFrame,
+    table: str,
+    checks: list[Check],
+    extra: Sequence[tuple[str, DataFrame, bool]] = (),
+) -> TableReport:
+    """Evaluate a table's row checks and its ``(name, one-row count frame,
+    critical)`` extras in ONE action: every frame has exactly one row,
+    so their cross join is one row holding every count."""
+    row_frame = _check_frame(df, checks)
+    for name, frame, _ in extra:
+        row_frame = row_frame.crossJoin(frame.withColumnRenamed("n", name))
+    row = row_frame.collect()[0].asDict()
     rep = TableReport(table=table, total_rows=row.pop("__total"))
-    for c in checks:
-        rep.results[c.name] = int(row[c.name] or 0)
-        if c.critical and rep.results[c.name] > 0:
-            rep.critical.add(c.name)
+    for name, critical in [(c.name, c.critical) for c in checks] + [
+        (name, critical) for name, _, critical in extra
+    ]:
+        rep.results[name] = int(row[name] or 0)
+        if critical and rep.results[name] > 0:
+            rep.critical.add(name)
     return rep
 
 
+def run_checks(df: DataFrame, table: str, checks: list[Check]) -> TableReport:
+    """Fused single-pass evaluation of row-level checks (V9 fusion)."""
+    return _validate(df, table, checks)
+
+
 def pk_unique_violations(df: DataFrame, pk: str) -> int:
-    """V2: count of duplicated PK values (groupBy + having count>1)."""
-    return (
-        df.groupBy(pk).count().filter(F.col("count") > 1).count()
-    )
+    """V2: count of duplicated PK values."""
+    return _pk_dup_frame(df, pk).collect()[0]["n"]
 
 
 def ri_violations(
     child: DataFrame, fk: str, parent: DataFrame, pk: str, sentinel: int = -1
 ) -> int:
-    """V4: distinct child FKs (excluding the −1 sentinel) not present in
-    the parent PK set — a hash LEFT ANTI join (reference
-    scripts/validation.py:28-45 does this with a quadratic list scan)."""
-    child_keys = child.filter(F.col(fk) != sentinel).select(fk).distinct()
-    parent_keys = parent.select(F.col(pk).alias(fk))
-    return child_keys.join(F.broadcast(parent_keys), fk, "left_anti").count()
+    """V4: distinct child FKs (excluding the sentinel) missing from the
+    parent PK set."""
+    return _ri_frame(child, fk, parent, pk, sentinel).collect()[0]["n"]
 
 
 # --- the reference's four table validators (V9 orchestration) ---------------
@@ -144,12 +190,9 @@ def validate_employees(df: DataFrame) -> TableReport:
             F.col("salary") <= 0,
         ),
     ]
-    rep = run_checks(df, "employees", checks)
-    dup = pk_unique_violations(df, "employee_id")
-    rep.results["pk_unique_employee_id"] = dup
-    if dup:
-        rep.critical.add("pk_unique_employee_id")
-    return rep
+    return _validate(df, "employees", checks, [
+        ("pk_unique_employee_id", _pk_dup_frame(df, "employee_id"), True),
+    ])
 
 
 def validate_reviews(df: DataFrame, employees: DataFrame | None = None) -> TableReport:
@@ -160,13 +203,12 @@ def validate_reviews(df: DataFrame, employees: DataFrame | None = None) -> Table
         required_complete("review_date"),
         in_range("rating", 1.0, 5.0),
     ]
-    rep = run_checks(df, "performance_reviews", checks)
-    rep.results["pk_unique_review_id"] = pk_unique_violations(df, "review_id")
+    extra = [("pk_unique_review_id", _pk_dup_frame(df, "review_id"), False)]
     if employees is not None:
-        rep.results["ri_employee_id"] = ri_violations(
-            df, "employee_id", employees, "employee_id"
-        )
-    return rep
+        extra.append((
+            "ri_employee_id", _ri_frame(df, "employee_id", employees, "employee_id"), False,
+        ))
+    return _validate(df, "performance_reviews", checks, extra)
 
 
 def validate_projects(df: DataFrame) -> TableReport:
@@ -177,9 +219,9 @@ def validate_projects(df: DataFrame) -> TableReport:
         required_complete("start_date"),
         positive_or_null("budget"),
     ]
-    rep = run_checks(df, "projects", checks)
-    rep.results["pk_unique_project_id"] = pk_unique_violations(df, "project_id")
-    return rep
+    return _validate(df, "projects", checks, [
+        ("pk_unique_project_id", _pk_dup_frame(df, "project_id"), False),
+    ])
 
 
 def validate_assignments(
@@ -192,16 +234,16 @@ def validate_assignments(
         pk_complete("assignment_id"),
         in_range("allocation_percentage", 0.0, 100.0),
     ]
-    rep = run_checks(df, "project_assignments", checks)
+    extra = []
     if employees is not None:
-        rep.results["ri_employee_id"] = ri_violations(
-            df, "employee_id", employees, "employee_id"
-        )
+        extra.append((
+            "ri_employee_id", _ri_frame(df, "employee_id", employees, "employee_id"), False,
+        ))
     if projects is not None:
-        rep.results["ri_project_id"] = ri_violations(
-            df, "project_id", projects, "project_id"
-        )
-    return rep
+        extra.append((
+            "ri_project_id", _ri_frame(df, "project_id", projects, "project_id"), False,
+        ))
+    return _validate(df, "project_assignments", checks, extra)
 
 
 def dq_stats(reports: list[TableReport]) -> dict:

@@ -22,8 +22,14 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 # Default local parallelism: the actual host core count (capped at 32 —
 # beyond that a single local JVM is scheduler-bound), env-overridable.
@@ -128,3 +134,23 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, thunks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run each thunk on its own driver thread; return the results in order.
+
+    Spark plans every action on its own and its scheduler takes jobs from
+    several driver threads at once, so independent actions overlap in
+    both planning and execution. Each thunk inherits the caller's local
+    properties (job group, description) and job tags. Every thunk runs to
+    its end before this returns; if any raised, the first one's exception
+    (in thunk order) is re-raised.
+    """
+    if not thunks:
+        return []
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        # one inheritable_thread_target call per thunk: each clones the
+        # caller's properties, so a thread that sets its own job group
+        # does not change another's
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]

@@ -2,13 +2,17 @@
 outputs + validation + report (SURVEY.md §3 lifecycle)."""
 
 import os
+import threading
+import time
 
 import pytest
 
 from employee_analytics_etl_spark.config import PipelineConfig
 from employee_analytics_etl_spark.plans.pipeline import run_pipeline
+from employee_analytics_etl_spark.session import run_concurrently
 from employee_analytics_etl_spark.sources.readers import MissingInputError, check_manifest
 from employee_analytics_etl_spark.sources.schemas import HR_TABLE_ORDER
+from perfbench import hrgen
 
 
 @pytest.fixture(scope="module")
@@ -97,6 +101,131 @@ class TestPipeline:
                ORDER BY avg_salary DESC, department_id LIMIT 1"""
         ).collect()
         assert len(top) == 1 and top[0]["avg_salary"] > 0
+
+
+def _clear_job_group(sc) -> None:
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
+class TestRunConcurrently:
+    def test_thunks_overlap_and_results_keep_order(self, spark):
+        # run one after another, the barrier would time out
+        barrier = threading.Barrier(3, timeout=30)
+
+        def thunk(i):
+            return lambda: (barrier.wait(), i)[1]
+
+        assert run_concurrently(spark, [thunk(i) for i in range(3)]) == [0, 1, 2]
+
+    def test_waits_for_every_thunk_then_raises_the_first_in_order(self, spark):
+        finished = threading.Event()
+
+        def fails_first():
+            raise ValueError("first")
+
+        def fails_later():
+            time.sleep(0.3)
+            finished.set()
+            raise KeyError("second")
+
+        with pytest.raises(ValueError, match="first"):
+            run_concurrently(spark, [fails_first, fails_later])
+        assert finished.is_set()
+
+    def test_threads_inherit_the_callers_job_group_each_on_its_own(self, spark):
+        sc = spark.sparkContext
+        barrier = threading.Barrier(2, timeout=30)
+
+        def sets_its_own():
+            sc.setJobGroup("own", "set inside one thunk")
+            barrier.wait()
+            return sc.getLocalProperty("spark.jobGroup.id")
+
+        def reads():
+            barrier.wait()
+            return sc.getLocalProperty("spark.jobGroup.id")
+
+        sc.setJobGroup("caller", "run_concurrently caller")
+        try:
+            got = run_concurrently(spark, [sets_its_own, reads])
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        finally:
+            _clear_job_group(sc)
+        assert got == ["own", "caller"]
+
+
+@pytest.fixture(scope="module")
+def generated(tmp_path_factory):
+    """Seeded HR CSVs with every FIXTURES.md edge row (the benchmark's
+    generator) and their pandas goldens, for seeds 1 and 2."""
+    base = tmp_path_factory.mktemp("hrgen")
+    out = {}
+    for seed in (1, 2):
+        raw = str(base / f"raw_{seed}")
+        out[seed] = (raw, hrgen.write_hr_csvs(raw, seed, 300), hrgen.golden(raw))
+    return out
+
+
+def _run_generated(spark, raw: str, out: str) -> dict:
+    conf = PipelineConfig(
+        raw_dir=raw, processed_dir=out,
+        report_path=os.path.join(out, "report.txt"), as_of=hrgen.AS_OF.date(),
+    )
+    return run_pipeline(spark, conf)
+
+
+class TestGeneratedPipeline:
+    """``run_pipeline`` over generated inputs: golden parity, repeatable
+    results, job-group inheritance and cleanup when an action fails."""
+
+    @pytest.mark.parametrize("seed", [1, 2])
+    def test_golden_parity(self, spark, generated, tmp_path, seed):
+        raw, counts, want = generated[seed]
+        out = str(tmp_path / "out")
+        res = _run_generated(spark, raw, out)
+        assert hrgen.check(raw, out, res["volume_stats"], counts, want) == []
+
+    def test_two_runs_agree(self, spark, generated, tmp_path):
+        raw = generated[1][0]
+        a = _run_generated(spark, raw, str(tmp_path / "a"))
+        b = _run_generated(spark, raw, str(tmp_path / "b"))
+        for key in ("report", "dq", "volume_stats"):
+            assert a[key] == b[key], key
+        assert set(a["timings"]) == {"materialize_s", "actions_s", "total"}
+
+    def test_every_job_is_in_the_callers_job_group(self, spark, generated, tmp_path):
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def marker_job(group: str) -> int:
+            sc.setJobGroup(group, group)
+            sc.parallelize([1]).count()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            (job,) = tracker.getJobIdsForGroup(group)
+            return job
+
+        try:
+            first = marker_job("before-pipeline")
+            sc.setJobGroup("g", "one pipeline run")
+            _run_generated(spark, generated[1][0], str(tmp_path / "out"))
+            last = marker_job("after-pipeline")
+        finally:
+            _clear_job_group(sc)
+        started = set(range(first + 1, last))
+        assert started
+        assert started - set(tracker.getJobIdsForGroup("g")) == set()
+
+    def test_failed_write_raises_and_releases_the_caches(self, spark, generated, tmp_path):
+        from py4j.protocol import Py4JJavaError
+
+        sc = spark.sparkContext
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        not_a_dir = tmp_path / "regular_file"
+        not_a_dir.write_text("")
+        with pytest.raises(Py4JJavaError):
+            _run_generated(spark, generated[1][0], str(not_a_dir))
+        assert set(sc._jsc.getPersistentRDDs().keys()) == before
 
 
 class TestJsonSource:

@@ -61,3 +61,21 @@ class TestChecks:
         assert stats["total_checks"] == len(reports[0].results) + len(reports[1].results)
         assert stats["passed"] + stats["failed"] == stats["total_checks"]
         assert stats["failed"] >= 2  # enum_status + active_salary + budget
+
+    def test_one_action_validator_matches_the_wrappers(self, spark, hr):
+        asn, emp, proj = hr["project_assignments"], hr["employees"], hr["projects"]
+        rep = V.validate_assignments(asn, employees=emp, projects=proj)
+        checks = V.run_checks(asn, "project_assignments", [
+            V.pk_complete("assignment_id"),
+            V.in_range("allocation_percentage", 0.0, 100.0),
+        ])
+        assert rep.total_rows == checks.total_rows == asn.count()
+        assert rep.results == {
+            **checks.results,
+            "ri_employee_id": V.ri_violations(asn, "employee_id", emp, "employee_id"),
+            "ri_project_id": V.ri_violations(asn, "project_id", proj, "project_id"),
+        }
+        emp_rep = V.validate_employees(emp)
+        assert emp_rep.results["pk_unique_employee_id"] == V.pk_unique_violations(
+            emp, "employee_id"
+        )
