@@ -16,6 +16,8 @@ right *shape* at cluster scale:
   same instant to Spark and to the DuckDB correctness oracle.
 - Arrow enabled: every Pandas-UDF extension operator (similarity,
   multimodal) rides the Arrow batch path.
+- Generated-class cache sized so that a repeated plan (a pipeline run,
+  a query pass) is compiled once, not on every run.
 """
 
 from __future__ import annotations
@@ -106,6 +108,17 @@ def build_session(
         # inert and the leak returns; either drop that JVM flag for the
         # driver or use -XX:+ExplicitGCInvokesConcurrent instead.
         .config("spark.cleaner.periodicGC.interval", "1min")
+        # Generated classes (whole-stage and expression codegen) are
+        # cached by source text in an LRU that holds 100 by default. One
+        # run_pipeline run needs ~170 distinct classes and a pass over
+        # seven registry queries ~290, so at 100 a cyclic repeat misses
+        # every time: each run recompiled ~165 classes with Janino and
+        # the JIT then compiled the fresh classes again. With the
+        # pipeline's concurrent actions that churn competed with the
+        # tasks for CPU, and its cost changed from run to run. At 1000 a
+        # repeated run compiles nothing. Measured on a 4-CPU VM: driver
+        # JVM CPU per warm pipeline run ~15 s -> ~11 s, live heap +2 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # driver testdata ships TIMESTAMP(NANOS) parquet columns (events.ts);
         # Spark has no nanos type — read as epoch-nanos long, normalized in
         # sources.readers.read_parquet_table.

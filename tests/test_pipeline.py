@@ -194,6 +194,15 @@ class TestGeneratedPipeline:
             assert a[key] == b[key], key
         assert set(a["timings"]) == {"materialize_s", "actions_s", "total"}
 
+    def test_repeated_run_reuses_the_generated_classes(self, spark, generated, tmp_path):
+        codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        raw = generated[1][0]
+        _run_generated(spark, raw, str(tmp_path / "a"))
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        _run_generated(spark, raw, str(tmp_path / "b"))
+        # a cache too small for one run's classes recompiles ~165 per run
+        assert codegen.METRIC_COMPILATION_TIME().getCount() - before < 20
+
     def test_every_job_is_in_the_callers_job_group(self, spark, generated, tmp_path):
         sc = spark.sparkContext
         tracker = sc.statusTracker()
