@@ -10,7 +10,7 @@ date from config instead (SURVEY.md §4.3 item 1, §7.3 item 1).
 from __future__ import annotations
 
 import datetime as dt
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # The reference's logged run date — pinning to it reproduces the
 # committed report numbers (FIXTURES.md §7).
@@ -28,8 +28,6 @@ class PipelineConfig:
     jdbc_url: str | None = None
     jdbc_user: str = ""
     jdbc_password: str = ""
-    single_file_csv: bool = True
-    extra: dict = field(default_factory=dict)
 
     @property
     def as_of_str(self) -> str:

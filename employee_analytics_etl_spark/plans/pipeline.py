@@ -153,10 +153,7 @@ def run_pipeline(spark: SparkSession, conf: PipelineConfig) -> dict:
             return dq, generate_summary_report(outputs, proj, volume_stats, dq, conf.as_of)
 
         writes = [
-            partial(
-                write_csv, df, os.path.join(conf.processed_dir, name),
-                single_file=conf.single_file_csv,
-            )
+            partial(write_csv, df, os.path.join(conf.processed_dir, name))
             for name, df in outputs.items()
         ] if conf.processed_dir else []
         (dq, report), *_ = run_concurrently(spark, [validate_and_report, *writes])

@@ -2661,7 +2661,7 @@ def events_value_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     first AS (
       SELECT o_custkey, MIN(mi) AS m0 FROM om GROUP BY o_custkey
     )
-    SELECT f.m0 AS cohort_month_idx,
+    SELECT CAST(f.m0 AS INT) AS cohort_month_idx,
            CAST(om.mi - f.m0 AS INT) AS month_offset,
            CAST(COUNT(DISTINCT om.o_custkey) AS BIGINT) AS n_customers
     FROM om JOIN first f USING (o_custkey)

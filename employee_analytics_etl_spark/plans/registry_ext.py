@@ -1316,9 +1316,9 @@ def user_event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, source, n_chars,
            CAST(floor((cum - n_chars) / 4096.0) AS BIGINT) AS pack_id,
-           cum - n_chars
+           CAST(cum - n_chars
              - CAST(floor((cum - n_chars) / 4096.0) AS BIGINT) * 4096
-             AS pack_offset
+             AS BIGINT) AS pack_offset
     FROM c
     """,
 )
@@ -1373,7 +1373,7 @@ def doc_pack_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT source, COUNT(*) AS n_docs, SUM(n_chars) AS total_chars
       FROM documents GROUP BY source
     )
-    SELECT source, n_docs, total_chars,
+    SELECT source, n_docs, CAST(total_chars AS BIGINT) AS total_chars,
            ROUND(CAST(total_chars AS DOUBLE)
                  / (SELECT SUM(total_chars) FROM per_src), 6) AS corpus_share,
            ROUND((1.0 / (SELECT COUNT(*) FROM per_src))

@@ -877,7 +877,7 @@ def events_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
              lo, hi
       FROM events, mm
     )
-    SELECT bucket,
+    SELECT CAST(bucket AS INT) AS bucket,
       CAST(lo + bucket * ((hi - lo) / 20) AS DOUBLE) AS bucket_lo,
       CAST(COUNT(*) AS BIGINT) AS n
     FROM b GROUP BY bucket, lo, hi
@@ -1856,7 +1856,8 @@ def events_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT decile, COUNT(*) AS n_customers, SUM(rev) AS rev
       FROM deciled GROUP BY decile
     )
-    SELECT decile, CAST(n_customers AS BIGINT) AS n_customers,
+    SELECT CAST(decile AS INT) AS decile,
+      CAST(n_customers AS BIGINT) AS n_customers,
       CAST(rev AS DOUBLE) AS revenue,
       round(CAST(SUM(rev) OVER (ORDER BY decile ASC ROWS BETWEEN UNBOUNDED
               PRECEDING AND CURRENT ROW) AS DOUBLE)

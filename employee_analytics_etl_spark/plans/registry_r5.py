@@ -1048,9 +1048,9 @@ def orders_content_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT l_orderkey AS orderkey, CAST(COUNT(*) AS INT) AS n_lines,
       MAX(t_cents) AS order_cents,
-      SUM(alloc_cents) AS allocated_cents,
-      MIN(alloc_cents) AS min_alloc_cents,
-      MAX(alloc_cents) AS max_alloc_cents
+      CAST(SUM(alloc_cents) AS BIGINT) AS allocated_cents,
+      CAST(MIN(alloc_cents) AS BIGINT) AS min_alloc_cents,
+      CAST(MAX(alloc_cents) AS BIGINT) AS max_alloc_cents
     FROM alloc GROUP BY l_orderkey
     """,
 )

@@ -1,9 +1,8 @@
 """Sinks: CSV (date-formatted), JDBC, text report.
 
 - S5 (reference scripts/load.py:67-82): CSV sink with ``%Y-%m-%d`` date
-  serialization → ``write_csv``. ``single_file=True`` gives file-per-table
-  parity with the reference; default False keeps the parallel writer
-  (one part per partition) for scale.
+  serialization → ``write_csv``, one file per table as the reference
+  writes.
 - S6/S7/S8 (reference scripts/load.py:15-61): MySQL truncate+insert,
   FK-check toggling, index DDL → ``write_jdbc`` builds the equivalent
   Spark JDBC write. The NaN→None bridge (reference scripts/load.py:32)
@@ -24,16 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    single_file: bool = False,
-) -> None:
-    """CSV sink with header + ISO date format (reference scripts/load.py:79)."""
-    out = df.coalesce(1) if single_file else df
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV sink with header + ISO date format (reference scripts/load.py:79):
+    one file per table, replacing what ``path`` held."""
     (
-        out.write.mode(mode)
+        df.coalesce(1)
+        .write.mode("overwrite")
         .option("header", True)
         .option("dateFormat", "yyyy-MM-dd")
         .csv(path)

@@ -1,20 +1,25 @@
 """Shared fixtures: one session-scoped SparkSession + synthesized HR
 fixture tables covering every edge row from FIXTURES.md (null FKs,
 inactive/zero-salary rows, duplicate reviews, out-of-range values,
-ghost departments, review-less employees)."""
+ghost departments, review-less employees), and the pipeline runs over
+them and over generated inputs that several test modules check."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 import sys
+from typing import NamedTuple
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from employee_analytics_etl_spark.config import PipelineConfig  # noqa: E402
+from employee_analytics_etl_spark.plans.pipeline import run_pipeline  # noqa: E402
 from employee_analytics_etl_spark.session import build_session  # noqa: E402
 from employee_analytics_etl_spark.sources.schemas import HR_SCHEMAS  # noqa: E402
+from perfbench import hrgen  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 AS_OF = dt.date(2025, 12, 29)
@@ -103,3 +108,66 @@ def hr(spark):
         "projects": projects,
         "project_assignments": assignments,
     }
+
+
+@pytest.fixture(scope="session")
+def hr_raw_dir(hr, tmp_path_factory):
+    """The ``hr`` tables written as the pipeline's five raw CSVs."""
+    base = tmp_path_factory.mktemp("raw")
+    for name, df in hr.items():
+        # write single CSV file named <table>.csv (pipeline contract)
+        pdf = df.toPandas()
+        # pandas serializes nullable int columns as floats ("101.0") —
+        # the exact S4 round-trip bug the reference exhibits (SURVEY
+        # §2.1); use nullable Int64 so ints stay ints like the real
+        # reference CSVs
+        for field in df.schema.fields:
+            if field.dataType.simpleString() in ("bigint", "int") and (
+                pdf[field.name].dtype.kind == "f"
+            ):
+                pdf[field.name] = pdf[field.name].astype("Int64")
+        pdf.to_csv(os.path.join(base, f"{name}.csv"), index=False)
+    return str(base)
+
+
+@pytest.fixture(scope="session")
+def hr_run(spark, hr_raw_dir, tmp_path_factory):
+    """One ``run_pipeline`` run over ``hr_raw_dir``, and its config."""
+    out = tmp_path_factory.mktemp("out")
+    conf = PipelineConfig(
+        raw_dir=hr_raw_dir,
+        processed_dir=str(out / "processed"),
+        report_path=str(out / "reports" / "etl_summary_report.txt"),
+    )
+    return run_pipeline(spark, conf), conf
+
+
+def run_generated(spark, raw: str, out: str) -> dict:
+    conf = PipelineConfig(
+        raw_dir=raw, processed_dir=out,
+        report_path=os.path.join(out, "report.txt"), as_of=hrgen.AS_OF.date(),
+    )
+    return run_pipeline(spark, conf)
+
+
+class GeneratedRun(NamedTuple):
+    raw: str  # the five generated CSVs
+    counts: dict  # rows generated per table
+    want: dict  # hrgen.golden(raw)
+    out: str  # the run's processed_dir
+    res: dict  # run_pipeline's result
+
+
+@pytest.fixture(scope="session")
+def generated_runs(spark, tmp_path_factory) -> dict[int, GeneratedRun]:
+    """Seeded HR CSVs with every FIXTURES.md edge row (the benchmark's
+    generator), their pandas goldens and one pipeline run over each,
+    for seeds 1 and 2."""
+    base = tmp_path_factory.mktemp("hrgen")
+    runs = {}
+    for seed in (1, 2):
+        raw, out = str(base / f"raw_{seed}"), str(base / f"out_{seed}")
+        counts = hrgen.write_hr_csvs(raw, seed, 300)
+        runs[seed] = GeneratedRun(raw, counts, hrgen.golden(raw), out,
+                                  run_generated(spark, raw, out))
+    return runs

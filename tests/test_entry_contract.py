@@ -1,22 +1,29 @@
 """Driver-contract tests: entry() smoke, queries()/oracle_sql()
-consistency, and a sampled oracle comparison at sf0.001 (the full
-sweep lives in tools/selfcheck.py)."""
+consistency, and a sampled oracle comparison at sf0.001 with the
+driver's checks — row count, names, dtypes and values (the full sweep
+is tools/selfcheck.py)."""
 
 import importlib.util
-import math
+import os
 
 import pytest
 
-SPEC = importlib.util.spec_from_file_location("spark_entry", "/root/repo/__spark_entry__.py")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SPEC = importlib.util.spec_from_file_location("spark_entry", os.path.join(ROOT, "__spark_entry__.py"))
 entrymod = importlib.util.module_from_spec(SPEC)
 SPEC.loader.exec_module(entrymod)
 
+from perfbench.oracle import compare  # noqa: E402
 from tests.conftest import SF_SMOKE  # noqa: E402
+from tools.selfcheck import connect  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+
+@pytest.fixture(scope="module")
+def duck():
+    con = connect(SF_SMOKE)
+    yield con
+    con.close()
+
 
 # fast representative sample across tiers for per-commit runs
 SAMPLE = [
@@ -48,38 +55,21 @@ class TestContract:
         assert set(q) == set(o)
 
     @pytest.mark.parametrize("name", SAMPLE)
-    def test_oracle_match(self, spark, name):
-        import duckdb
-
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_SMOKE}/{t}.parquet')"
-            )
+    def test_oracle_match(self, spark, duck, name):
         q = entrymod.queries()
         o = entrymod.oracle_sql()
-        sdf = q[name](spark, SF_SMOKE)
-        res = con.execute(o[name])
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-        srows = sdf.collect()
-        assert sorted(sdf.columns) == sorted(dcols)
-        assert len(srows) == len(drows)
+        got = q[name](spark, SF_SMOKE).toPandas()
+        assert compare(got, duck.execute(o[name]).df()) == []
 
-        def norm(rows, cols):
-            out = []
-            for r in rows:
-                d = dict(zip(cols, r))
-                out.append(
-                    tuple(
-                        "nan" if isinstance(d[c], float) and math.isnan(d[c]) else repr(d[c])
-                        for c in sorted(cols)
-                    )
-                )
-            return sorted(out)
-
-        assert norm([tuple(r) for r in srows], sdf.columns) == norm(drows, dcols)
+    def test_mis_cast_fails_on_dtype_alone(self, spark, duck):
+        """count_order cast int64 -> int32 keeps every value: a
+        values-only comparison passes it, the gate must not."""
+        name = "tpch_q1_pricing_summary"
+        sdf = entrymod.queries()[name](spark, SF_SMOKE)
+        got = sdf.withColumn("count_order", sdf["count_order"].cast("int")).toPandas()
+        want = duck.execute(entrymod.oracle_sql()[name]).df()
+        assert compare(got, want) == ["dtypes {'count_order': ('int32', 'int64')}"]
+        assert compare(got.astype({"count_order": "int64"}), want) == []
 
 
 class TestQueryIndex:

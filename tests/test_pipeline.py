@@ -7,42 +7,11 @@ import time
 
 import pytest
 
-from employee_analytics_etl_spark.config import PipelineConfig
-from employee_analytics_etl_spark.plans.pipeline import run_pipeline
 from employee_analytics_etl_spark.session import run_concurrently
 from employee_analytics_etl_spark.sources.readers import MissingInputError, check_manifest
 from employee_analytics_etl_spark.sources.schemas import HR_TABLE_ORDER
 from perfbench import hrgen
-
-
-@pytest.fixture(scope="module")
-def raw_dir(spark, hr, tmp_path_factory):
-    base = tmp_path_factory.mktemp("raw")
-    for name, df in hr.items():
-        # write single CSV file named <table>.csv (pipeline contract)
-        pdf = df.toPandas()
-        # pandas serializes nullable int columns as floats ("101.0") —
-        # the exact S4 round-trip bug the reference exhibits (SURVEY
-        # §2.1); use nullable Int64 so ints stay ints like the real
-        # reference CSVs
-        for field in df.schema.fields:
-            if field.dataType.simpleString() in ("bigint", "int") and (
-                pdf[field.name].dtype.kind == "f"
-            ):
-                pdf[field.name] = pdf[field.name].astype("Int64")
-        pdf.to_csv(os.path.join(base, f"{name}.csv"), index=False)
-    return str(base)
-
-
-@pytest.fixture(scope="module")
-def result(spark, raw_dir, tmp_path_factory):
-    out = tmp_path_factory.mktemp("out")
-    conf = PipelineConfig(
-        raw_dir=raw_dir,
-        processed_dir=str(out / "processed"),
-        report_path=str(out / "reports" / "etl_summary_report.txt"),
-    )
-    return run_pipeline(spark, conf), conf
+from tests.conftest import run_generated
 
 
 class TestPipeline:
@@ -50,49 +19,49 @@ class TestPipeline:
         with pytest.raises(MissingInputError):
             check_manifest(str(tmp_path), [f"{t}.csv" for t in HR_TABLE_ORDER])
 
-    def test_outputs_present(self, result):
-        res, _ = result
+    def test_outputs_present(self, hr_run):
+        res, _ = hr_run
         assert set(res["outputs"]) == {
             "dim_departments", "dim_employees", "fact_performance_reviews",
             "fact_project_assignments", "summary_dept_metrics",
             "summary_emp_performance", "summary_project_workload",
         }
 
-    def test_volume_stats(self, result):
-        res, _ = result
+    def test_volume_stats(self, hr_run):
+        res, _ = hr_run
         vs = res["volume_stats"]
         assert vs["employees"]["extracted"] == 10
         assert vs["employees"]["cleaned"] == 8  # Bob inactive, Grace zero-salary
 
-    def test_dq_ran(self, result):
-        res, _ = result
+    def test_dq_ran(self, hr_run):
+        res, _ = hr_run
         assert res["dq"]["total_checks"] > 10
         assert res["dq"]["failed"] >= 1  # fixture has known violations
 
-    def test_report_written(self, result):
-        res, conf = result
+    def test_report_written(self, hr_run):
+        res, conf = hr_run
         assert os.path.exists(conf.report_path)
         text = open(conf.report_path).read()
         assert "BUSINESS INSIGHTS" in text
         assert "Highest avg salary" in text
         assert res["report"] == text
 
-    def test_csv_sink(self, result):
-        res, conf = result
+    def test_csv_sink(self, hr_run):
+        res, conf = hr_run
         d = os.path.join(conf.processed_dir, "summary_dept_metrics")
         assert os.path.isdir(d)
         files = [f for f in os.listdir(d) if f.endswith(".csv")]
-        assert len(files) == 1  # single_file_csv=True
+        assert len(files) == 1  # one file per table, as the reference writes
 
-    def test_workload_kept(self, result):
+    def test_workload_kept(self, hr_run):
         # intentional divergence: the reference computes-then-drops the
         # workload summary (reference scripts/main.py:107-115); we keep it
-        res, _ = result
+        res, _ = hr_run
         assert res["outputs"]["summary_project_workload"].count() > 0
 
-    def test_sql_surface(self, spark, result):
+    def test_sql_surface(self, spark, hr_run):
         # every output is a temp view; insight A is a SQL one-liner
-        res, _ = result
+        res, _ = hr_run
         assert set(res["outputs"]) <= {
             t.name for t in spark.catalog.listTables()
         }
@@ -155,55 +124,32 @@ class TestRunConcurrently:
         assert got == ["own", "caller"]
 
 
-@pytest.fixture(scope="module")
-def generated(tmp_path_factory):
-    """Seeded HR CSVs with every FIXTURES.md edge row (the benchmark's
-    generator) and their pandas goldens, for seeds 1 and 2."""
-    base = tmp_path_factory.mktemp("hrgen")
-    out = {}
-    for seed in (1, 2):
-        raw = str(base / f"raw_{seed}")
-        out[seed] = (raw, hrgen.write_hr_csvs(raw, seed, 300), hrgen.golden(raw))
-    return out
-
-
-def _run_generated(spark, raw: str, out: str) -> dict:
-    conf = PipelineConfig(
-        raw_dir=raw, processed_dir=out,
-        report_path=os.path.join(out, "report.txt"), as_of=hrgen.AS_OF.date(),
-    )
-    return run_pipeline(spark, conf)
-
-
 class TestGeneratedPipeline:
     """``run_pipeline`` over generated inputs: golden parity, repeatable
     results, job-group inheritance and cleanup when an action fails."""
 
     @pytest.mark.parametrize("seed", [1, 2])
-    def test_golden_parity(self, spark, generated, tmp_path, seed):
-        raw, counts, want = generated[seed]
-        out = str(tmp_path / "out")
-        res = _run_generated(spark, raw, out)
-        assert hrgen.check(raw, out, res["volume_stats"], counts, want) == []
+    def test_golden_parity(self, generated_runs, seed):
+        run = generated_runs[seed]
+        assert hrgen.check(run.raw, run.out, run.res["volume_stats"], run.counts, run.want) == []
 
-    def test_two_runs_agree(self, spark, generated, tmp_path):
-        raw = generated[1][0]
-        a = _run_generated(spark, raw, str(tmp_path / "a"))
-        b = _run_generated(spark, raw, str(tmp_path / "b"))
+    def test_two_runs_agree(self, spark, generated_runs, tmp_path):
+        a = generated_runs[1].res
+        b = run_generated(spark, generated_runs[1].raw, str(tmp_path / "b"))
         for key in ("report", "dq", "volume_stats"):
             assert a[key] == b[key], key
         assert set(a["timings"]) == {"materialize_s", "actions_s", "total"}
 
-    def test_repeated_run_reuses_the_generated_classes(self, spark, generated, tmp_path):
+    def test_repeated_run_reuses_the_generated_classes(self, spark, generated_runs, tmp_path):
         codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-        raw = generated[1][0]
-        _run_generated(spark, raw, str(tmp_path / "a"))
+        raw = generated_runs[1].raw
+        run_generated(spark, raw, str(tmp_path / "a"))
         before = codegen.METRIC_COMPILATION_TIME().getCount()
-        _run_generated(spark, raw, str(tmp_path / "b"))
+        run_generated(spark, raw, str(tmp_path / "b"))
         # a cache too small for one run's classes recompiles ~165 per run
         assert codegen.METRIC_COMPILATION_TIME().getCount() - before < 20
 
-    def test_every_job_is_in_the_callers_job_group(self, spark, generated, tmp_path):
+    def test_every_job_is_in_the_callers_job_group(self, spark, generated_runs, tmp_path):
         sc = spark.sparkContext
         tracker = sc.statusTracker()
 
@@ -217,7 +163,7 @@ class TestGeneratedPipeline:
         try:
             first = marker_job("before-pipeline")
             sc.setJobGroup("g", "one pipeline run")
-            _run_generated(spark, generated[1][0], str(tmp_path / "out"))
+            run_generated(spark, generated_runs[1].raw, str(tmp_path / "out"))
             last = marker_job("after-pipeline")
         finally:
             _clear_job_group(sc)
@@ -225,7 +171,7 @@ class TestGeneratedPipeline:
         assert started
         assert started - set(tracker.getJobIdsForGroup("g")) == set()
 
-    def test_failed_write_raises_and_releases_the_caches(self, spark, generated, tmp_path):
+    def test_failed_write_raises_and_releases_the_caches(self, spark, generated_runs, tmp_path):
         from py4j.protocol import Py4JJavaError
 
         sc = spark.sparkContext
@@ -233,7 +179,7 @@ class TestGeneratedPipeline:
         not_a_dir = tmp_path / "regular_file"
         not_a_dir.write_text("")
         with pytest.raises(Py4JJavaError):
-            _run_generated(spark, generated[1][0], str(not_a_dir))
+            run_generated(spark, generated_runs[1].raw, str(not_a_dir))
         assert set(sc._jsc.getPersistentRDDs().keys()) == before
 
 

@@ -1,4 +1,5 @@
-"""Round-11 regression tests: the four r10 ADVICE findings.
+"""Round-11 regression tests: r10 ADVICE findings 1-3 (the fourth's
+tool, tools/ab_bench.py, is deleted).
 
 1 (low) blocked_levenshtein_pairs with max_pairs=None is plan-only at
   construction (no eager max-length aggregate — matching
@@ -11,15 +12,9 @@
   rule (transitive over-pruning possible), not "one representative per
   epsilon-neighborhood" — pinned behaviorally: the 1-2, 2-3 chain with
   cos(1,3) < t drops BOTH 2 and 3.
-4 (low) tools/ab_bench.py rejects identical labels and validates the
-  parsed bench JSON shape instead of trusting the last '{' line.
 """
 
 from __future__ import annotations
-
-import json
-import subprocess
-import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -274,54 +269,6 @@ class TestCandidateLevenshtein:
         )
         candidate_levenshtein_pairs(df, "doc_id", "text", lev_band=False)
         assert eager == []
-
-
-class TestAbBenchHardening:
-    def test_same_label_rejected(self, tmp_path):
-        p = subprocess.run(
-            [
-                sys.executable,
-                "tools/ab_bench.py",
-                "x:/tmp/a",
-                "x:/tmp/b",
-                str(tmp_path / "out.json"),
-            ],
-            capture_output=True,
-            text=True,
-        )
-        assert p.returncode != 0
-        assert "labels must differ" in p.stderr
-
-    def test_run_bench_validates_json_shape(self, tmp_path, monkeypatch):
-        """A trailing non-result '{' line (log noise) must be skipped in
-        favor of the real result dict; pure noise must raise."""
-        sys.path.insert(0, "tools")
-        try:
-            import ab_bench
-        finally:
-            sys.path.pop(0)
-
-        good = json.dumps({"value": 1.5, "queries": {"q": 1.5}, "n_queries": 1})
-
-        class FakeProc:
-            def __init__(self, stdout):
-                self.stdout = stdout
-
-        monkeypatch.setattr(
-            ab_bench.subprocess,
-            "run",
-            lambda *a, **kw: FakeProc(good + "\n{'not': json}\n{}\n"),
-        )
-        d = ab_bench.run_bench("/tmp/x", "/tmp/sf", "2")
-        assert d["value"] == 1.5 and d["queries"] == {"q": 1.5}
-
-        monkeypatch.setattr(
-            ab_bench.subprocess,
-            "run",
-            lambda *a, **kw: FakeProc("{\"no\": \"queries key\"}\n"),
-        )
-        with pytest.raises(RuntimeError, match="no valid result JSON"):
-            ab_bench.run_bench("/tmp/x", "/tmp/sf", "2")
 
 
 class TestMp3HeaderParse:

@@ -1,4 +1,5 @@
-"""Round-12 regression tests: the four r11 ADVICE findings.
+"""Round-12 regression tests: r11 ADVICE findings 1, 2 and 4 (the
+third's tool, tools/scale100_experiments.py, is deleted).
 
 1 (low) candidate_levenshtein_pairs no longer silently excludes
   sub-n-token documents: shingle_sets grew a short_whole_text arm
@@ -10,10 +11,6 @@
   mirrors the operator exactly (empty set at zero tokens) and the
   fixture carries a short-duplicate pair that exists ONLY via the
   fallback — pinned again here against the operator directly.
-3 (low) tools/scale100_experiments fails loud (RuntimeError naming
-  the probe evidence) when no sign_bits passes the pair budget, and
-  the refusal-message slicing falls back to the raw message when the
-  "sum(...); worst" markers are absent.
 4 (low) parse_mp3_frames honors the ID3v2.4 footer flag (0x10): the
   10-byte footer after the tag body is skipped instead of raising a
   misleading "lost frame sync" at the footer offset.
@@ -226,37 +223,6 @@ class TestCandidateVerifierFamily:
         candidate_damerau_pairs(df, "doc_id", "text")
         candidate_jaro_winkler_pairs(df, "doc_id", "text")
         assert eager == []
-
-
-class TestScale100Guards:
-    """r11 ADVICE #3: the sign_bits probe's failure paths."""
-
-    def test_require_passing_raises_with_probe_evidence(self):
-        from tools.scale100_experiments import _require_passing
-
-        with pytest.raises(RuntimeError, match=r"range\(5, 17\).*sum\(cells"):
-            _require_passing(None, {"5": "sum(cells exceeded)"})
-
-    def test_require_passing_passthrough(self):
-        from tools.scale100_experiments import _require_passing
-
-        assert _require_passing(10, {}) == 10
-
-    def test_probe_detail_slices_expected_format(self):
-        from tools.scale100_experiments import _probe_detail
-
-        msg = "budget refused: sum(c*(c-1)/2)=9.1e9 > 5e7; worst cell 12345"
-        assert _probe_detail(msg) == "sum(c*(c-1)/2)=9.1e9 > 5e7"
-
-    def test_probe_detail_falls_back_on_unknown_format(self):
-        from tools.scale100_experiments import _probe_detail
-
-        msg = "some totally different refusal wording"
-        assert _probe_detail(msg) == msg
-        # markers in the wrong order must also fall back, not slice
-        assert _probe_detail("; worst first then sum(") == "; worst first then sum("
-        long = "x" * 200
-        assert _probe_detail(long) == "x" * 80
 
 
 class TestMp3Id3Footer:

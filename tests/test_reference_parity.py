@@ -1,211 +1,71 @@
-"""Golden parity: run the Spark pipeline on the REFERENCE's own five
-CSVs (read-only at /root/reference/data/raw) and compare every summary
-table against goldens derived independently here in pandas, following
-the reference's transform semantics (reference scripts/transform.py)
-with as_of pinned to 2025-12-29 (SURVEY.md §5.2 item 3 — the committed
+"""Golden parity: the Spark pipeline's summary tables and cleaned
+employees against ``perfbench.hrgen.golden``, the pandas derivation of
+the reference's transform semantics (reference scripts/transform.py,
+as_of pinned to 2025-12-29 — SURVEY.md §5.2 item 3: the committed
 goldens are stale, so goldens are derived from semantics, not files).
 
-Rounded columns compare with atol=5.1e-3 (pandas rounds half-to-even,
-Spark half-up — SURVEY.md C11); everything else compares exactly.
+Each test checks three inputs: the ``hr`` fixture's CSVs (every
+FIXTURES.md edge row) and two generated inputs, reusing the pipeline
+runs of the ``hr_run`` and ``generated_runs`` fixtures.
+
+Rounded columns compare with atol=5.1e-3, or differ by exactly one unit
+in the last place at a half-up tie (pandas rounds half-to-even, Spark
+half-up — SURVEY.md C11); everything else compares exactly.
 """
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
-import pandas as pd
 import pytest
+from pandas.testing import assert_frame_equal
 
-from employee_analytics_etl_spark.config import PipelineConfig
-from employee_analytics_etl_spark.plans.pipeline import run_pipeline
+from perfbench import hrgen
 
-RAW = "/root/reference/data/raw"
-AS_OF = pd.Timestamp("2025-12-29")
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(RAW), reason="reference data not available"
-)
+ROUNDED_ATOL = 5.1e-3  # the same rounded value, up to float noise
+# Spark rounds the decimal repr half-up and pandas the binary value
+# half-to-even, so at a tie (2.225: Spark 2.23, pandas 2.22) the two
+# differ by exactly one unit in the last place, never by more.
 
 
 @pytest.fixture(scope="module")
-def outputs(spark, tmp_path_factory):
-    conf = PipelineConfig(
-        raw_dir=RAW,
-        processed_dir="",
-        report_path="",
-    )
-    return run_pipeline(spark, conf)["outputs"]
+def runs(hr_raw_dir, hr_run, generated_runs):
+    """input name -> (the run's output DataFrames, hrgen goldens)."""
+    out = {"hr_fixture": (hr_run[0]["outputs"], hrgen.golden(hr_raw_dir))}
+    for seed, run in generated_runs.items():
+        out[f"generated_seed_{seed}"] = (run.res["outputs"], run.want)
+    return out
 
 
-@pytest.fixture(scope="module")
-def golden():
-    emp = pd.read_csv(f"{RAW}/employees.csv")
-    emp = emp[emp["status"] != "inactive"]  # NaN status survives (pandas !=)
-    emp = emp[emp["salary"] != 0]
-    emp["department_id"] = emp["department_id"].fillna(-1).astype(int)
-    emp["hire_date"] = pd.to_datetime(emp["hire_date"])
-    emp["tenure_years"] = ((AS_OF - emp["hire_date"]).dt.days / 365.25).round(1)
-    emp["salary_bucket"] = emp["salary"].apply(
-        lambda s: "Low" if s < 50000 else ("Medium" if s <= 80000 else "High")
-    )
-
-    dept = pd.read_csv(f"{RAW}/departments.csv")
-    dept["department_name"] = dept["department_name"].str.title()
-    dept = dept.drop_duplicates()
-
-    rev = pd.read_csv(f"{RAW}/performance_reviews.csv")
-    rev["review_date"] = pd.to_datetime(rev["review_date"])
-    # Dedup BEFORE the rating filter (reference transform.py:38-42 order:
-    # a duplicate key whose first row is out-of-range must drop the whole
-    # key's out-of-range survivor, not fall back to a later in-range row).
-    # review_id tiebreak = the Spark pipeline's total order.
-    rev = rev.sort_values(
-        ["employee_id", "review_date", "review_id"]
-    ).drop_duplicates(subset=["employee_id", "review_date"], keep="first")
-    rev = rev[(rev["rating"] >= 1.0) & (rev["rating"] <= 5.0)]
-
-    proj = pd.read_csv(f"{RAW}/projects.csv")
-    proj["start_date"] = pd.to_datetime(proj["start_date"])
-    proj["end_date"] = pd.to_datetime(proj["end_date"])
-    proj = proj.dropna(subset=["budget"])
-    proj = proj[proj["budget"] > 0]
-    proj["project_duration_days"] = (
-        proj["end_date"].fillna(AS_OF) - proj["start_date"]
-    ).dt.days
-    proj["daily_budget_alloc"] = proj.apply(
-        lambda r: round(r["budget"] / r["project_duration_days"], 2)
-        if r["project_duration_days"] > 0
-        else 0.0,
-        axis=1,
-    )
-
-    asn = pd.read_csv(f"{RAW}/project_assignments.csv")
-    asn["start_date"] = pd.to_datetime(asn["start_date"])
-    asn["end_date"] = pd.to_datetime(asn["end_date"])
-    asn = asn[asn["allocation_percentage"] <= 100]
-    asn = asn[asn["end_date"].isna() | (asn["start_date"] <= asn["end_date"])]
-
-    return {"emp": emp, "dept": dept, "rev": rev, "proj": proj, "asn": asn}
-
-
-ROUNDED_ATOL = 5.1e-3  # half-up (Spark) vs half-to-even (pandas) ties
-
-
-def _compare(spark_df, want: pd.DataFrame, keys: list[str], rounded: list[str]):
-    got = spark_df.toPandas().sort_values(keys).reset_index(drop=True)
-    want = want.sort_values(keys).reset_index(drop=True)
-    assert list(got.columns) == list(want.columns), (got.columns, want.columns)
-    assert len(got) == len(want), (len(got), len(want))
-    for c in got.columns:
-        g, w = got[c], want[c]
-        if c in rounded:
-            ok = np.isclose(
-                g.astype(float), w.astype(float), atol=ROUNDED_ATOL, equal_nan=True
-            )
-        elif g.dtype.kind == "f" or w.dtype.kind == "f":
-            ok = np.isclose(
-                g.astype(float), w.astype(float), rtol=0, atol=1e-9, equal_nan=True
-            )
-        else:
-            ok = (g == w) | (g.isna() & w.isna())
-        assert bool(np.all(ok)), f"column {c}:\n{got[~ok]}\nvs\n{want[~ok]}"
+def _assert_summary(runs, name: str, to_timestamp=()):
+    key, rounded = hrgen.SUMMARIES[name]
+    for label, (outputs, golden) in runs.items():
+        sdf = outputs[name]
+        for c in to_timestamp:
+            sdf = sdf.withColumn(c, sdf[c].cast("timestamp"))
+        got = sdf.toPandas().sort_values(key).reset_index(drop=True)
+        want = golden[name].sort_values(key).reset_index(drop=True)
+        assert list(got.columns) == list(want.columns), label
+        exact = [c for c in got.columns if c not in rounded]
+        assert_frame_equal(got[exact], want[exact], check_dtype=False,
+                           rtol=0, atol=1e-9, obj=f"{label} {name}")
+        for c, decimals in rounded.items():
+            delta = (got[c] - want[c]).abs()
+            tie = (delta - 10.0 ** -decimals).abs() <= 1e-9
+            ok = (delta <= ROUNDED_ATOL) | tie | (got[c].isna() & want[c].isna())
+            assert ok.all(), f"{label} {name}.{c}:\n{got[~ok]}\n{want[~ok]}"
 
 
 class TestReferenceParity:
-    def test_dept_summary(self, outputs, golden):
-        emp, dept, proj = golden["emp"], golden["dept"], golden["proj"]
-        emp_stats = emp.groupby("department_id").agg(
-            total_employees=("employee_id", "count"), avg_salary=("salary", "mean")
-        )
-        emp_stats["avg_salary"] = emp_stats["avg_salary"].round(2)
-        active = proj[proj["end_date"].isna() | (proj["end_date"] > AS_OF)]
-        proj_stats = active.groupby("department_id").agg(
-            active_projects=("project_id", "count"),
-            total_project_budget=("budget", "sum"),
-        )
-        want = (
-            dept[["department_id", "department_name", "location"]]
-            .rename(columns={"department_name": "name"})
-            .merge(emp_stats, on="department_id", how="left")
-            .merge(proj_stats, on="department_id", how="left")
-        )
-        want["total_employees"] = want["total_employees"].fillna(0).astype("int64")
-        want["avg_salary"] = want["avg_salary"].fillna(0.0)
-        want["active_projects"] = want["active_projects"].fillna(0).astype("int64")
-        want["total_project_budget"] = want["total_project_budget"].fillna(0.0)
-        _compare(
-            outputs["summary_dept_metrics"],
-            want,
-            keys=["department_id"],
-            rounded=["avg_salary"],
-        )
+    def test_dept_summary(self, runs):
+        _assert_summary(runs, "summary_dept_metrics")
 
-    def test_emp_performance(self, outputs, golden):
-        emp, dept, rev = golden["emp"], golden["dept"], golden["rev"]
-        stats = rev.sort_values("review_date").groupby("employee_id").agg(
-            avg_rating=("rating", "mean"),
-            review_count=("rating", "count"),
-            latest_rating=("rating", "last"),
-            latest_review_date=("review_date", "max"),
-        )
-        stats["avg_rating"] = stats["avg_rating"].round(2)
-        want = (
-            emp.merge(
-                dept[["department_id", "department_name"]],
-                on="department_id",
-                how="left",
-            )
-            .merge(stats, on="employee_id", how="left")
-        )
-        want["department_name"] = want["department_name"].fillna("Unknown")
-        want["review_count"] = want["review_count"].fillna(0).astype("int64")
-        want = want[
-            [
-                "employee_id", "name", "department_name", "salary", "salary_bucket",
-                "tenure_years", "avg_rating", "review_count", "latest_rating",
-                "latest_review_date",
-            ]
-        ]
-        got = outputs["summary_emp_performance"]
-        got = got.withColumn(
-            "latest_review_date", got["latest_review_date"].cast("timestamp")
-        )
-        _compare(
-            got,
-            want,
-            keys=["employee_id"],
-            rounded=["tenure_years", "avg_rating"],
-        )
+    def test_emp_performance(self, runs):
+        _assert_summary(runs, "summary_emp_performance", to_timestamp=["latest_review_date"])
 
-    def test_project_workload(self, outputs, golden):
-        proj, asn = golden["proj"], golden["asn"]
-        stats = asn.groupby("project_id").agg(
-            total_team_size=("employee_id", "nunique"),
-            total_allocation=("allocation_percentage", "sum"),
-            avg_allocation=("allocation_percentage", "mean"),
-        )
-        stats["avg_allocation"] = stats["avg_allocation"].round(1)
-        want = proj[
-            [
-                "project_id", "project_name", "department_id", "budget",
-                "project_duration_days", "daily_budget_alloc",
-            ]
-        ].merge(stats, on="project_id", how="left")
-        want["total_team_size"] = want["total_team_size"].fillna(0).astype("int64")
-        want["total_allocation"] = want["total_allocation"].fillna(0.0)
-        got = outputs["summary_project_workload"]
-        cols = [f.name for f in got.schema.fields]
-        want = want[cols]
-        _compare(
-            got,
-            want,
-            keys=["project_id"],
-            rounded=["daily_budget_alloc", "avg_allocation"],
-        )
+    def test_project_workload(self, runs):
+        _assert_summary(runs, "summary_project_workload")
 
-    def test_dim_employees_cleaning(self, outputs, golden):
-        got = outputs["dim_employees"].toPandas()
-        emp = golden["emp"]
-        assert sorted(got["employee_id"]) == sorted(emp["employee_id"])
-        assert (got["salary"] != 0).all()
+    def test_dim_employees_cleaning(self, runs):
+        for label, (outputs, golden) in runs.items():
+            got = outputs["dim_employees"].toPandas()
+            assert sorted(got["employee_id"]) == sorted(golden["employees"]["employee_id"]), label
+            assert (got["salary"] != 0).all(), label
