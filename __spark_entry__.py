@@ -11,12 +11,13 @@ only adapts the engine's query registry to the driver contract.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from employee_analytics_etl_spark.plans import load_all  # noqa: E402
 

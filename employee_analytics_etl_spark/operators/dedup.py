@@ -102,7 +102,6 @@ def shingle_sets(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    checkpoint: bool = True,
     short_whole_text: bool = False,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -134,21 +133,14 @@ def shingle_sets(
     document's own token count, the same bound the verify join
     already ships.
 
-    ``checkpoint`` (default True) lazily ``localCheckpoint``\\ s the
-    result. The pin is a measured single-JVM win (truncating the
-    lineage stops InferFiltersFromGenerate re-inlining the
-    regexp+transform tree ~8x per consuming explode, 0.4 -> 3.3 s at
-    sf0.1 without it) but it is a real TRADEOFF the caller owns
-    (r9 ADVICE #1): local checkpoints are non-replicated executor
-    state, so on a multi-executor cluster any executor loss makes the
-    downstream job unrecoverable-by-recompute, and the materialized
-    per-doc shingle arrays hold roughly n x the corpus text in block
-    storage. Cluster callers that prefer fault-tolerant recompute (or
-    that feed exactly one consumer, where the re-inline multiplier
-    doesn't bite) pass ``checkpoint=False`` and get the identical
-    columns with untruncated lineage; the CASE-WHEN guard below keeps
-    even the unpinned explode plan free of the inferred size()>0
-    re-inline on the common path.
+    The result is lazily ``localCheckpoint``\\ ed. The pin is a
+    measured single-JVM win (truncating the lineage stops
+    InferFiltersFromGenerate re-inlining the regexp+transform tree ~8x
+    per consuming explode, 0.4 -> 3.3 s at sf0.1 without it), at a
+    cost: local checkpoints are non-replicated executor state, so on a
+    multi-executor cluster an executor loss makes the downstream job
+    unrecoverable-by-recompute, and the materialized per-doc shingle
+    arrays hold roughly n x the corpus text in block storage.
     """
     short_arm = (
         "WHEN size(_tk) >= 1 THEN array(concat_ws(' ', _tk)) "
@@ -194,18 +186,12 @@ def shingle_sets(
         )
         .withColumn("set_size", F.size("shingle_set").cast("long"))
     )
-    if checkpoint:
-        # Lazy pin (opt-out via checkpoint=False — tradeoff documented
-        # above): exploding a computed array column triggers
-        # InferFiltersFromGenerate, whose size(...)>0 / isnotnull
-        # filter RE-INLINES the whole regexp+transform+distinct+sort
-        # tree several times per row — measured 8x on the bare explode
-        # (0.4 -> 3.3 s at sf0.1). The checkpoint truncates the tree so
-        # every consumer (explode, sizes, verify arrays) reads stored
-        # values — the r8 "pin narrow, filter pinned" lesson, one
-        # level down.
-        out = out.localCheckpoint(eager=False)
-    return out
+    # Lazy pin: exploding a computed array column triggers
+    # InferFiltersFromGenerate, whose size(...)>0 / isnotnull filter
+    # re-inlines the whole regexp+transform+distinct+sort tree several
+    # times per row. The checkpoint truncates the tree so every consumer
+    # (explode, sizes, verify arrays) reads stored values.
+    return out.localCheckpoint(eager=False)
 
 
 def ngram_jaccard_pairs(
@@ -1793,7 +1779,6 @@ def candidate_levenshtein_pairs(
     n: int = 5,
     jaccard_floor: float = 0.3,
     max_rel_dist_pct: float = 10,
-    lev_band: bool = True,
     short_whole_text: bool = True,
 ) -> DataFrame:
     """CANDIDATE-FIRST edit-distance linkage: prefix-filter SSJoin
@@ -1834,38 +1819,27 @@ def candidate_levenshtein_pairs(
     (one df-count shuffle + prefix equi-join, sort-merge everywhere,
     no all-pairs stage); the verify stage joins texts back by id
     (sort-merge — corpus-proportional sides never broadcast, the r9
-    cluster lesson) and scores ONLY candidate pairs. With
-    ``lev_band=True`` (default) the verifier is Spark's 3-arg banded
-    early-exit levenshtein with a PER-ROW threshold (each pair's own
-    10% cap — O(len·T_pair) instead of O(len²) per pair; since r12 no
-    eager job and no construction-time snapshot: construction is
-    plan-only on EVERY path); ``lev_band=False`` keeps the 2-arg full
-    DP for A/B comparison.
+    cluster lesson) and scores ONLY candidate pairs. The verifier is
+    Spark's 3-arg banded early-exit levenshtein with a PER-ROW
+    threshold (each pair's own 10% cap — O(len·T_pair) instead of
+    O(len²) per pair; no eager job and no construction-time snapshot:
+    construction is plan-only).
     """
     cand = _candidate_text_pairs(
         docs, id_col, text_col, n, jaccard_floor, short_whole_text
     )
-    if lev_band:
-        # r12 (optimization round): Spark's 3-arg levenshtein accepts a
-        # PER-ROW threshold expression, so the band is sized by each
-        # pair's OWN cap — T = greatest(1, floor(max(len_a, len_b) ·
-        # pct / 100)) — instead of a corpus-global max-length snapshot.
-        # Exactness is unchanged (integer d <= cap ⟺ d <= floor(cap)
-        # = T → exact distance returned; d > cap ⇒ d > T → -1 →
-        # filtered), construction no longer runs ANY eager job (the
-        # max-length aggregate and its staleness caveat are gone), and
-        # each pair's DP band is ~pct% of ITS length rather than of the
-        # longest text in the corpus — strictly less DP work on every
-        # skewed-length corpus.
-        # exact pct, not int(pct) — see blocked_levenshtein_pairs
-        # (a fractional pct must not band tighter than the cap filter)
-        lev = F.expr(
-            "levenshtein(_text_a, _text_b, greatest(1, CAST("
-            f"greatest(length(_text_a), length(_text_b)) * {max_rel_dist_pct!r}"
-            " / 100 AS INT)))"
-        )
-    else:
-        lev = F.levenshtein(F.col("_text_a"), F.col("_text_b"))
+    # Spark's 3-arg levenshtein takes a PER-ROW threshold, so the band
+    # is sized by each pair's own cap — T = greatest(1, floor(max(len_a,
+    # len_b) · pct / 100)). Exact: integer d <= cap ⟺ d <= T → exact
+    # distance returned; d > T → -1 → filtered. Each pair's DP band is
+    # ~pct% of ITS length, and construction runs no job. The band uses
+    # the exact pct, not int(pct) (see blocked_levenshtein_pairs): a
+    # fractional pct must not band tighter than the cap filter.
+    lev = F.expr(
+        "levenshtein(_text_a, _text_b, greatest(1, CAST("
+        f"greatest(length(_text_a), length(_text_b)) * {max_rel_dist_pct!r}"
+        " / 100 AS INT)))"
+    )
     cap = (
         F.greatest(F.length("_text_a"), F.length("_text_b"))
         * max_rel_dist_pct

@@ -32,7 +32,6 @@ def _oriented_edge_triangles(
     edges_canonical: DataFrame,
     u_col: str = "u",
     v_col: str = "v",
-    assume_distinct: bool = False,
 ):
     """Shared core for exact triangle analytics: degree-oriented
     adjacency-set intersection (the compact-forward / GraphFrames
@@ -65,8 +64,6 @@ def _oriented_edge_triangles(
     e = edges_canonical.select(
         F.col(u_col).alias("u"), F.col(v_col).alias("v")
     )
-    if not assume_distinct:
-        e = e.distinct()
     # referenced by degrees, orientation and the edge count: truncate
     # lineage once or the upstream edge construction re-runs per
     # reference (measured 12 s -> ~3 s at sf0.01 on the co-purchase
@@ -152,10 +149,10 @@ def triangle_stats(
     edges_canonical: DataFrame,
     u_col: str = "u",
     v_col: str = "v",
-    assume_distinct: bool = False,
 ) -> DataFrame:
     """Distributed exact triangle counting over an undirected
-    canonical edge set (one row per edge, ``u < v``). Returns one
+    canonical edge set (one row per edge, ``u < v``, no duplicate
+    rows — callers deduplicate). Returns one
     row: (n_nodes, n_edges, n_triangles, n_wedges, global_clustering).
 
     Built on ``_oriented_edge_triangles`` (degree-oriented
@@ -163,9 +160,7 @@ def triangle_stats(
     argument); this consumer just sums intersection sizes. Counts are
     exact integers → engine-independent, no float tolerance needed.
     """
-    e, deg, tri_sets = _oriented_edge_triangles(
-        edges_canonical, u_col, v_col, assume_distinct
-    )
+    e, deg, tri_sets = _oriented_edge_triangles(edges_canonical, u_col, v_col)
     tri = tri_sets.agg(
         F.coalesce(F.sum(F.size("ws")), F.lit(0))
         .cast("long")
@@ -424,7 +419,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_shares: bool = False,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart): teleportation
     returns to the SEED set instead of the whole graph, so mass
@@ -432,9 +426,9 @@ def personalized_pagerank(
     nodes", the standard graph-recommendation / related-entities
     primitive (global ``pagerank`` answers importance overall).
 
-    Same per-iteration shape as ``pagerank`` — one equi-join
-    (out-degree-folded edge table, checkpointed once) + one exact
-    aggregate — but the contribution snap is TRUNCATION to integer
+    Like ``pagerank``, each iteration is one equi-join against the
+    edge table (checkpointed once) + one exact aggregate, but the
+    contribution snap is TRUNCATION to integer
     1e-15 units (floor(x·1e15)) instead of a DECIMAL cast: rounding a
     double to 15 decimals has TIES, and the two engines break them
     differently (half-up on the shortest repr vs half-even on the
@@ -447,24 +441,21 @@ def personalized_pagerank(
     the result emits every node that receives any contribution —
     mirrored exactly by the unrolled SQL oracle.
 
-    ``broadcast_shares`` (r8, judge r7 #3): with it the degree fold
-    moves OFF the edge table — per iteration, rank ⋈ deg is a
-    NODE-scale join producing share = rank/outdeg, and that share
-    table is broadcast into the edge join, so after the one edge
-    checkpoint the edges never shuffle again (the only per-iteration
-    exchange is the map-side-combined contribution aggregate, ≤|V|
-    rows per partition). Numerically IDENTICAL: share·1e15 floors the
-    same IEEE double as (rank/outdeg)·1e15. Measured on
-    graph_ppr_related_entities at sf0.1 idle: 3.08 → 2.61 s min-of-3
-    (iteration tier 1.67 → 1.2 s; the 1.41 s front-end join+distinct
-    dominates what remains). Caller-asserted gate, not auto: the share
-    table is node-dimension-scale, so pass True only when |V| is
-    bounded by construction (the trade graph: |customer|+|supplier|
-    dimension rows); web-scale graphs keep the default shuffle path.
-    Measured REJECTED alternative (same round): checkpointing the
-    canonical HALF edge set and running both contribution directions
-    from it — 3.46 s, the doubled per-iteration broadcast join costs
-    more than the halved checkpoint saves."""
+    Out-degrees are NOT folded onto the edge table: per iteration,
+    rank ⋈ deg is a NODE-scale join producing share = rank/outdeg, and that
+    share table is broadcast into the edge join, so after the one
+    edge checkpoint the edges never shuffle again (the only
+    per-iteration exchange is the map-side-combined contribution
+    aggregate, ≤|V| rows per partition). share·1e15 floors the same
+    IEEE double as (rank/outdeg)·1e15. Measured on
+    graph_ppr_related_entities at sf0.1 idle against folding outdeg
+    onto the edges: 3.08 → 2.61 s min-of-3. The broadcast share table
+    is node-dimension-scale, so ``edges`` must have a node set bounded
+    by construction (the trade graph: |customer|+|supplier| dimension
+    rows). Measured REJECTED alternative: checkpointing the canonical
+    HALF edge set and running both contribution directions from it —
+    3.46 s, the doubled per-iteration broadcast join costs more than
+    the halved checkpoint saves."""
     spark = edges.sparkSession
     n_s = len(seeds)
     if n_s == 0:
@@ -477,32 +468,15 @@ def personalized_pagerank(
     rank = spark.createDataFrame(
         [(int(s),) for s in seeds], "src long"
     ).select("src", F.lit(1.0 / n_s).alias("rank"))
-    if broadcast_shares:
-        e = e.localCheckpoint(eager=False)
-        deg = deg.localCheckpoint(eager=False)
-        for _ in range(iters):
-            share = rank.join(deg, "src").select(
-                "src", (F.col("rank") / F.col("outdeg")).alias("share")
-            )
-            contribs = e.join(F.broadcast(share), "src").select(
-                F.col("dst"),
-                F.floor(F.col("share") * F.lit(1e15))
-                .cast("decimal(38,0)")
-                .alias("c"),
-            )
-            rank = contribs.groupBy(F.col("dst").alias("src")).agg(
-                (
-                    base_of(F.col("dst"))
-                    + F.lit(damping)
-                    * (F.sum("c").cast("double") / F.lit(1e15))
-                ).alias("rank")
-            )
-        return rank.select(F.col("src").alias("node"), "rank")
-    e_deg = e.join(deg, "src").localCheckpoint(eager=False)
+    e = e.localCheckpoint(eager=False)
+    deg = deg.localCheckpoint(eager=False)
     for _ in range(iters):
-        contribs = e_deg.join(rank, "src").select(
+        share = rank.join(deg, "src").select(
+            "src", (F.col("rank") / F.col("outdeg")).alias("share")
+        )
+        contribs = e.join(F.broadcast(share), "src").select(
             F.col("dst"),
-            F.floor((F.col("rank") / F.col("outdeg")) * F.lit(1e15))
+            F.floor(F.col("share") * F.lit(1e15))
             .cast("decimal(38,0)")
             .alias("c"),
         )
@@ -521,9 +495,9 @@ def local_clustering_topk(
     k: int = 20,
     u_col: str = "u",
     v_col: str = "v",
-    assume_distinct: bool = False,
 ) -> DataFrame:
-    """Per-node local clustering coefficient, top-k: for each node
+    """Per-node local clustering coefficient, top-k, over the same
+    distinct canonical edge set as ``triangle_stats``: for each node
     with degree ≥ 2, triangles(v) / C(deg(v), 2) — how close the
     node's neighborhood is to a clique (the ego-density signal behind
     community seeds and spam/bot neighborhood detection). Returns the
@@ -536,9 +510,7 @@ def local_clustering_topk(
     u, v, and every w: one explode per corner, one groupBy. Top-k is
     TakeOrdered — no global sort. Counts are exact integers; the
     coefficient is a single IEEE division."""
-    _e, deg, tri_sets = _oriented_edge_triangles(
-        edges_canonical, u_col, v_col, assume_distinct
-    )
+    _e, deg, tri_sets = _oriented_edge_triangles(edges_canonical, u_col, v_col)
     # each closed edge row stands for size(ws) triangles: w is one
     # corner of exactly one of them, but src and dst corner EVERY one
     # — credit (w, src, dst) per element of ws, not per edge row

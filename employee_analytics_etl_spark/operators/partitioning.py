@@ -33,14 +33,6 @@ def write_bucketed(
     w.saveAsTable(table_name)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on the bucket key — shuffle-free
-    when bucket specs match."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
-
-
 def salted_groupby_sum(
     df: DataFrame,
     key: str,
@@ -210,14 +202,7 @@ def scan_file_count(df: DataFrame) -> int:
     return total if found else -1
 
 
-def explain_has_exchange(df: DataFrame) -> bool:
-    """True if the physical plan contains a shuffle Exchange — test
-    helper for asserting shuffle-free bucketed joins."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" in plan
-
-
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a narrowly-partitioned input before
     compute-heavy per-row work (shingling, hashing, vector math).
 
@@ -230,8 +215,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     100 TB case), so callers apply it unconditionally; results are
     unchanged because every downstream consumer here is
     order-independent (min/count/sum aggregates, hash joins)."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df

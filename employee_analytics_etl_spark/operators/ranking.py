@@ -79,7 +79,6 @@ def ranked(
     rn_col: str | None = "rn",
     cumsum_cols: dict[str, str] | None = None,
     cummax_cols: dict[str, str] | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Exact global ``row_number`` and/or cumulative sums under a TOTAL
     order, with no single-partition WindowExec.
@@ -101,8 +100,8 @@ def ranked(
         type; the cross-partition offset is the exclusive prefix max,
         NULL for the first partition (F.greatest skips nulls, so NULL
         is the clean identity).
-    num_partitions: range-partition count; defaults to
-        ``spark.sql.shuffle.partitions``.
+
+    The range-partition count is ``spark.sql.shuffle.partitions``.
 
     Returns ``(out_df, n_total)`` — all original columns plus the rank/
     cumsum columns, and the exact total row count (driver int, free as a
@@ -114,9 +113,7 @@ def ranked(
     spark = df.sparkSession
     cumsum_cols = cumsum_cols or {}
     cummax_cols = cummax_cols or {}
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     rp = (
         df.repartitionByRange(nparts, *order_by)
         .withColumn("_pid", F.spark_partition_id())
@@ -226,7 +223,6 @@ def multi_ranked(
     legs: dict[str, list[Column]],
     rn_col: str = "rn",
     leg_col: str = "leg",
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Exact global ``row_number`` under SEVERAL total orders in ONE
     two-pass round — the multi-rank fusion of :func:`ranked`.
@@ -324,8 +320,7 @@ def multi_ranked(
     for leg_df in leg_dfs.values():
         tagged = leg_df if tagged is None else tagged.unionByName(leg_df)
     return _multi_ranked_core(
-        tagged, df.columns, key_names, set(legs), rn_col, leg_col,
-        num_partitions,
+        tagged, df.columns, key_names, set(legs), rn_col, leg_col
     )
 
 
@@ -334,7 +329,6 @@ def multi_ranked_frames(
     keys: list[Column],
     rn_col: str = "rn",
     leg_col: str = "leg",
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """The frames variant of :func:`multi_ranked`: exact global
     ``row_number`` over SEVERAL same-schema inputs under ONE total
@@ -367,8 +361,7 @@ def multi_ranked_frames(
         )
         tagged = leg_df if tagged is None else tagged.unionByName(leg_df)
     return _multi_ranked_core(
-        tagged, cols0, key_names, set(frames), rn_col, leg_col,
-        num_partitions,
+        tagged, cols0, key_names, set(frames), rn_col, leg_col
     )
 
 
@@ -379,12 +372,9 @@ def _multi_ranked_core(
     leg_names: set,
     rn_col: str,
     leg_col: str,
-    num_partitions: int | None,
 ) -> tuple[DataFrame, dict[str, int]]:
     spark = tagged.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     rp = (
         tagged.repartitionByRange(nparts, leg_col, *key_names)
         .withColumn("_pid", F.spark_partition_id())

@@ -179,7 +179,6 @@ def range_join_count(
     left_ts: str,
     right_ts: str,
     lookback_sec: int,
-    bucket_sec: int | None = None,
 ) -> DataFrame:
     """Count right rows with ``left_ts - lookback ≤ right_ts ≤ left_ts``
     per left row — a range join made hash-joinable by bucketization:
@@ -194,9 +193,7 @@ def range_join_count(
     row. ``monotonically_increasing_id`` is stable within the job that
     evaluates it — the grouping consumes it in the same plan, and the
     id never escapes the operator."""
-    bucket_sec = bucket_sec or lookback_sec
-    bus = bucket_sec * US_PER_SEC
-    lus = lookback_sec * US_PER_SEC
+    bus = lus = lookback_sec * US_PER_SEC
     l2 = left.select(
         "*",
         F.monotonically_increasing_id().alias("_rowid"),
@@ -205,8 +202,7 @@ def range_join_count(
         "_probe_bucket",
         F.explode(
             F.expr(
-                f"transform(sequence(0, {lookback_sec // bucket_sec}), "
-                f"i -> (_lt DIV {bus}) - i)"
+                f"transform(sequence(0, 1), i -> (_lt DIV {bus}) - i)"
             )
         ),
     )

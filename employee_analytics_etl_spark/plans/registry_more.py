@@ -88,9 +88,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles with the simple a<b<c three-way join, which is fine at
     oracle scale but squares hub degrees — the Spark side is the
     100 TB shape."""
-    return G.triangle_stats(
-        _copurchase_edges(spark, sf_dir), assume_distinct=True
-    )
+    return G.triangle_stats(_copurchase_edges(spark, sf_dir))
 
 
 @query(

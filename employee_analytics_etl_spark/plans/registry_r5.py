@@ -1969,12 +1969,11 @@ def graph_ppr_related_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e0.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(e0.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    # broadcast_shares: the node set is bounded BY CONSTRUCTION at
-    # |customer| + |supplier| dimension rows (bipartite trade graph),
-    # so the per-iteration share table is broadcast-safe at any SF
+    # the node set is bounded BY CONSTRUCTION at |customer| +
+    # |supplier| dimension rows (bipartite trade graph), so the
+    # per-iteration share table is broadcast-safe at any SF
     ppr = G2.personalized_pagerank(
-        edges, seeds=[0, 25, 50, 75, 100], iters=3, damping=0.85,
-        broadcast_shares=True,
+        edges, seeds=[0, 25, 50, 75, 100], iters=3, damping=0.85
     )
     return ppr.select(
         F.col("node").cast("long").alias("node"),
@@ -2419,9 +2418,7 @@ def graph_local_clustering_topk(
     their source so each triangle credits all three corners."""
     from .registry_more import _copurchase_edges
 
-    return G.local_clustering_topk(
-        _copurchase_edges(spark, sf_dir), k=20, assume_distinct=True
-    )
+    return G.local_clustering_topk(_copurchase_edges(spark, sf_dir), k=20)
 
 
 @query(

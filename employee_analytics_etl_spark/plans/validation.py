@@ -153,24 +153,6 @@ def _validate(
     return rep
 
 
-def run_checks(df: DataFrame, table: str, checks: list[Check]) -> TableReport:
-    """Fused single-pass evaluation of row-level checks (V9 fusion)."""
-    return _validate(df, table, checks)
-
-
-def pk_unique_violations(df: DataFrame, pk: str) -> int:
-    """V2: count of duplicated PK values."""
-    return _pk_dup_frame(df, pk).collect()[0]["n"]
-
-
-def ri_violations(
-    child: DataFrame, fk: str, parent: DataFrame, pk: str, sentinel: int = -1
-) -> int:
-    """V4: distinct child FKs (excluding the sentinel) missing from the
-    parent PK set."""
-    return _ri_frame(child, fk, parent, pk, sentinel).collect()[0]["n"]
-
-
 # --- the reference's four table validators (V9 orchestration) ---------------
 
 EMPLOYEE_STATUS_ENUM = ["active", "inactive", "terminated", "leave"]
@@ -195,7 +177,7 @@ def validate_employees(df: DataFrame) -> TableReport:
     ])
 
 
-def validate_reviews(df: DataFrame, employees: DataFrame | None = None) -> TableReport:
+def validate_reviews(df: DataFrame, employees: DataFrame) -> TableReport:
     """reference scripts/validation.py:92-107."""
     checks = [
         pk_complete("review_id"),
@@ -203,12 +185,10 @@ def validate_reviews(df: DataFrame, employees: DataFrame | None = None) -> Table
         required_complete("review_date"),
         in_range("rating", 1.0, 5.0),
     ]
-    extra = [("pk_unique_review_id", _pk_dup_frame(df, "review_id"), False)]
-    if employees is not None:
-        extra.append((
-            "ri_employee_id", _ri_frame(df, "employee_id", employees, "employee_id"), False,
-        ))
-    return _validate(df, "performance_reviews", checks, extra)
+    return _validate(df, "performance_reviews", checks, [
+        ("pk_unique_review_id", _pk_dup_frame(df, "review_id"), False),
+        ("ri_employee_id", _ri_frame(df, "employee_id", employees, "employee_id"), False),
+    ])
 
 
 def validate_projects(df: DataFrame) -> TableReport:
@@ -225,25 +205,17 @@ def validate_projects(df: DataFrame) -> TableReport:
 
 
 def validate_assignments(
-    df: DataFrame,
-    employees: DataFrame | None = None,
-    projects: DataFrame | None = None,
+    df: DataFrame, employees: DataFrame, projects: DataFrame
 ) -> TableReport:
     """reference scripts/validation.py:123-134."""
     checks = [
         pk_complete("assignment_id"),
         in_range("allocation_percentage", 0.0, 100.0),
     ]
-    extra = []
-    if employees is not None:
-        extra.append((
-            "ri_employee_id", _ri_frame(df, "employee_id", employees, "employee_id"), False,
-        ))
-    if projects is not None:
-        extra.append((
-            "ri_project_id", _ri_frame(df, "project_id", projects, "project_id"), False,
-        ))
-    return _validate(df, "project_assignments", checks, extra)
+    return _validate(df, "project_assignments", checks, [
+        ("ri_employee_id", _ri_frame(df, "employee_id", employees, "employee_id"), False),
+        ("ri_project_id", _ri_frame(df, "project_id", projects, "project_id"), False),
+    ])
 
 
 def dq_stats(reports: list[TableReport]) -> dict:

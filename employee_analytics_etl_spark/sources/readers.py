@@ -82,38 +82,6 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, table: str) -> DataFram
     return df
 
 
-def read_json_table(
-    spark: SparkSession, path: str, schema, timestamp_cols: list[str] | None = None
-) -> DataFrame:
-    """JSON-lines scan with an EXPLICIT schema — inference over JSON is
-    doubly banned at scale (it costs a full extra pass AND guesses
-    types per-file). ``timestamp_cols`` are read as ISO-8601 strings
-    and parsed to TIMESTAMP_NTZ via try_cast (JSON has no timestamp
-    type): unparseable values become NULL instead of failing the job
-    under ANSI mode — PERMISSIVE end to end, matching the reference's
-    tolerance. Catch data-quality fallout with the validation suite's
-    completeness checks, not mid-scan exceptions."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
-    for c in timestamp_cols or []:
-        df = df.withColumn(c, F.expr(f"try_cast({c} AS TIMESTAMP_NTZ)"))
-    return df
-
-
-def read_orc_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """ORC scan (columnar sibling of parquet; Spark-native reader with
-    the same pushdown/pruning machinery — `PushedFilters` and pruned
-    `ReadSchema` appear in the plan exactly as for parquet). An
-    explicit ``schema`` pins types when provided; otherwise ORC's own
-    file metadata supplies them (no inference pass — ORC is
-    self-describing, unlike CSV/JSON)."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)
-
-
 def read_fixed_width(
     spark: SparkSession,
     path: str,
@@ -121,11 +89,11 @@ def read_fixed_width(
     trim: bool = True,
 ) -> DataFrame:
     """Fixed-width (positional) flat-file scan — the mainframe/legacy
-    export format the CSV/JSON/ORC reader family lacked. ``fields`` is
+    export format the CSV/Parquet readers lack. ``fields`` is
     ``[(name, start_1_based, length, spark_type), ...]``; each column
     is carved out of the line with ``substring`` and cast via
-    ``try_cast`` (unparseable → NULL, PERMISSIVE like the JSON
-    reader, never a mid-scan ANSI failure). ``trim`` strips the
+    ``try_cast`` (unparseable → NULL, PERMISSIVE, never a mid-scan
+    ANSI failure). ``trim`` strips the
     space padding fixed-width encoders emit.
 
     Scale: ``spark.read.text`` splits the file like any text source

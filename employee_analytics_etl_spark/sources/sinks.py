@@ -50,21 +50,6 @@ def write_parquet(
     w.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink — same layout options as the parquet sink (partition
-    columns prune identically); zstd compression to match the parquet
-    default."""
-    w = df.write.mode(mode).option("compression", "zstd")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
 def jdbc_write_options(
     url: str,
     table: str,

@@ -6,6 +6,7 @@ them and over generated inputs that several test modules check."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import sys
@@ -30,6 +31,19 @@ def spark():
     s = build_session(app_name="engine-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@contextlib.contextmanager
+def shuffle_partitions(spark, n: int):
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n``
+    at runtime, restoring the session's value afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
 
 
 def d(s: str | None) -> dt.date | None:

@@ -222,9 +222,11 @@ print(json.dumps({
     def test_no_other_registry_import_list_or_side_door_write(self):
         """Grep every .py file: only ``bench.py`` (the harness) and
         ``plans/__init__.py`` name the last registry module, only
-        ``registry.query`` assigns into QUERIES/ORACLE, and nothing
-        imports them under another name. This file is skipped: it
-        spells the patterns out."""
+        ``registry.query`` assigns into QUERIES/ORACLE, nothing
+        imports them under another name, and nothing puts an absolute
+        path literal on ``sys.path`` (a checkout elsewhere would import
+        that path's package instead of its own). This file is skipped:
+        it spells the patterns out."""
         import pathlib
         import re
 
@@ -243,7 +245,10 @@ print(json.dumps({
             r"(QUERIES|ORACLE)\s*\[[^\]]*\]\s*[-+|]?=(?!=)"
             r"|\b(QUERIES|ORACLE)\s+as\s+\w"
         )
-        importers, writers = [], []
+        fixed_root = re.compile(
+            r"sys\.path\.(insert\(\s*\d+\s*,|append\()\s*[\"']/"
+        )
+        importers, writers, fixed_roots = [], [], []
         for py in sorted(root.rglob("*.py")):
             rel = py.relative_to(root)
             if py == pathlib.Path(__file__).resolve() or any(
@@ -255,8 +260,93 @@ print(json.dumps({
                     importers.append(f"{rel}:{i}")
                 if writes.search(line) and (py, line.strip()) not in may_write:
                     writers.append(f"{rel}:{i}: {line.strip()}")
+                if fixed_root.search(line):
+                    fixed_roots.append(f"{rel}:{i}: {line.strip()}")
         assert not importers, f"registry module list copied into: {importers}"
         assert not writers, f"QUERIES/ORACLE written outside query(): {writers}"
+        assert not fixed_roots, f"absolute path put on sys.path: {fixed_roots}"
+
+    def test_every_package_function_has_a_non_test_caller(self):
+        """Every top-level function and class under
+        ``employee_analytics_etl_spark/`` is referenced, as a name, an
+        attribute or an import, by some ``.py`` file outside ``tests/``;
+        a mention in a docstring or comment does not count. Code that
+        only tests call is deleted together with those tests."""
+        import ast
+        import pathlib
+
+        root = pathlib.Path(__file__).resolve().parent.parent
+        pkg = root / "employee_analytics_etl_spark"
+        exempt_modules = {
+            "streaming": "streaming twins: ROADMAP measures them and "
+            "tools/bench_streaming.py drives them",
+            "__main__.py": "the CLI, run as python -m employee_analytics_etl_spark",
+        }
+        exempt_prefix = {
+            "choose_": "planner rules, each pinned by tests against its "
+            "oracle-gated decision-table query",
+        }
+        exempt_names = {
+            "_damerau_levenshtein_py": "reference the capped Damerau "
+            "verifier is tested against",
+            "brute_force_topk": "exact reference the ANN top-k operators "
+            "are tested against",
+            "clear_pair_budget_cache": "the only remedy for the pair-budget "
+            "memo's documented staleness window",
+            # Called only by tests. Deleting each retires the tests named
+            # in CHANGES.md; left for a change that retires them.
+            "read_fixed_width": "deferred: only tests call it",
+            "bpe_encode": "deferred: only tests call it",
+            "resample_audio": "deferred: only tests call it",
+            "compact_parquet": "deferred: only tests call it",
+            "upsert_parquet": "deferred: only tests call it",
+            "lsh_hyperplane_topk": "deferred: only tests call it",
+            "resize_images": "deferred: only tests call it",
+            "write_bucketed": "deferred: only tests call it",
+            "write_zordered": "deferred: only tests call it",
+        }
+
+        refs = set()
+        for py in root.rglob("*.py"):
+            rel = py.relative_to(root)
+            if rel.parts[0] == "tests" or any(p.startswith(".") for p in rel.parts):
+                continue
+            for node in ast.walk(ast.parse(py.read_text())):
+                if isinstance(node, ast.Name):
+                    refs.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    refs.add(node.attr)
+                elif isinstance(node, ast.alias):  # imports, re-exports
+                    refs.add(node.name.rsplit(".", 1)[-1])
+
+        def is_query(node) -> bool:
+            return any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+                for d in node.decorator_list
+            )
+
+        uncalled, defined = [], set()
+        for py in sorted(pkg.rglob("*.py")):
+            rel = py.relative_to(pkg)
+            for node in ast.parse(py.read_text()).body:
+                if not isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    continue
+                name = node.name
+                defined.add(name)
+                if (
+                    name in refs
+                    or rel.parts[0] in exempt_modules
+                    or name in exempt_names
+                    or name.startswith(tuple(exempt_prefix))
+                    or is_query(node)
+                ):
+                    continue
+                uncalled.append(f"{rel}:{node.lineno} {name}")
+        assert not uncalled, f"no caller outside tests/: {uncalled}"
+        stale = sorted(n for n in exempt_names if n not in defined or n in refs)
+        assert not stale, f"exemptions that no longer apply: {stale}"
 
 
 class TestBenchEmission:

@@ -13,7 +13,9 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 SRC = "/root/testdata/sf0.001"
 FACTOR = 3

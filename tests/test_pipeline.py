@@ -183,71 +183,6 @@ class TestGeneratedPipeline:
         assert set(sc._jsc.getPersistentRDDs().keys()) == before
 
 
-class TestJsonSource:
-    def test_json_roundtrip_equals_parquet(self, spark, tmp_path_factory):
-        import os
-
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        from employee_analytics_etl_spark.sources.readers import (
-            read_json_table,
-            read_parquet_table,
-        )
-        from tests.conftest import SF_SMOKE
-
-        pq = read_parquet_table(spark, SF_SMOKE, "events")
-        base = str(tmp_path_factory.mktemp("json")) + "/events.json"
-        pq.withColumn(
-            "ts", F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-        ).write.mode("overwrite").json(base)
-
-        schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", T.StringType()),
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("props", T.StringType()),
-            ]
-        )
-        js = read_json_table(spark, base, schema, timestamp_cols=["ts"])
-        cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-        a = sorted(map(tuple, pq.select(cols).collect()))
-        b = sorted(map(tuple, js.select(cols).collect()))
-        assert a == b
-
-
-class TestOrcRoundtrip:
-    def test_orc_roundtrip_and_pushdown(self, spark, tmp_path):
-        from employee_analytics_etl_spark.sources.readers import (
-            read_orc_table,
-            read_parquet_table,
-        )
-        from employee_analytics_etl_spark.sources.sinks import write_orc
-        from tests.conftest import SF_SMOKE
-
-        src = read_parquet_table(spark, SF_SMOKE, "orders")
-        path = str(tmp_path / "orders_orc")
-        write_orc(src, path, partition_by=["o_orderstatus"])
-
-        back = read_orc_table(spark, path)
-        assert back.count() == src.count()
-        a = sorted(map(tuple, src.select("o_orderkey", "o_totalprice").collect()))
-        b = sorted(map(tuple, back.select("o_orderkey", "o_totalprice").collect()))
-        assert a == b
-
-        # filters reach the ORC scan: both a partition filter and a
-        # pushed data filter appear in the physical plan
-        q = back.filter(
-            (back.o_orderstatus == "F") & (back.o_orderkey > 100)
-        ).select("o_orderkey")
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters" in plan and "o_orderkey" in plan
-        assert q.count() > 0
-
-
 class TestSchemaEvolution:
     def test_parquet_merge_schema_appends_column(self, spark, tmp_path):
         """Appended datasets gain columns over time; the reader must

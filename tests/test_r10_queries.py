@@ -1,7 +1,7 @@
 """Round-10 regression tests: the five r9 ADVICE findings.
 
-1 (medium) shingle_sets checkpoint is opt-out-able (cluster callers own
-  the executor-loss / storage tradeoff).
+1 (medium) shingle_sets pins its result with exactly one lazy
+  localCheckpoint.
 2 (low) broadcast_over_generate is depth-aware: an Aggregate BELOW the
   Generate (explode of an aggregated input, broadcast of the raw
   explode output) no longer suppresses the finding.
@@ -27,8 +27,8 @@ from employee_analytics_etl_spark.operators.dedup import (
 )
 
 
-class TestShingleSetsCheckpointOptOut:
-    def test_default_pins_once_and_false_pins_never(self, spark, monkeypatch):
+class TestShingleSetsCheckpoint:
+    def test_pins_once_lazily(self, spark, monkeypatch):
         calls = []
         df = spark.createDataFrame(
             [(1, "a b c d"), (2, "b c d e")], ["doc_id", "text"]
@@ -44,15 +44,11 @@ class TestShingleSetsCheckpointOptOut:
             return orig(self, eager=eager)
 
         monkeypatch.setattr(cls, "localCheckpoint", spy)
-        shingle_sets(df, n=3)
-        assert calls == [False], "default path must lazily pin exactly once"
-        calls.clear()
-        unpinned = shingle_sets(df, n=3, checkpoint=False)
-        assert calls == [], "checkpoint=False must not touch localCheckpoint"
-        # identical semantics either way
+        pinned = shingle_sets(df, n=3)
+        assert calls == [False], "shingle_sets must lazily pin exactly once"
         got = {
             r["id"]: (r["shingle_set"], r["set_size"])
-            for r in unpinned.collect()
+            for r in pinned.collect()
         }
         assert got == {
             1: (["a b c", "b c d"], 2),

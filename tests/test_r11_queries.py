@@ -198,20 +198,6 @@ class TestCandidateLevenshtein:
         expect = self._brute()
         assert got == expect and len(expect) >= 2
 
-    def test_unbanded_matches_banded(self, spark):
-        df = spark.createDataFrame(self._docs, ["doc_id", "text"])
-        banded = {
-            tuple(r)
-            for r in candidate_levenshtein_pairs(df, "doc_id", "text").collect()
-        }
-        full = {
-            tuple(r)
-            for r in candidate_levenshtein_pairs(
-                df, "doc_id", "text", lev_band=False
-            ).collect()
-        }
-        assert banded == full
-
     def test_fractional_pct_band_matches_unbanded(self, spark):
         # r13 (ADVICE/VERDICT #8): the banded threshold must be built
         # from the EXACT pct, not int(pct) — with pct=12.5 an
@@ -235,12 +221,6 @@ class TestCandidateLevenshtein:
                 df, "doc_id", "text", **kw
             ).collect()
         }
-        full = {
-            tuple(r)
-            for r in candidate_levenshtein_pairs(
-                df, "doc_id", "text", lev_band=False, **kw
-            ).collect()
-        }
         # brute force of the declared semantics at the fractional pct
         expect = set()
         for i, (ia, ta) in enumerate(docs):
@@ -250,7 +230,7 @@ class TestCandidateLevenshtein:
                 lev = self._lev(ta, tb)
                 if jac >= 0.3 and lev <= max(len(ta), len(tb)) * 12.5 / 100:
                     expect.add((ia, ib, round(jac, 6), lev))
-        assert banded == full == expect
+        assert banded == expect
         # the fixture must actually exercise a pair BETWEEN floor-int-
         # pct band and the fractional cap, or this test proves nothing
         assert any(
@@ -260,14 +240,17 @@ class TestCandidateLevenshtein:
             for (a, b, _j, d) in expect
         )
 
-    def test_lev_band_false_is_plan_only(self, spark, monkeypatch):
+    def test_construction_is_plan_only(self, spark, monkeypatch):
         df = spark.createDataFrame(self._docs, ["doc_id", "text"])
         cls = type(df)
         eager: list[str] = []
         monkeypatch.setattr(
             cls, "first", lambda self, *a, **kw: eager.append("first")
         )
-        candidate_levenshtein_pairs(df, "doc_id", "text", lev_band=False)
+        monkeypatch.setattr(
+            cls, "collect", lambda self, *a, **kw: eager.append("collect")
+        )
+        candidate_levenshtein_pairs(df, "doc_id", "text")
         assert eager == []
 
 

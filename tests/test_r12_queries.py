@@ -52,7 +52,7 @@ class TestShortWholeTextFallback:
         df = spark.createDataFrame(self._docs, ["doc_id", "text"])
         rows = {
             r["id"]: r["shingle_set"]
-            for r in shingle_sets(df, n=5, checkpoint=False).collect()
+            for r in shingle_sets(df, n=5).collect()
         }
         assert len(rows[1]) == 2  # 6 tokens -> two 5-grams
         assert rows[2] == [] and rows[3] == []
@@ -62,9 +62,7 @@ class TestShortWholeTextFallback:
         df = spark.createDataFrame(self._docs, ["doc_id", "text"])
         rows = {
             r["id"]: r["shingle_set"]
-            for r in shingle_sets(
-                df, n=5, checkpoint=False, short_whole_text=True
-            ).collect()
+            for r in shingle_sets(df, n=5, short_whole_text=True).collect()
         }
         assert len(rows[1]) == 2  # >= n tokens: unchanged
         assert rows[2] == ["short one"] and rows[3] == ["short one"]
@@ -311,7 +309,7 @@ class TestTriangleJoinNeverBroadcastsExplodedSide:
         # 512 MB threshold: if ANY estimate-governed broadcast of the
         # exploded side were still possible, it would be planned here.
         with self._with_threshold(spark, 512 * 1024 * 1024):
-            df = G.triangle_stats(self._edges(spark), assume_distinct=True)
+            df = G.triangle_stats(self._edges(spark))
             plan = df._jdf.queryExecution().executedPlan().toString()
         na_joins = [
             l for l in plan.splitlines() if "Join" in l and "na#" in l
@@ -338,12 +336,10 @@ class TestTriangleJoinNeverBroadcastsExplodedSide:
         assert "graph_triangle_stats" not in GENERATE_BROADCAST_OK
 
         with self._with_threshold(spark, 512 * 1024 * 1024):
-            df = G.triangle_stats(self._edges(spark), assume_distinct=True)
+            df = G.triangle_stats(self._edges(spark))
             plan = df._jdf.queryExecution().executedPlan().toString()
             assert broadcast_over_generate(plan) == []
-            df2 = G.local_clustering_topk(
-                self._edges(spark), k=5, assume_distinct=True
-            )
+            df2 = G.local_clustering_topk(self._edges(spark), k=5)
             plan2 = df2._jdf.queryExecution().executedPlan().toString()
             assert broadcast_over_generate(plan2) == []
 
@@ -351,9 +347,7 @@ class TestTriangleJoinNeverBroadcastsExplodedSide:
         from employee_analytics_etl_spark.operators import graph as G
 
         n_cliques, k = 40, 6
-        row = G.triangle_stats(
-            self._edges(spark, n_cliques, k), assume_distinct=True
-        ).collect()[0]
+        row = G.triangle_stats(self._edges(spark, n_cliques, k)).collect()[0]
         # k-clique: C(k,3) triangles, C(k,2) edges, k*C(k-1,2) wedges
         assert row.n_nodes == n_cliques * k
         assert row.n_edges == n_cliques * k * (k - 1) // 2

@@ -11,6 +11,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import shuffle_partitions
+
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
@@ -137,13 +139,11 @@ class TestRankedCummax:
 
         rows = [(i, v) for i, v in enumerate([5, 3, 99, 1, 2, 4, 98, 7, 6, 0])]
         df = spark.createDataFrame(rows, "pos long, x long")
-        got, n = ranked(
-            df,
-            [F.asc("pos")],
-            rn_col=None,
-            cummax_cols={"x": "run_max"},
-            num_partitions=4,
-        )
+        with shuffle_partitions(spark, 4):
+            got, n = ranked(
+                df, [F.asc("pos")], rn_col=None, cummax_cols={"x": "run_max"}
+            )
+            got_sorted = got.orderBy("pos").collect()
         assert n == 10
         want = (
             df.withColumn(
@@ -157,7 +157,6 @@ class TestRankedCummax:
             .orderBy("pos")
             .collect()
         )
-        got_sorted = got.orderBy("pos").collect()
         assert [(r["pos"], r["run_max"]) for r in got_sorted] == [
             (r["pos"], r["run_max"]) for r in want
         ]
@@ -168,15 +167,15 @@ class TestRankedCummax:
         df = spark.createDataFrame(
             [(1, 10), (2, 5), (3, 20), (4, 1)], "k long, v long"
         )
-        got, _ = ranked(
-            df,
-            [F.asc("k")],
-            rn_col="rn",
-            cumsum_cols={"v": "cs"},
-            cummax_cols={"v": "cm"},
-            num_partitions=3,
-        )
-        out = {r["k"]: (r["rn"], r["cs"], r["cm"]) for r in got.collect()}
+        with shuffle_partitions(spark, 3):
+            got, _ = ranked(
+                df,
+                [F.asc("k")],
+                rn_col="rn",
+                cumsum_cols={"v": "cs"},
+                cummax_cols={"v": "cm"},
+            )
+            out = {r["k"]: (r["rn"], r["cs"], r["cm"]) for r in got.collect()}
         assert out == {
             1: (1, 10, 10),
             2: (2, 15, 10),

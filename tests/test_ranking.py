@@ -21,6 +21,7 @@ from employee_analytics_etl_spark.operators.ranking import (  # noqa: E402
     percent_rank_from_rn,
     ranked,
 )
+from tests.conftest import shuffle_partitions  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -56,22 +57,23 @@ def test_partition_count_independence(spark, src, nparts):
     """Same ranks and exact decimal cumsums for any partition count —
     including more partitions than distinct keys (empty partitions)."""
     expect = _reference(src)
-    out, n_total = ranked(
-        src,
-        [F.asc("grp"), F.asc("id")],
-        rn_col="rn",
-        cumsum_cols={"amount": "cum"},
-        num_partitions=nparts,
-    )
-    got = {r["id"]: (r["rn"], r["cum"]) for r in out.collect()}
+    with shuffle_partitions(spark, nparts):
+        out, n_total = ranked(
+            src,
+            [F.asc("grp"), F.asc("id")],
+            rn_col="rn",
+            cumsum_cols={"amount": "cum"},
+        )
+        got = {r["id"]: (r["rn"], r["cum"]) for r in out.collect()}
     assert n_total == 97
     assert got == expect
 
 
 def test_columns_preserved_and_desc_order(spark, src):
-    out, _ = ranked(src, [F.desc("amount"), F.asc("id")], num_partitions=5)
+    with shuffle_partitions(spark, 5):
+        out, _ = ranked(src, [F.desc("amount"), F.asc("id")])
+        rows = sorted(out.collect(), key=lambda r: r["rn"])
     assert set(out.columns) == {"id", "grp", "amount", "rn"}
-    rows = sorted(out.collect(), key=lambda r: r["rn"])
     amounts = [r["amount"] for r in rows]
     assert amounts == sorted(amounts, reverse=True)
     assert [r["rn"] for r in rows] == list(range(1, 98))
@@ -143,11 +145,10 @@ def test_percent_rank_cume_dist_match_builtin(spark):
 
 def test_empty_input(spark):
     df = spark.createDataFrame([], "id long, amount decimal(18,2)")
-    out, n_total = ranked(
-        df, [F.asc("id")], cumsum_cols={"amount": "cum"}, num_partitions=4
-    )
+    with shuffle_partitions(spark, 4):
+        out, n_total = ranked(df, [F.asc("id")], cumsum_cols={"amount": "cum"})
+        assert out.count() == 0
     assert n_total == 0
-    assert out.count() == 0
     assert set(out.columns) == {"id", "amount", "rn", "cum"}
 
 
@@ -164,9 +165,9 @@ def test_hot_key_splits_across_range_partitions(spark):
         F.col("id"),
     )
     nparts = 16
-    out, n_total = ranked(
-        df, [F.asc("grp"), F.asc("id")], rn_col="rn", num_partitions=nparts
-    )
+    with shuffle_partitions(spark, nparts):
+        out, n_total = ranked(df, [F.asc("grp"), F.asc("id")], rn_col="rn")
+        got = {r["id"]: r["rn"] for r in out.collect()}
     assert n_total == n
     # inspect the materialized range partitioning via the same pid
     # mechanism the primitive uses internally
@@ -188,7 +189,6 @@ def test_hot_key_splits_across_range_partitions(spark):
         r["id"]: r["r"]
         for r in df.select("id", F.row_number().over(w).alias("r")).collect()
     }
-    got = {r["id"]: r["rn"] for r in out.collect()}
     assert got == expect
 
 
@@ -238,12 +238,11 @@ class TestMultiRanked:
             multi_ranked,
         )
 
-        out, n_totals = multi_ranked(
-            src, self._legs(), num_partitions=nparts
-        )
-        got = {
-            (r["leg"], r["id"]): r["rn"] for r in out.collect()
-        }
+        with shuffle_partitions(spark, nparts):
+            out, n_totals = multi_ranked(src, self._legs())
+            got = {
+                (r["leg"], r["id"]): r["rn"] for r in out.collect()
+            }
         n = src.count()
         assert n_totals == {"by_grp": n, "by_amount_desc": n}
         assert len(got) == 2 * n
@@ -348,12 +347,11 @@ class TestMultiRankedFrames:
             "evens": src.filter(F.col("id") % 2 == 0),
             "all": src,
         }
-        out, n_totals = multi_ranked_frames(
-            legs,
-            [F.col("grp"), F.col("id")],
-            num_partitions=5,
-        )
-        got = {(r["leg"], r["id"]): r["rn"] for r in out.collect()}
+        with shuffle_partitions(spark, 5):
+            out, n_totals = multi_ranked_frames(
+                legs, [F.col("grp"), F.col("id")]
+            )
+            got = {(r["leg"], r["id"]): r["rn"] for r in out.collect()}
         for name, leg_df in legs.items():
             ref = {
                 r["id"]: r["rn"]

@@ -33,22 +33,22 @@ class TestChecks:
 
     def test_ri_anti_join(self, spark, hr):
         # assignment 7 references employee 99
-        n = V.ri_violations(
-            hr["project_assignments"], "employee_id", hr["employees"], "employee_id"
+        rep = V.validate_assignments(
+            hr["project_assignments"], hr["employees"], hr["projects"]
         )
-        assert n == 1
+        assert rep.results["ri_employee_id"] == 1
+        assert rep.results["ri_project_id"] == 0
 
     def test_ri_sentinel_exempt(self, spark, hr):
-        emp_with_sentinel = hr["employees"].withColumn(
-            "department_id", F.coalesce("department_id", F.lit(-1))
+        asn = hr["project_assignments"].withColumn(
+            "employee_id",
+            F.when(F.col("assignment_id") == 1, -1).otherwise(F.col("employee_id")),
         )
-        n = V.ri_violations(
-            emp_with_sentinel, "department_id", hr["departments"], "department_id"
-        )
-        assert n == 1  # ghost dept 999 only; -1 sentinel exempt
+        rep = V.validate_assignments(asn, hr["employees"], hr["projects"])
+        assert rep.results["ri_employee_id"] == 1  # employee 99 only; -1 sentinel exempt
 
     def test_rating_range(self, spark, hr):
-        rep = V.validate_reviews(hr["performance_reviews"], employees=hr["employees"])
+        rep = V.validate_reviews(hr["performance_reviews"], hr["employees"])
         assert rep.results["range_rating"] == 2  # 6.0 and 0.5
         assert rep.results["ri_employee_id"] == 0
 
@@ -62,20 +62,44 @@ class TestChecks:
         assert stats["passed"] + stats["failed"] == stats["total_checks"]
         assert stats["failed"] >= 2  # enum_status + active_salary + budget
 
-    def test_one_action_validator_matches_the_wrappers(self, spark, hr):
+    def test_one_action_validator_matches_the_wrappers(self, spark, hr, monkeypatch):
+        """Each validator's one fused action gives the counts that its
+        checks give when each is collected as its own action (what the
+        former one-check wrappers did)."""
         asn, emp, proj = hr["project_assignments"], hr["employees"], hr["projects"]
-        rep = V.validate_assignments(asn, employees=emp, projects=proj)
-        checks = V.run_checks(asn, "project_assignments", [
+
+        def alone(frame):
+            return frame.collect()[0]["n"]
+
+        checks = V._check_frame(asn, [
             V.pk_complete("assignment_id"),
             V.in_range("allocation_percentage", 0.0, 100.0),
-        ])
-        assert rep.total_rows == checks.total_rows == asn.count()
-        assert rep.results == {
-            **checks.results,
-            "ri_employee_id": V.ri_violations(asn, "employee_id", emp, "employee_id"),
-            "ri_project_id": V.ri_violations(asn, "project_id", proj, "project_id"),
+        ]).collect()[0].asDict()
+        expect = {
+            "pk_complete_assignment_id": checks["pk_complete_assignment_id"],
+            "range_allocation_percentage": checks["range_allocation_percentage"],
+            "ri_employee_id": alone(V._ri_frame(asn, "employee_id", emp, "employee_id")),
+            "ri_project_id": alone(V._ri_frame(asn, "project_id", proj, "project_id")),
         }
-        emp_rep = V.validate_employees(emp)
-        assert emp_rep.results["pk_unique_employee_id"] == V.pk_unique_violations(
-            emp, "employee_id"
-        )
+        assert expect == {
+            "pk_complete_assignment_id": 0,
+            "range_allocation_percentage": 1,  # assignment 4 at 120%
+            "ri_employee_id": 1,  # employee 99
+            "ri_project_id": 0,
+        }
+        dup = emp.unionByName(emp.limit(1))
+        expect_dup = alone(V._pk_dup_frame(dup, "employee_id"))
+
+        cls = type(asn)
+        orig, actions = cls.collect, []
+
+        def spy(self):
+            actions.append(1)
+            return orig(self)
+
+        monkeypatch.setattr(cls, "collect", spy)
+        rep = V.validate_assignments(asn, emp, proj)
+        assert actions == [1]
+        assert rep.total_rows == checks["__total"] == 7
+        assert rep.results == expect
+        assert V.validate_employees(dup).results["pk_unique_employee_id"] == expect_dup == 1

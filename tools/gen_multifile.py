@@ -29,7 +29,7 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FACT_TABLES = ("lineitem", "orders")
 COPY_TABLES = (
