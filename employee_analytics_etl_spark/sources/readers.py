@@ -7,8 +7,8 @@ Design notes (vs reference):
   ``check_manifest`` fails fast before any Spark job is submitted.
 - Column tolerance (reference scripts/transform.py:101-111 accepts the
   department name column as either ``name`` or ``department_name``) is
-  applied ONCE at ingest by ``normalize_departments`` instead of being
-  re-probed inside every operator.
+  not needed: a CSV read with a fixed schema names its columns by
+  schema position, so ``department_name`` always exists.
 
 Scale: parquet readers keep Catalyst's predicate pushdown / column
 pruning intact (no ``.cache()`` here — callers decide materialization
@@ -125,31 +125,6 @@ def load_sf_tables(
         df.createOrReplaceTempView(t)
         out[t] = df
     return out
-
-
-def normalize_departments(df: DataFrame) -> DataFrame:
-    """Ingest-time normalization of the departments table: accept the
-    name column as either ``name`` or ``department_name``; expose BOTH
-    downstream-facing names? No — canonicalize to ``department_name``
-    (operators alias as needed). Mirrors the tolerance at reference
-    scripts/transform.py:101-111 and scripts/main.py:94-95 without
-    re-probing in every operator."""
-    cols = df.columns
-    if "department_name" in cols:
-        return df
-    if "name" in cols:
-        return df.withColumnRenamed("name", "department_name")
-    # Neither present: degrade gracefully with an 'Unknown' constant
-    # column (reference scripts/transform.py:109-111).
-    from pyspark.sql import functions as F
-
-    return df.withColumn("department_name", F.lit("Unknown"))
-
-
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=None) -> list[str]:

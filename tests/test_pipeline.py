@@ -7,17 +7,69 @@ import time
 
 import pytest
 
+import employee_analytics_etl_spark.plans.pipeline as P
+from employee_analytics_etl_spark.config import PipelineConfig
 from employee_analytics_etl_spark.session import run_concurrently
+from employee_analytics_etl_spark.sources import readers, schemas
 from employee_analytics_etl_spark.sources.readers import MissingInputError, check_manifest
 from employee_analytics_etl_spark.sources.schemas import HR_TABLE_ORDER
 from perfbench import hrgen
 from tests.conftest import run_generated
 
 
+# The ``hr`` fixture run's report and dq, as the sequential pipeline
+# computed them. Departments Hr and Tech tie on active projects; the
+# report names the one with the lower department_id.
+FIXTURE_REPORT = """\
+================================================================
+EMPLOYEE ANALYTICS ETL - SUMMARY REPORT (spark engine)
+as_of date: 2025-12-29
+================================================================
+
+-- DATA VOLUME --
+departments: extracted=4 cleaned=4 removed=0
+employees: extracted=10 cleaned=8 removed=2
+performance_reviews: extracted=8 cleaned=5 removed=3
+projects: extracted=6 cleaned=3 removed=3
+project_assignments: extracted=7 cleaned=5 removed=2
+
+-- DATA QUALITY --
+checks=22 passed=20 failed=2 critical=0
+  ! employees: enum_status: 1 violating rows
+  ! project_assignments: ri_employee_id: 1 violating rows
+
+-- BUSINESS INSIGHTS --
+A. Highest avg salary: Tech ($75,000.00)
+B. Top performers by avg rating: Charlie, Alice, Frank, Dana
+C. Most active projects: Hr (1)
+D. Longest tenure: Judy (8.1 years)
+E. Avg project duration: 364.0 days
+
+================================================================"""
+FIXTURE_DQ = {
+    "total_checks": 22,
+    "passed": 20,
+    "failed": 2,
+    "critical_issues": 0,
+    "issues": [
+        "employees: enum_status: 1 violating rows",
+        "project_assignments: ri_employee_id: 1 violating rows",
+    ],
+}
+
+
 class TestPipeline:
     def test_manifest_check(self, tmp_path):
         with pytest.raises(MissingInputError):
             check_manifest(str(tmp_path), [f"{t}.csv" for t in HR_TABLE_ORDER])
+
+    def test_testdata_tables_defined_once(self):
+        assert readers.TESTDATA_TABLES is schemas.TESTDATA_TABLES
+
+    def test_report_and_dq_pinned(self, hr_run):
+        res, _ = hr_run
+        assert res["dq"] == FIXTURE_DQ
+        assert res["report"] == FIXTURE_REPORT
 
     def test_outputs_present(self, hr_run):
         res, _ = hr_run
@@ -140,6 +192,17 @@ class TestGeneratedPipeline:
             assert a[key] == b[key], key
         assert set(a["timings"]) == {"materialize_s", "actions_s", "total"}
 
+    def test_run_without_an_output_dir_agrees(self, spark, generated_runs):
+        """With no output directory, no-op writes fill the caches: the
+        same counts, checks and report as a run that writes."""
+        conf = PipelineConfig(
+            raw_dir=generated_runs[1].raw, processed_dir="", report_path="",
+            as_of=hrgen.AS_OF.date(),
+        )
+        a, b = generated_runs[1].res, P.run_pipeline(spark, conf)
+        for key in ("report", "dq", "volume_stats"):
+            assert a[key] == b[key], key
+
     def test_repeated_run_reuses_the_generated_classes(self, spark, generated_runs, tmp_path):
         codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
         raw = generated_runs[1].raw
@@ -171,16 +234,52 @@ class TestGeneratedPipeline:
         assert started
         assert started - set(tracker.getJobIdsForGroup("g")) == set()
 
-    def test_failed_write_raises_and_releases_the_caches(self, spark, generated_runs, tmp_path):
+    def test_job_budget(self, spark, generated_runs, tmp_path):
+        """One run starts at most 35 jobs: every count, check and
+        insight rides a write, the projects aggregate, the key pass or
+        a collect on a cached summary."""
+        sc = spark.sparkContext
+        try:
+            sc.setJobGroup("budget", "one pipeline run")
+            run_generated(spark, generated_runs[1].raw, str(tmp_path / "out"))
+        finally:
+            _clear_job_group(sc)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert 0 < len(sc.statusTracker().getJobIdsForGroup("budget")) <= 35
+
+    def test_failed_write_raises_and_releases_the_caches(
+        self, spark, generated_runs, tmp_path, monkeypatch
+    ):
         from py4j.protocol import Py4JJavaError
 
         sc = spark.sparkContext
-        before = set(sc._jsc.getPersistentRDDs().keys())
+
+        def pinned() -> set:
+            return set(sc._jsc.getPersistentRDDs().keys())
+
+        before = pinned()
+        # every write fails: no cache is filled
         not_a_dir = tmp_path / "regular_file"
         not_a_dir.write_text("")
         with pytest.raises(Py4JJavaError):
             run_generated(spark, generated_runs[1].raw, str(not_a_dir))
-        assert set(sc._jsc.getPersistentRDDs().keys()) == before
+        assert pinned() == before
+
+        # a summary's write fails after filling its cache
+        write_csv, at_failure = P.write_csv, []
+
+        def fails_after_writing_a_summary(df, path):
+            write_csv(df, path)
+            if path.endswith("summary_emp_performance"):
+                at_failure.append(pinned() - before)
+                raise OSError("disk full")
+
+        monkeypatch.setattr(P, "write_csv", fails_after_writing_a_summary)
+        with pytest.raises(OSError, match="disk full"):
+            run_generated(spark, generated_runs[1].raw, str(tmp_path / "out"))
+        # the five cleaned tables and at least the employee summary
+        assert len(at_failure[0]) >= 6
+        assert pinned() == before
 
 
 class TestSchemaEvolution:

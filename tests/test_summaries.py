@@ -15,7 +15,6 @@ from employee_analytics_etl_spark.operators.summaries import (
     emp_performance,
     project_workload,
 )
-from employee_analytics_etl_spark.sources.readers import normalize_departments
 from tests.conftest import AS_OF
 
 
@@ -26,7 +25,7 @@ def cleaned(spark, hr):
         "rev": clean_reviews(hr["performance_reviews"]),
         "proj": clean_projects(hr["projects"], AS_OF),
         "asn": clean_assignments(hr["project_assignments"]),
-        "dept": normalize_departments(hr["departments"]),
+        "dept": hr["departments"],
     }
 
 
