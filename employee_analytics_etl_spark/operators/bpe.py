@@ -28,17 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import TOKEN_RE
+from .text import TOKEN_RE, tokens_col
 
 
 def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) dict of the corpus — the one pass over the data."""
     return (
-        df.select(
-            F.explode(
-                F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
-            ).alias("word")
-        )
+        df.select(F.explode(tokens_col(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )

@@ -13,7 +13,9 @@ Scale design:
   frequency shingles before the self-join — the classic stop-shingle
   cut that caps per-shingle fanout; at scale you'd also salt any
   residual hot shingle.
-- Everything is hash/group/join built-ins — no UDFs, no driver loops.
+- Candidate generation is hash/group/join built-ins — no driver loops.
+  The only Python is the Arrow scorers Spark has no builtin for
+  (SimHash bit votes, Damerau, Jaro-Winkler), one UDF each.
 
 MinHash uses md5 as the hash family (seeded by prefixing the seed
 index) so the DuckDB oracle can reproduce signatures exactly; a
@@ -27,8 +29,9 @@ import weakref
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .text import TOKEN_RE
+from .text import tokens_col
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -58,6 +61,40 @@ def keyed_dedup_first(df: DataFrame, keys: list[str], order: list[str]) -> DataF
     )
 
 
+def sorted_pairs(ids: str) -> Column:
+    """Every pair of the sorted array column ``ids`` as an array of
+    ``(id_a, id_b)`` structs, each unordered pair once with id_a <
+    id_b (for a distinct array). Exploding it after a
+    ``groupBy(key).agg(array_sort(collect_list(id)))`` replaces a
+    self-join on the key: one shuffle instead of three, and the fanout
+    per key is bounded by its group size squared."""
+    pairs = (
+        "flatten(transform(ids, (x, i) -> "
+        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
+    )
+    return F.expr(pairs.replace("ids", ids))
+
+
+def _word_ngrams(n: int, short_whole_text: bool = False) -> Column:
+    """The word ``n``-grams of the token array column ``_tk``.
+
+    The CASE guard is needed because ``sequence(1, 0)`` in Spark is the
+    DESCENDING [1, 0]: documents with fewer than ``n`` tokens yield an
+    empty array, or with ``short_whole_text`` one whole-text gram when
+    they have any token (see ``shingle_sets``)."""
+    short_arm = (
+        "WHEN size(_tk) >= 1 THEN array(concat_ws(' ', _tk)) "
+        if short_whole_text
+        else ""
+    )
+    return F.expr(
+        f"CASE WHEN size(_tk) >= {n} THEN "
+        f"transform(sequence(1, size(_tk) - {n - 1}), "
+        f"i -> concat_ws(' ', slice(_tk, i, {n}))) "
+        f"{short_arm}ELSE array() END"
+    )
+
+
 def shingles(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -79,20 +116,9 @@ def shingles(
     # Materialize the token array ONCE per row — embedding the regexp
     # inside size()/transform() would re-evaluate it several times per
     # row (Catalyst does not CSE across lambda boundaries).
-    # CASE guard: sequence(1, 0) in Spark is the DESCENDING [1, 0] —
-    # docs with fewer than n tokens must yield an empty shingle set.
-    grams = (
-        f"CASE WHEN size(_tk) >= {n} THEN "
-        f"transform(sequence(1, size(_tk) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(_tk, i, {n}))) "
-        f"ELSE array() END"
-    )
     out = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)").alias("_tk"),
-        )
-        .select("id", F.explode(F.expr(grams)).alias("shingle"))
+        df.select(F.col(id_col).alias("id"), tokens_col(text_col).alias("_tk"))
+        .select("id", F.explode(_word_ngrams(n)).alias("shingle"))
     )
     return out.distinct() if distinct else out
 
@@ -142,17 +168,6 @@ def shingle_sets(
     unrecoverable-by-recompute, and the materialized per-doc shingle
     arrays hold roughly n x the corpus text in block storage.
     """
-    short_arm = (
-        "WHEN size(_tk) >= 1 THEN array(concat_ws(' ', _tk)) "
-        if short_whole_text
-        else ""
-    )
-    grams = (
-        f"CASE WHEN size(_tk) >= {n} THEN "
-        f"transform(sequence(1, size(_tk) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(_tk, i, {n}))) "
-        f"{short_arm}ELSE array() END"
-    )
     # carry_cols (r12, optimization round): extra source columns to ride
     # the projection (and the checkpoint) so downstream verify joins can
     # attach them for free instead of re-joining the source by id — the
@@ -174,14 +189,14 @@ def shingle_sets(
     out = (
         df.select(
             F.col(id_col).alias("id"),
-            F.expr(
-                f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
-            ).alias("_tk"),
+            tokens_col(text_col).alias("_tk"),
             *[F.col(c) for c in carry_cols],
         )
         .select(
             "id",
-            F.expr(f"array_sort(array_distinct({grams}))").alias("shingle_set"),
+            F.array_sort(
+                F.array_distinct(_word_ngrams(n, short_whole_text))
+            ).alias("shingle_set"),
             *[F.col(c) for c in carry_cols],
         )
         .withColumn("set_size", F.size("shingle_set").cast("long"))
@@ -192,6 +207,44 @@ def shingle_sets(
     # times per row. The checkpoint truncates the tree so every consumer
     # (explode, sizes, verify arrays) reads stored values.
     return out.localCheckpoint(eager=False)
+
+
+def _shingle_overlaps(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_shingle_df: int
+) -> DataFrame:
+    """(id_a, id_b, intersection, size_a, size_b) for every document
+    pair sharing at least one shingle present in at most
+    ``max_shingle_df`` documents, id_a < id_b: the shared stage of the
+    exact shingle-overlap verifiers.
+
+    Both consumers (set sizes, pair counts) read ``shingle_sets`` —
+    per-document distinct arrays built scan-side — so there is no
+    corpus-wide (id, shingle) DISTINCT exchange and no groupBy(id) size
+    shuffle; the one wide shuffle is the groupBy(shingle) that the
+    algorithm needs. It yields both the document-frequency filter
+    (2 ≤ |ids| ≤ max_df) and the co-occurring id list, whose sorted
+    pair-explode replaces the classic shingle self-join, so per-shingle
+    fanout is bounded by max_df²/2. The df cap is the documented
+    completeness trade-off (at scale: also the skew guard). Nothing is
+    cached: sizes is a second scan-side pass that parallelizes
+    perfectly, and the exploded table is never materialized (several×
+    the corpus size at 100 TB)."""
+    ss = shingle_sets(df, id_col, text_col, n)
+    sh = ss.select("id", F.explode("shingle_set").alias("shingle"))
+    sizes = ss.select("id", "set_size")
+    inter = (
+        sh.groupBy("shingle")
+        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_shingle_df))
+        .select(F.explode(sorted_pairs("ids")).alias("p"))
+        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("intersection"))
+    )
+    return inter.join(
+        sizes.withColumnRenamed("id", "id_a").withColumnRenamed("set_size", "size_a"), "id_a"
+    ).join(
+        sizes.withColumnRenamed("id", "id_b").withColumnRenamed("set_size", "size_b"), "id_b"
+    )
 
 
 def ngram_jaccard_pairs(
@@ -207,40 +260,10 @@ def ngram_jaccard_pairs(
     size_b, jaccard) with id_a < id_b and jaccard ≥ threshold.
 
     ``max_shingle_df`` drops shingles present in more than that many
-    documents before pairing — bounds the self-join fanout (at scale:
-    also the skew guard).
-
-    r9 shape: both consumers (set sizes, pair counts) read
-    ``shingle_sets`` — per-document distinct arrays built scan-side —
-    so the corpus-wide (id, shingle) DISTINCT exchange and the
-    groupBy(id) size shuffle of the original shape are gone; the one
-    remaining wide shuffle is the groupBy(shingle) that the algorithm
-    actually needs. Nothing is cached: sizes is a second scan-side
-    pass that parallelizes perfectly, and the exploded table is never
-    materialized (several× the corpus size at 100 TB)."""
-    ss = shingle_sets(df, id_col, text_col, n)
-    sh = ss.select("id", F.explode("shingle_set").alias("shingle"))
-    sizes = ss.select("id", "set_size")
-    # One groupBy(shingle) yields both the document-frequency filter
-    # (2 ≤ |ids| ≤ max_df) and the co-occurring id list; exploding the
-    # sorted id-pair combinations replaces the classic shingle
-    # self-join — one shuffle instead of three, and the per-shingle
-    # fanout is bounded by max_df²/2 by construction.
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
-    inter = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_shingle_df))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("intersection"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("set_size", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("set_size", "size_b"), "id_b")
+    documents before pairing — bounds the self-join fanout (see
+    ``_shingle_overlaps`` for the plan shape)."""
+    return (
+        _shingle_overlaps(df, id_col, text_col, n, max_shingle_df)
         .withColumn(
             "jaccard",
             F.col("intersection").cast("double")
@@ -250,7 +273,6 @@ def ngram_jaccard_pairs(
         .select("id_a", "id_b", "intersection", "size_a", "size_b",
                 F.round("jaccard", 6).alias("jaccard"))
     )
-    return out
 
 
 def ngram_containment_pairs(
@@ -269,55 +291,18 @@ def ngram_containment_pairs(
     ``containment = intersection / min(size_a, size_b)`` (the larger
     of the two directed containments) ≥ threshold.
 
-    Scale shape is IDENTICAL to ngram_jaccard_pairs: one
-    groupBy(shingle) with df-capped sorted pair-explode (never a
-    shingle self-join), one groupBy(pair), two broadcast-size joins
-    for the set sizes. The df cap bounds fanout and is the documented
-    completeness trade-off shared with the Jaccard form. Sizes and
-    shingle rows both come from scan-side ``shingle_sets`` (r9): no
-    distinct exchange, no groupBy(id) size shuffle."""
-    ss = shingle_sets(df, id_col, text_col, n)
-    sh = ss.select("id", F.explode("shingle_set").alias("shingle"))
-    sizes = ss.select("id", "set_size")
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
-    inter = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_shingle_df))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("intersection"))
-    )
+    The pair counts and set sizes are ``ngram_jaccard_pairs``' own
+    (``_shingle_overlaps``); only the ratio differs."""
     return (
-        inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed(
-                "set_size", "size_a"
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "set_size", "size_b"
-            ),
-            "id_b",
-        )
+        _shingle_overlaps(df, id_col, text_col, n, max_shingle_df)
         .withColumn(
             "containment",
             F.col("intersection").cast("double")
             / F.least("size_a", "size_b").cast("double"),
         )
         .filter(F.col("containment") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "intersection",
-            "size_a",
-            "size_b",
-            F.round("containment", 6).alias("containment"),
-        )
+        .select("id_a", "id_b", "intersection", "size_a", "size_b",
+                F.round("containment", 6).alias("containment"))
     )
 
 
@@ -372,10 +357,16 @@ def minhash_band_rows(
     ``wide``: precomputed ``minhash_signatures_wide`` output. Pass it
     (checkpointed) when the caller also consumes the signatures
     directly — skips a second corpus-scale shingle+hash pass."""
-    assert num_hashes % rows_per_band == 0
     if wide is None:
         wide = minhash_signatures_wide(df, id_col, text_col, num_hashes, shingle_n)
-    n_bands = num_hashes // rows_per_band
+    return _band_rows(wide, num_hashes, rows_per_band)
+
+
+def _band_rows(sigs: DataFrame, num_hashes: int, rows_per_band: int) -> DataFrame:
+    """(id, band, bucket) rows of a signature table (id, m0..m{k-1}):
+    band b's bucket is the concatenation of its ``rows_per_band``
+    minhashes, one skinny row per band."""
+    assert num_hashes % rows_per_band == 0
     bands = F.array(
         *[
             F.struct(
@@ -384,10 +375,10 @@ def minhash_band_rows(
                     *[F.col(f"m{b * rows_per_band + p}") for p in range(rows_per_band)]
                 ).alias("bucket"),
             )
-            for b in range(n_bands)
+            for b in range(num_hashes // rows_per_band)
         ]
     )
-    return wide.select("id", F.explode(bands).alias("bb")).select(
+    return sigs.select("id", F.explode(bands).alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
 
@@ -420,17 +411,18 @@ def minhash_lsh_candidates(
     # groupBy + pair-explode instead of a bucket self-join: one shuffle
     # of (band, bucket) keys, and singleton buckets vanish in the
     # filter instead of flowing into a join probe side.
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
+    return _bucket_pairs(per_band).distinct()
+
+
+def _bucket_pairs(band_rows: DataFrame) -> DataFrame:
+    """(id_a, id_b) for every pair of ids sharing a (band, bucket), once
+    per shared bucket."""
     return (
-        per_band.groupBy("band", "bucket")
+        band_rows.groupBy("band", "bucket")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select(F.explode(sorted_pairs("ids")).alias("p"))
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
     )
 
 
@@ -450,47 +442,19 @@ def minhash_band_rows_stateless(
     aggregation: safe inside a Structured Streaming micro-batch (no
     stateful operator before the index join) and zero-shuffle in
     batch. The explode emits n_bands skinny rows per document."""
-    assert num_hashes % rows_per_band == 0
-    n = shingle_n
-    grams = (
-        f"CASE WHEN size(_tk) >= {n} THEN "
-        f"transform(sequence(1, size(_tk) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(_tk, i, {n}))) "
-        f"ELSE array() END"
-    )
     sigs = [
         F.expr(
             f"array_min(transform(_sh, x -> md5(concat('{s}', ':', x))))"
         ).alias(f"m{s}")
         for s in range(num_hashes)
     ]
-    n_bands = num_hashes // rows_per_band
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(
-                    *[F.col(f"m{b * rows_per_band + p}") for p in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.expr(
-                f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
-            ).alias("_tk"),
-        )
-        .select("id", F.expr(grams).alias("_sh"))
+    per_row = (
+        df.select(F.col(id_col).alias("id"), tokens_col(text_col).alias("_tk"))
+        .select("id", _word_ngrams(shingle_n).alias("_sh"))
         .filter(F.size("_sh") > 0)
         .select("id", *sigs)
-        .select("id", F.explode(bands).alias("bb"))
-        .select(
-            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
     )
+    return _band_rows(per_row, num_hashes, rows_per_band)
 
 
 def minhash_incremental_candidates(
@@ -529,18 +493,7 @@ def minhash_incremental_candidates(
             F.greatest(F.col("d.id"), F.col("b.id")).alias("id_b"),
         )
     )
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-    )
-    delta_self = (
-        d_bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-    )
-    return cross.unionByName(delta_self).distinct()
+    return cross.unionByName(_bucket_pairs(d_bands)).distinct()
 
 
 def simhash_signatures(
@@ -571,7 +524,6 @@ def simhash_signatures(
     shape)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     assert bits <= 60, "signature must fit a signed 64-bit int with headroom"
     hex_chars = (bits + 3) // 4
@@ -616,9 +568,7 @@ def simhash_signatures(
 
     toks_df = df.select(
         F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
-        ).alias("_toks"),
+        F.array_distinct(tokens_col(text_col)).alias("_toks"),
     ).filter(F.size("_toks") > 0)
     return toks_df.select("id", _simhash("_toks").alias("simhash"))
 
@@ -690,14 +640,9 @@ def simhash_candidates(
     )
 
     # (1) hamming-0 pairs: every id pair within one signature group
-    intra_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x AS id_a, y AS id_b))))"
-    )
     intra = (
         groups.filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(intra_expr)).alias("p"))
+        .select(F.explode(sorted_pairs("ids")).alias("p"))
         .select(
             F.col("p.id_a").alias("id_a"),
             F.col("p.id_b").alias("id_b"),
@@ -719,11 +664,6 @@ def simhash_candidates(
     per_band = dsig.select("simhash", F.explode(band_arr).alias("bb")).select(
         "simhash", F.col("bb.band").alias("band"), F.col("bb.val").alias("val")
     )
-    pair_expr = (
-        "flatten(transform(ss, (x, i) -> "
-        "transform(slice(ss, i + 2, size(ss)), "
-        "y -> struct(x AS s_a, y AS s_b))))"
-    )
     # (3) multi-band dedup as a filter: keep a signature pair only in
     # the LOWEST band in which the two signatures collide — decidable
     # from (s_a, s_b, band) alone, so no DISTINCT exchange is needed.
@@ -735,8 +675,8 @@ def simhash_candidates(
         per_band.groupBy("band", "val")
         .agg(F.array_sort(F.collect_list("simhash")).alias("ss"))
         .filter(F.size("ss") >= 2)
-        .select("band", F.explode(F.expr(pair_expr)).alias("p"))
-        .select("band", F.col("p.s_a").alias("s_a"), F.col("p.s_b").alias("s_b"))
+        .select("band", F.explode(sorted_pairs("ss")).alias("p"))
+        .select("band", F.col("p.id_a").alias("s_a"), F.col("p.id_b").alias("s_b"))
         .filter(F.expr(first_band))
         .withColumn("hamming", F.expr("bit_count(s_a ^ s_b)"))
         .filter(F.col("hamming") <= max_hamming)
@@ -1014,6 +954,72 @@ def assert_blocked_pair_budget(
     return total
 
 
+def _blocked_text_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_cols: tuple[str, ...],
+    max_pairs: int | None,
+    op_name: str,
+) -> DataFrame:
+    """Candidate pairs of the blocked scorers: (k_<block col>..., id_a,
+    text_a, id_b, text_b) for every left/right row pair that agrees on
+    all ``block_cols``. Candidates come from an ordinary equi-join on
+    the block keys, never a cartesian product, so Σ_b |left_b|·|right_b|
+    bounds the scored pairs at any scale. Unless ``max_pairs`` is None,
+    that bound is checked up front (``assert_blocked_pair_budget``,
+    eager) and the operator fails loud naming the hot blocks instead of
+    silently launching a quadratic job."""
+    keys = [f"k_{c}" for c in block_cols]
+    a = left.select(
+        F.col(id_col).alias("id_a"),
+        F.col(text_col).alias("text_a"),
+        *[F.col(c).alias(k) for c, k in zip(block_cols, keys)],
+    )
+    b = right.select(
+        F.col(id_col).alias("id_b"),
+        F.col(text_col).alias("text_b"),
+        *[F.col(c).alias(k) for c, k in zip(block_cols, keys)],
+    )
+    if max_pairs is not None:
+        assert_blocked_pair_budget(a, b, keys, max_pairs, op_name)
+    return a.join(b, keys)
+
+
+def _pair_cap(pct: float) -> Column:
+    """Each pair's distance cap: ``pct``% of its longer text."""
+    return (F.greatest(F.length("text_a"), F.length("text_b")) * pct) / 100
+
+
+def _levenshtein_within(pairs: DataFrame, pct: float) -> DataFrame:
+    """``pairs`` with ``lev_dist``, the Levenshtein distance of text_a
+    and text_b, kept where it is at most ``pct``% of the longer text.
+    Both engines implement identical classic single-character edit
+    distance (insert/delete/substitute).
+
+    Banded early-exit DP: Spark's 3-arg ``levenshtein(l, r, T)``
+    computes only the |i-j| <= T diagonal band and returns -1 as soon
+    as the distance provably exceeds T — O(n·T) instead of the full
+    O(n·m) table. T = greatest(1, floor(max(len_a, len_b)·pct/100)) is
+    each pair's own cap, so the output is exact: integer d <= cap ⟺
+    d <= T → exact distance; d > cap ⇒ d > T → -1 → filtered. The band
+    uses the exact ``pct`` (CAST truncates toward zero), never int(pct),
+    which would band tighter than the cap for a fractional pct. At 10%
+    this is ~10x less DP work per scored pair: measured against the
+    full DP on identical outputs, 7.9x at the 1x layout (17.0 -> 2.15 s)
+    and 11.3x at 10x (227 -> 20.1 s); at 100x (442M pairs) the banded
+    form finishes in 831 s where the full DP could not complete one
+    pass in 900+ s (PERF.md r10). Construction runs no job."""
+    lev = F.expr(
+        "levenshtein(text_a, text_b, greatest(1, CAST("
+        f"greatest(length(text_a), length(text_b)) * {pct!r} / 100 AS INT)))"
+    )
+    return pairs.withColumn("lev_dist", lev.cast("long")).filter(
+        (F.col("lev_dist") >= 0) & (F.col("lev_dist") <= _pair_cap(pct))
+    )
+
+
 def blocked_levenshtein_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -1027,7 +1033,7 @@ def blocked_levenshtein_pairs(
     join. Candidate pairs come only from the SAME block — the categorical
     ``block_cols`` plus a text-length band (``length DIV band_chars``) —
     then each pair is verified with exact Levenshtein distance at most
-    ``max_rel_dist_pct``% of the longer text.
+    ``max_rel_dist_pct``% of the longer text (``_levenshtein_within``).
 
     This is the classical record-linkage blocking pattern: the O(n²)
     all-pairs comparison collapses to Σ_b |b|² over blocks, and the
@@ -1041,90 +1047,25 @@ def blocked_levenshtein_pairs(
     the allowed distance can never match, and a relative threshold of
     10% with 64-char bands misses only pairs straddling a band edge —
     the standard multi-pass blocking tradeoff, documented rather than
-    hidden. Both engines implement identical classic single-character
-    edit distance (insert/delete/substitute).
+    hidden.
 
     ``max_pairs`` guards the quadratic term: the self-join budget
     Σ_b |b|² (a conservative 2× bound on the id<id pairs actually
-    scored) is checked up front and the operator fails loud naming the
-    hot blocks instead of silently launching a quadratic job.
-
-    Eagerness contract (r11 ADVICE closure, simplified r12): when
-    ``max_pairs`` is not None, construction runs ONE eager one-row
-    aggregate over ``docs`` — the pair-budget check, a
-    **construction-time snapshot** (rebuild the plan after appends).
-    With ``max_pairs=None`` construction is fully plan-only (matching
-    ``assert_blocked_pair_budget``'s documented escape hatch). The
-    banded early-exit DP no longer needs a snapshot at all: since r12
-    the threshold is a per-row expression (each pair's own 10% cap),
-    so EVERY path — including ``max_pairs=None`` — gets the banded
-    verifier with zero eager jobs and no staleness caveat.
+    scored) is checked up front — ONE eager one-row aggregate over
+    ``docs`` at construction, a **construction-time snapshot** (rebuild
+    the plan after appends). With ``max_pairs=None`` construction is
+    plan-only (``assert_blocked_pair_budget``'s documented escape
+    hatch); the banded verifier needs no snapshot either way.
     """
-    keys = [F.col(c) for c in block_cols] + [
-        F.expr(f"length({text_col}) DIV {band_chars}").alias("band")
-    ]
-    d = docs.select(
-        F.col(id_col), F.col(text_col), *keys
+    banded = docs.withColumn(
+        "band", F.expr(f"length({text_col}) DIV {band_chars}")
     )
-    if max_pairs is not None:
-        assert_blocked_pair_budget(
-            d, d, [*block_cols, "band"], max_pairs,
-            "blocked_levenshtein_pairs",
-        )
-    a = d.select(*[F.col(c).alias(f"a_{c}") for c in d.columns])
-    b = d.select(*[F.col(c).alias(f"b_{c}") for c in d.columns])
-    on = [F.col(f"a_{c}") == F.col(f"b_{c}") for c in (*block_cols, "band")]
-    # Banded early-exit DP (r10): Spark's 3-arg levenshtein(l, r, T)
-    # computes only the |i-j| <= T diagonal band and bails with -1 the
-    # moment the distance provably exceeds T — O(n*T) instead of the
-    # full O(n*m) table. Every per-pair cap is <= ceil(global_max_len
-    # * pct / 100), so T at that global bound loses NO pair the full
-    # DP would keep (distances <= cap <= T come back exact; -1 rows
-    # were above T > cap, excluded either way). At 10% relative
-    # distance this is ~10x less DP work per scored pair — measured
-    # end-to-end against the full-DP form on identical outputs: 7.9x
-    # at 1x (17.0 -> 2.15 s) and 11.3x at the 10x layout (227 -> 20.1
-    # s); at the saturated 100x layout (442M pairs, explicit budget)
-    # the banded form finishes in 831 s min-of-3 where full DP could
-    # not complete one pass in 900+ s (PERF.md r10).
-    # r12 (optimization round): the threshold is now a PER-ROW
-    # expression — T = greatest(1, floor(max(len_a, len_b)·pct/100)) —
-    # so the band is sized by each pair's own cap instead of the
-    # corpus-global max-length snapshot. This removes the second eager
-    # aggregate (and its staleness caveat) entirely, makes the banded
-    # verifier available on the plan-only max_pairs=None path too, and
-    # does strictly less DP work per pair on any skewed-length corpus
-    # (the old global T over-banded every short pair). Output is
-    # unchanged: integer d <= cap ⟺ d <= floor(cap) = T → exact
-    # distance; d > cap ⇒ d > T → -1 → filtered below.
-    # r13 (ADVICE): the band is built from the EXACT pct value — the
-    # same one the keep-filter cap below uses — not int(pct): with a
-    # fractional pct an int()-floored band would be TIGHTER than the
-    # cap and silently drop pairs with floor-pct-band < d <= cap.
-    # CAST(.. AS INT) truncates toward zero, so T = floor(cap) and
-    # integer d <= cap ⟺ d <= T for any non-negative pct. For integer
-    # pct the SQL text (and thus the plan) is unchanged.
-    lev = F.expr(
-        f"levenshtein(a_{text_col}, b_{text_col}, greatest(1, CAST("
-        f"greatest(length(a_{text_col}), length(b_{text_col}))"
-        f" * {max_rel_dist_pct!r} / 100 AS INT)))"
-    )
-    cap = (
-        F.greatest(
-            F.length(F.col(f"a_{text_col}")), F.length(F.col(f"b_{text_col}"))
-        )
-        * max_rel_dist_pct
-    ) / 100
-    return (
-        a.join(b, on)
-        .filter(F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
-        .withColumn("lev_dist", lev.cast("long"))
-        .filter((F.col("lev_dist") >= 0) & (F.col("lev_dist") <= cap))
-        .select(
-            F.col(f"a_{id_col}").alias("doc_id_a"),
-            F.col(f"b_{id_col}").alias("doc_id_b"),
-            "lev_dist",
-        )
+    pairs = _blocked_text_pairs(
+        banded, banded, text_col, id_col, (*block_cols, "band"), max_pairs,
+        "blocked_levenshtein_pairs",
+    ).filter(F.col("id_a") < F.col("id_b"))
+    return _levenshtein_within(pairs, max_rel_dist_pct).select(
+        F.col("id_a").alias("doc_id_a"), F.col("id_b").alias("doc_id_b"), "lev_dist"
     )
 
 
@@ -1293,6 +1234,56 @@ def _damerau_levenshtein_capped(a: str, b: str, cap: int) -> int:
     return res if res <= cap else cap + 1
 
 
+# The Arrow scorers. Kernels carry no inline annotations (``from
+# __future__ import annotations`` turns them into strings pandas_udf
+# cannot resolve) and the UDFs take DataType objects, not DDL strings:
+# parsing a DDL string needs a live session, and these are built at
+# import.
+def _damerau_kernel(sa, sb, caps):
+    import pandas as pd
+
+    # caps arrive as float64 when the batch holds a NULL cap (a NULL
+    # text), hence int(); NULL texts score -1 and are filtered.
+    return pd.Series(
+        [
+            _damerau_levenshtein_capped(a, b, int(c))
+            if a is not None and b is not None
+            else -1
+            for a, b, c in zip(sa, sb, caps)
+        ],
+        dtype="int64",
+    )
+
+
+_damerau_udf = F.pandas_udf(_damerau_kernel, T.LongType())
+
+
+def _damerau_within(pairs: DataFrame, cap: Column) -> DataFrame:
+    """``pairs`` with ``dl_dist``, the Damerau-Levenshtein distance of
+    text_a and text_b, kept where it is at most the per-row ``cap``.
+    Spark has no damerau builtin, so the scorer is an Arrow pandas_udf
+    over ``_damerau_levenshtein_capped``: exact for distances <= cap,
+    cap + 1 past it, at O(len·cap) band cost instead of O(len²)."""
+    return pairs.withColumn(
+        "dl_dist", _damerau_udf(F.col("text_a"), F.col("text_b"), cap)
+    ).filter((F.col("dl_dist") >= 0) & (F.col("dl_dist") <= cap))
+
+
+def _jaro_winkler_kernel(sa, sb):
+    import pandas as pd
+
+    return pd.Series(
+        [
+            _jaro_winkler_py(a, b) if a is not None and b is not None else 0.0
+            for a, b in zip(sa, sb)
+        ],
+        dtype="float64",
+    )
+
+
+_jaro_winkler_udf = F.pandas_udf(_jaro_winkler_kernel, T.DoubleType())
+
+
 def blocked_damerau_pairs(
     left: DataFrame,
     right: DataFrame,
@@ -1305,51 +1296,17 @@ def blocked_damerau_pairs(
     """Transposition-aware fuzzy pair finder — completes the string-
     similarity family (Levenshtein for raw edits, Jaro-Winkler for
     prefix-weighted short identifiers, Damerau for typo-shaped data
-    where swapped adjacent characters are ONE error, not two). Spark
-    has no damerau builtin, so the scorer is an Arrow pandas_udf over
-    block-key equi-join candidates; the Σ_b |l_b|·|r_b| cost bound is
-    ENFORCED up front via ``assert_blocked_pair_budget`` (the Damerau
-    DP is the slowest scorer in the family — PERF.md — so a silent hot
-    block hurts most here)."""
-    import pandas as pd
-
-    # NB: no type annotations on the kernel (see jw below). The
-    # capped kernel returns the exact distance for <= max_dist and
-    # max_dist+1 past it — identical output after the filter, at
-    # O(len·max_dist) band cost instead of O(len²) (r12).
-    @F.pandas_udf("long")
-    def dl(sa, sb):
-        return pd.Series(
-            [
-                _damerau_levenshtein_capped(a, b, max_dist)
-                if a is not None and b is not None
-                else -1
-                for a, b in zip(sa, sb)
-            ],
-            dtype="int64",
-        )
-
-    a = left.select(
-        F.col(id_col).alias("id_a"),
-        F.col(text_col).alias("text_a"),
-        *[F.col(c).alias(f"k_{c}") for c in block_cols],
+    where swapped adjacent characters are ONE error, not two). The
+    scorer is the capped Damerau Arrow UDF over block-key equi-join
+    candidates; the Σ_b |l_b|·|r_b| cost bound is ENFORCED up front via
+    ``assert_blocked_pair_budget`` (the Damerau DP is the slowest
+    scorer in the family — PERF.md — so a silent hot block hurts most
+    here)."""
+    pairs = _blocked_text_pairs(
+        left, right, text_col, id_col, block_cols, max_pairs,
+        "blocked_damerau_pairs",
     )
-    b = right.select(
-        F.col(id_col).alias("id_b"),
-        F.col(text_col).alias("text_b"),
-        *[F.col(c).alias(f"k_{c}") for c in block_cols],
-    )
-    if max_pairs is not None:
-        assert_blocked_pair_budget(
-            a, b, [f"k_{c}" for c in block_cols], max_pairs,
-            "blocked_damerau_pairs",
-        )
-    return (
-        a.join(b, [f"k_{c}" for c in block_cols])
-        .withColumn("dl_dist", dl(F.col("text_a"), F.col("text_b")))
-        .filter((F.col("dl_dist") >= 0) & (F.col("dl_dist") <= max_dist))
-        .select("id_a", "id_b", "dl_dist")
-    )
+    return _damerau_within(pairs, F.lit(max_dist)).select("id_a", "id_b", "dl_dist")
 
 
 def blocked_jaro_winkler_pairs(
@@ -1371,39 +1328,12 @@ def blocked_jaro_winkler_pairs(
     cartesian product at any scale — Σ_b |left_b|·|right_b| bounds the
     scored pairs exactly as in the Levenshtein verifier.
     """
-    import pandas as pd
-
-    # NB: no type annotations — `from __future__ import annotations`
-    # turns them into strings, which pandas_udf cannot resolve; the
-    # return type is declared in the decorator instead.
-    @F.pandas_udf("double")
-    def jw(sa, sb):
-        return pd.Series(
-            [
-                _jaro_winkler_py(a, b) if a is not None and b is not None else 0.0
-                for a, b in zip(sa, sb)
-            ],
-            dtype="float64",
-        )
-
-    a = left.select(
-        F.col(id_col).alias("id_a"),
-        F.col(text_col).alias("text_a"),
-        *[F.col(c).alias(f"k_{c}") for c in block_cols],
+    pairs = _blocked_text_pairs(
+        left, right, text_col, id_col, block_cols, max_pairs,
+        "blocked_jaro_winkler_pairs",
     )
-    b = right.select(
-        F.col(id_col).alias("id_b"),
-        F.col(text_col).alias("text_b"),
-        *[F.col(c).alias(f"k_{c}") for c in block_cols],
-    )
-    if max_pairs is not None:
-        assert_blocked_pair_budget(
-            a, b, [f"k_{c}" for c in block_cols], max_pairs,
-            "blocked_jaro_winkler_pairs",
-        )
     return (
-        a.join(b, [f"k_{c}" for c in block_cols])
-        .withColumn("jw_sim", jw(F.col("text_a"), F.col("text_b")))
+        pairs.withColumn("jw_sim", _jaro_winkler_udf(F.col("text_a"), F.col("text_b")))
         .filter(F.col("jw_sim") >= min_sim)
         .select("id_a", "id_b", F.round("jw_sim", 6).alias("jw_sim"))
     )
@@ -1471,9 +1401,7 @@ def winnow_fingerprints(
     grams = (
         df.select(
             F.col(id_col).alias("id"),
-            F.expr(
-                f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
-            ).alias("tk"),
+            tokens_col(text_col).alias("tk"),
         )
         .filter(F.size("tk") >= k + w - 1)  # need at least one full window
         .select(
@@ -1507,16 +1435,11 @@ def winnow_pairs(
     docs carry no pair signal and would fan out quadratically), sorted
     pair-explode, pair-count aggregate. Never an all-pairs self-join."""
     fps = winnow_fingerprints(df, id_col, text_col, k, w)
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(x AS id_a, y AS id_b))))"
-    )
     return (
         fps.groupBy("fp")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select(F.explode(sorted_pairs("ids")).alias("p"))
         .groupBy(
             F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
         )
@@ -1817,42 +1740,21 @@ def candidate_levenshtein_pairs(
 
     Scale shape: the candidate stage is ``prefix_filter_jaccard_pairs``
     (one df-count shuffle + prefix equi-join, sort-merge everywhere,
-    no all-pairs stage); the verify stage joins texts back by id
-    (sort-merge — corpus-proportional sides never broadcast, the r9
-    cluster lesson) and scores ONLY candidate pairs. The verifier is
-    Spark's 3-arg banded early-exit levenshtein with a PER-ROW
-    threshold (each pair's own 10% cap — O(len·T_pair) instead of
-    O(len²) per pair; no eager job and no construction-time snapshot:
-    construction is plan-only).
+    no all-pairs stage), whose verify joins carry both texts
+    (``_candidate_text_pairs``), and ONLY candidate pairs are scored.
+    The verifier is ``_levenshtein_within``, the banded early-exit
+    levenshtein with a PER-ROW threshold (each pair's own cap —
+    O(len·T_pair) instead of O(len²) per pair); construction is
+    plan-only.
     """
     cand = _candidate_text_pairs(
         docs, id_col, text_col, n, jaccard_floor, short_whole_text
     )
-    # Spark's 3-arg levenshtein takes a PER-ROW threshold, so the band
-    # is sized by each pair's own cap — T = greatest(1, floor(max(len_a,
-    # len_b) · pct / 100)). Exact: integer d <= cap ⟺ d <= T → exact
-    # distance returned; d > T → -1 → filtered. Each pair's DP band is
-    # ~pct% of ITS length, and construction runs no job. The band uses
-    # the exact pct, not int(pct) (see blocked_levenshtein_pairs): a
-    # fractional pct must not band tighter than the cap filter.
-    lev = F.expr(
-        "levenshtein(_text_a, _text_b, greatest(1, CAST("
-        f"greatest(length(_text_a), length(_text_b)) * {max_rel_dist_pct!r}"
-        " / 100 AS INT)))"
-    )
-    cap = (
-        F.greatest(F.length("_text_a"), F.length("_text_b"))
-        * max_rel_dist_pct
-    ) / 100
-    return (
-        cand.withColumn("lev_dist", lev.cast("long"))
-        .filter((F.col("lev_dist") >= 0) & (F.col("lev_dist") <= cap))
-        .select(
-            F.col("id_a").alias("doc_id_a"),
-            F.col("id_b").alias("doc_id_b"),
-            "jaccard",
-            "lev_dist",
-        )
+    return _levenshtein_within(cand, max_rel_dist_pct).select(
+        F.col("id_a").alias("doc_id_a"),
+        F.col("id_b").alias("doc_id_b"),
+        "jaccard",
+        "lev_dist",
     )
 
 
@@ -1866,8 +1768,8 @@ def _candidate_text_pairs(
 ) -> DataFrame:
     """Shared candidate stage of the candidate-first verifier family:
     prefix-filter SSJoin candidates (lossless at the Jaccard floor)
-    with both raw texts attached — (id_a, id_b, jaccard, _text_a,
-    _text_b). r12 (optimization round): the texts now RIDE the prefix
+    with both raw texts attached — (id_a, id_b, jaccard, text_a,
+    text_b). r12 (optimization round): the texts now RIDE the prefix
     filter's own verify joins via ``carry_cols`` instead of two
     additional corpus-scale sort-merge join-backs — the verify join
     already shuffles by id_a/id_b, so attaching text there widens
@@ -1888,8 +1790,8 @@ def _candidate_text_pairs(
         "id_a",
         "id_b",
         "jaccard",
-        F.col(f"{text_col}_a").alias("_text_a"),
-        F.col(f"{text_col}_b").alias("_text_b"),
+        F.col(f"{text_col}_a").alias("text_a"),
+        F.col(f"{text_col}_b").alias("text_b"),
     )
 
 
@@ -1929,55 +1831,22 @@ def candidate_damerau_pairs(
     Returns (doc_id_a, doc_id_b, jaccard, dl_dist).
 
     Scale shape: identical to ``candidate_levenshtein_pairs`` except
-    the verifier is the ``_damerau_levenshtein_py`` Arrow pandas_udf
-    (Spark has no damerau builtin — the extension tier's documented
-    Python boundary, fuzz-verified against DuckDB); construction is
-    fully plan-only (no eager aggregate — the Damerau DP has no
-    banded builtin to size)."""
-    import math
-
-    import pandas as pd
-
-    # exact pct, not int(pct) — see blocked_levenshtein_pairs (a
-    # fractional pct must not cap the kernel tighter than the filter)
-    pct = max_rel_dist_pct
-
-    # NB: no type annotations on the kernel — `from __future__ import
-    # annotations` turns them into strings pandas_udf can't resolve.
-    # The per-pair cap ⌊max_len·pct/100⌋ makes the capped kernel's
-    # output exact for every pair the filter keeps (dl <= cap_double
-    # ⟺ dl <= ⌊cap_double⌋ for integer dl) at O(len·cap) band cost —
-    # the full O(len²) DP made this the slowest verifier by ~8x.
-    @F.pandas_udf("long")
-    def dl(sa, sb):
-        return pd.Series(
-            [
-                _damerau_levenshtein_capped(
-                    a, b, math.floor(max(len(a), len(b)) * pct / 100)
-                )
-                if a is not None and b is not None
-                else -1
-                for a, b in zip(sa, sb)
-            ],
-            dtype="int64",
-        )
-
+    the verifier is ``_damerau_within``, the capped Damerau Arrow UDF
+    that ``blocked_damerau_pairs`` also uses, here with each pair's own
+    cap (the kernel is fuzz-verified against DuckDB's full DP);
+    construction is fully plan-only."""
     cand = _candidate_text_pairs(
         docs, id_col, text_col, n, jaccard_floor, short_whole_text
     )
-    cap = (
-        F.greatest(F.length("_text_a"), F.length("_text_b"))
-        * max_rel_dist_pct
-    ) / 100
-    return (
-        cand.withColumn("dl_dist", dl(F.col("_text_a"), F.col("_text_b")))
-        .filter((F.col("dl_dist") >= 0) & (F.col("dl_dist") <= cap))
-        .select(
-            F.col("id_a").alias("doc_id_a"),
-            F.col("id_b").alias("doc_id_b"),
-            "jaccard",
-            "dl_dist",
-        )
+    # The per-pair cap ⌊max_len·pct/100⌋ keeps the capped kernel exact
+    # for every pair the filter keeps (integer dl <= cap ⟺ dl <=
+    # ⌊cap⌋); floor of the exact pct, never int(pct), which would cap
+    # tighter for a fractional pct.
+    return _damerau_within(cand, F.floor(_pair_cap(max_rel_dist_pct))).select(
+        F.col("id_a").alias("doc_id_a"),
+        F.col("id_b").alias("doc_id_b"),
+        "jaccard",
+        "dl_dist",
     )
 
 
@@ -2015,28 +1884,14 @@ def candidate_jaro_winkler_pairs(
     Returns (doc_id_a, doc_id_b, jaccard, jw_sim rounded to 6).
 
     Scale shape: identical to ``candidate_levenshtein_pairs`` except
-    the verifier is the ``_jaro_winkler_py`` Arrow pandas_udf
-    (DuckDB-exact, fuzz-verified); construction fully plan-only."""
-    import pandas as pd
-
-    # NB: no type annotations on the kernel (see candidate_damerau).
-    @F.pandas_udf("double")
-    def jw(sa, sb):
-        return pd.Series(
-            [
-                _jaro_winkler_py(a, b)
-                if a is not None and b is not None
-                else 0.0
-                for a, b in zip(sa, sb)
-            ],
-            dtype="float64",
-        )
-
+    the verifier is the Jaro-Winkler Arrow UDF of
+    ``blocked_jaro_winkler_pairs`` (``_jaro_winkler_py``, DuckDB-exact,
+    fuzz-verified); construction fully plan-only."""
     cand = _candidate_text_pairs(
         docs, id_col, text_col, n, jaccard_floor, short_whole_text
     )
     return (
-        cand.withColumn("jw_sim", jw(F.col("_text_a"), F.col("_text_b")))
+        cand.withColumn("jw_sim", _jaro_winkler_udf(F.col("text_a"), F.col("text_b")))
         .filter(F.col("jw_sim") >= F.lit(float(min_sim)))
         .select(
             F.col("id_a").alias("doc_id_a"),

@@ -8,10 +8,10 @@ Three tiers:
 - ``ivf_topk`` — IVF-style: coarse-quantize vectors into sign-pattern
   cells (first ``ivf_bits`` components' signs); search only the
   query's cell. SQL-expressible, deterministic, oracle-checkable.
-- ``lsh_hyperplane_topk`` / ``lsh_multitable_topk`` — random-
-  hyperplane LSH with seeded numpy hyperplanes via a vectorized
-  Pandas UDF (Arrow batches): the scale path when cells must be
-  data-independent. The multi-table (OR-amplified) variant is the
+- ``lsh_multitable_topk`` — random-hyperplane LSH with seeded numpy
+  hyperplanes via a vectorized Pandas UDF (Arrow batches): the scale
+  path when cells must be data-independent. ``n_tables=1`` is
+  single-table LSH; the multi-table (OR-amplified) default is the
   production form — single-table recall collapses as planes grow.
   The hashing is not SQL-expressible, so the registry query emits a
   bounds-style envelope (recall vs brute force ≥ threshold) that the
@@ -254,73 +254,6 @@ def ivf_topk(
     )
 
 
-def lsh_hyperplane_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector via a vectorized
-    Pandas UDF (Arrow batch in, numpy matmul, batch out). The
-    hyperplane matrix is generated from ``seed`` on the driver and
-    closed over (tiny; re-broadcast per task by Spark)."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes)).astype("float64")
-
-    # NB: no type annotations — `from __future__ import annotations`
-    # turns them into strings, which pandas_udf cannot resolve; the
-    # return type is declared in the decorator instead.
-    @F.pandas_udf("int")
-    def bucket(vecs):
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
-        signs = (m.astype("float64") @ planes) > 0  # (batch, planes)
-        weights = (1 << np.arange(n_planes)).astype("int64")
-        return pd.Series((signs @ weights).astype("int32"))
-
-    return df.withColumn("lsh_bucket", bucket(F.col(vec_col)))
-
-
-def lsh_hyperplane_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k searching only the query's LSH bucket."""
-    q = lsh_hyperplane_buckets(queries, id_col, vec_col, n_planes, seed, dim).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        "lsh_bucket",
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = lsh_hyperplane_buckets(candidates, id_col, vec_col, n_planes, seed, dim).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        "lsh_bucket",
-        _norm(F.col(vec_col)).alias("_cn"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "lsh_bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", _cosine_prenorm())
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"))
-    )
-
-
 def lsh_multitable_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -348,9 +281,9 @@ def lsh_multitable_topk(
     join on (table, bucket), candidate ids deduped WITHOUT carrying
     vectors, then one join back to fetch candidate vectors for exact
     scoring. Cost is O(L · n/2^planes) candidates per query — linear
-    in corpus size, never all-pairs. Per-table planes are generated
-    from ``seed + table`` exactly like ``lsh_hyperplane_buckets``, so
-    results are bit-identical to running L single tables."""
+    in corpus size, never all-pairs. Table i's planes are generated
+    from ``seed + i``, so ``n_tables=1`` is the single-table form and
+    L tables give the union of L independent single tables."""
     import numpy as np
     import pandas as pd
 

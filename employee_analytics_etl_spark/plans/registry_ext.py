@@ -131,9 +131,10 @@ def doc_lang_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang_pred",
         F.size(TX.tokens_col("text")).alias("n_tokens"),
         F.coalesce(
-            F.expr(
-                "aggregate(transform(regexp_extract_all(lower(text),"
-                " '[a-z0-9]+', 0), x -> length(x)), 0, (a, x) -> a + x)"
+            F.aggregate(
+                F.transform(TX.tokens_col("text"), F.length),
+                F.lit(0),
+                lambda a, x: a + x,
             ),
             F.lit(0),
         ).alias("n_tok_chars"),
@@ -2656,16 +2657,12 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix_filter_jaccard_pairs).
     sh = D.shingles(docs, id_col="source", text_col="text")
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS a, y AS b))))"
-    )
     shared = (
         sh.groupBy("shingle")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy(F.col("p.a").alias("source_a"), F.col("p.b").alias("source_b"))
+        .select(F.explode(D.sorted_pairs("ids")).alias("p"))
+        .groupBy(F.col("p.id_a").alias("source_a"), F.col("p.id_b").alias("source_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
     return (

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import graph as G
+from ..operators.dedup import sorted_pairs
+from ..operators.text import tokens_col
 from .registry import query, t
 from .registry_ext import _SHINGLES_CTE, _lang_count_sql
 
@@ -45,11 +47,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     blow-up. array_distinct before pairing: a part appearing twice in
     one order must not emit a self-pair."""
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pair_expr = (
-        "flatten(transform(pk, (x, i) -> "
-        "transform(slice(pk, i + 2, size(pk)), "
-        "y -> struct(x AS u, y AS v))))"
-    )
     return (
         li.groupBy("l_orderkey")
         .agg(
@@ -57,8 +54,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(F.collect_list("l_partkey"))
             ).alias("pk")
         )
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
+        .select(F.explode(sorted_pairs("pk")).alias("p"))
+        .select(F.col("p.id_a").alias("u"), F.col("p.id_b").alias("v"))
         .distinct()
     )
 
@@ -910,9 +907,7 @@ def doc_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.expr("regexp_extract_all(lower(text), '([a-z0-9]+)', 1)")
-        ).alias("tok"),
+        F.explode(tokens_col("text")).alias("tok"),
     ).localCheckpoint(eager=False)  # vocab build + rate scan
     vocab = (
         toks.groupBy("tok")
@@ -1187,9 +1182,7 @@ def doc_token_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.expr("regexp_extract_all(lower(text), '([a-z0-9]+)', 1)")
-        ).alias("tok"),
+        F.explode(tokens_col("text")).alias("tok"),
     )
     c = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     n = c.groupBy("source").agg(
@@ -2181,9 +2174,7 @@ def sketch_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-compared exactly, not just bounds-checked."""
     docs = t(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.expr("regexp_extract_all(lower(text), '([a-z0-9]+)', 1)")
-        ).alias("tok")
+        F.explode(tokens_col("text")).alias("tok")
     ).localCheckpoint(eager=False)  # feeds the sketch AND exact counts
     d_rows, width = 4, 512
     seeds = F.array(*[F.lit(s) for s in range(d_rows)])
@@ -3316,17 +3307,13 @@ def source_exact_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = docs.select(
         "source", F.md5("text").alias("content_md5")
     ).distinct()
-    pair_expr = (
-        "flatten(transform(ss, (x, i) -> "
-        "transform(slice(ss, i + 2, size(ss)), y -> struct(x AS a, y AS b))))"
-    )
     shared = (
         h.groupBy("content_md5")
         .agg(F.array_sort(F.collect_list("source")).alias("ss"))
         .filter(F.size("ss") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select(F.explode(sorted_pairs("ss")).alias("p"))
         .groupBy(
-            F.col("p.a").alias("source_a"), F.col("p.b").alias("source_b")
+            F.col("p.id_a").alias("source_a"), F.col("p.id_b").alias("source_b")
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -3336,9 +3323,9 @@ def source_exact_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source")
         .distinct()
         .agg(F.array_sort(F.collect_list("source")).alias("ss"))
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select(F.explode(sorted_pairs("ss")).alias("p"))
         .select(
-            F.col("p.a").alias("source_a"), F.col("p.b").alias("source_b")
+            F.col("p.id_a").alias("source_a"), F.col("p.id_b").alias("source_b")
         )
     )
     return grid.join(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import sorted_pairs
+from ..operators.text import tokens_col
 from .registry import query, t
 
 EPOCH = "1970-01-01"
@@ -206,9 +208,7 @@ def source_token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.expr("regexp_extract_all(lower(text), '([a-z0-9]+)', 1)")
-        ).alias("tok"),
+        F.explode(tokens_col("text")).alias("tok"),
     )
     # c/p each feed several joins below — checkpoint so the
     # tokenize+count subtree runs ONCE, not once per consumer
@@ -229,16 +229,12 @@ def source_token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS a, y AS b))))"
-    )
     pairs = (
         c.select("source")
         .distinct()
         .agg(F.array_sort(F.collect_list("source")).alias("ids"))
-        .select(F.explode(F.expr(pair_expr)).alias("pr"))
-        .select(F.col("pr.a").alias("sa"), F.col("pr.b").alias("sb"))
+        .select(F.explode(sorted_pairs("ids")).alias("pr"))
+        .select(F.col("pr.id_a").alias("sa"), F.col("pr.id_b").alias("sb"))
     )
     grid = (
         p.join(F.broadcast(pairs), F.col("source") == F.col("sa"))
@@ -346,11 +342,7 @@ def token_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "), s -> s.b IS NOT NULL)))"
     )
     return (
-        docs.select(
-            F.expr(
-                "regexp_extract_all(lower(text), '([a-z0-9]+)', 1)"
-            ).alias("tk")
-        )
+        docs.select(tokens_col("text").alias("tk"))
         .select(F.explode(F.expr(pair_expr)).alias("pr"))
         .groupBy(
             F.col("pr.a").alias("tok_a"), F.col("pr.b").alias("tok_b")
@@ -363,9 +355,6 @@ def token_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(50)
     )
-
-
-_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
 
 
 @query(
@@ -448,7 +437,7 @@ def doc_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source").isin("src0", "src1", "src2", "src3").alias(
             "is_target"
         ),
-        F.expr(_TOKS).alias("_tk"),
+        tokens_col("text").alias("_tk"),
     )
     bk = (
         "transform(_tk, t -> "
@@ -605,7 +594,7 @@ def doc_nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded fanout x5, SCALAR_BNLJ_OK); the final confusion matrix
     is a <=25-row aggregate."""
     docs = t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.expr(_TOKS).alias("_tk")
+        "doc_id", "lang", tokens_col("text").alias("_tk")
     )
     train = docs.filter(F.col("doc_id") % 5 != 0)
     # r12 (optimization round): the test projection feeds tdocs AND
@@ -1033,14 +1022,9 @@ def copurchase_item_similarity_topk(
             "pk"
         )
     )
-    pair_expr = (
-        "flatten(transform(pk, (x, i) -> "
-        "transform(slice(pk, i + 2, size(pk)), "
-        "y -> struct(x AS u, y AS v))))"
-    )
     pairs = (
-        per_order.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
+        per_order.select(F.explode(sorted_pairs("pk")).alias("p"))
+        .select(F.col("p.id_a").alias("u"), F.col("p.id_b").alias("v"))
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("nuv"))
         .filter(F.col("nuv") >= 2)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import tokens_col
 from .registry import query, t
 from .registry_ext import _BIGRAM_LM_ORACLE, doc_bigram_lm_score
 from .registry_r7 import _LPA_EDGES_CTE, _LPA_LABELS_CTE, lpa_trade_graph_labels
@@ -629,9 +630,7 @@ def doc_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side."""
     docs = t(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)").alias(
-            "_tk"
-        ),
+        tokens_col("text").alias("_tk"),
         (
             F.length("text") - F.length(F.regexp_replace("text", "#", ""))
         ).alias("n_hash"),

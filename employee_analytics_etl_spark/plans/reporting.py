@@ -4,11 +4,13 @@ scripts/reporting.py).
 Each insight is a top-k query — Spark compiles ``orderBy(...).limit(k)``
 to TakeOrderedAndProject (no global sort at scale). pandas sorts NaN
 last in descending sorts; Spark's ``desc`` puts nulls first, so every
-insight uses ``desc_nulls_last`` for parity (SURVEY.md T2 caveat). The
-department insights break ties by ``department_id``, as pandas' stable
-descending sort keeps the department table's order; without it a tie
-(the ``hr`` test fixture has one on active projects) picks whichever
-department the plan reads first, which changes from run to run.
+insight uses ``desc_nulls_last`` for parity (SURVEY.md T2 caveat). Each
+insight breaks ties by its table's key (``department_id`` for T1/T3,
+``employee_id`` for T2/T4), as pandas' stable descending sort keeps the
+table's order; without it a tie (the ``hr`` test fixture has one on
+active projects, and many employees share a 5.0 average at N = 2000)
+picks whichever row the plan reads first, which changes from run to
+run.
 
 ``run_pipeline`` collects T1/T3 and T2/T4 from the cached department and
 employee summaries, each in the thread that writes that summary, and
@@ -31,7 +33,7 @@ def top_dept_by_avg_salary(dept_summary: DataFrame) -> DataFrame:
 
 def top_employees_by_rating(emp_performance: DataFrame, k: int = 5) -> DataFrame:
     """T2 (reference scripts/reporting.py:90-93)."""
-    return emp_performance.orderBy(F.desc_nulls_last("avg_rating")).limit(k)
+    return emp_performance.orderBy(F.desc_nulls_last("avg_rating"), "employee_id").limit(k)
 
 
 def top_dept_by_active_projects(dept_summary: DataFrame) -> DataFrame:
@@ -41,7 +43,7 @@ def top_dept_by_active_projects(dept_summary: DataFrame) -> DataFrame:
 
 def top_employee_by_tenure(emp_performance: DataFrame) -> DataFrame:
     """T4 (reference scripts/reporting.py:101-103)."""
-    return emp_performance.orderBy(F.desc_nulls_last("tenure_years")).limit(1)
+    return emp_performance.orderBy(F.desc_nulls_last("tenure_years"), "employee_id").limit(1)
 
 
 def avg_project_duration() -> Column:

@@ -34,8 +34,8 @@ STATE_SCHEMA = T.StructType(
 
 
 def _update_profile(key, pdfs, state):
-    # NB: module-level function (picklable), no annotations (see
-    # similarity.lsh_hyperplane_buckets note on `from __future__`).
+    # NB: module-level function (picklable), no annotations (see the
+    # dedup Arrow scorers' note on `from __future__`).
     import pandas as pd
 
     (user_id,) = key

@@ -300,7 +300,6 @@ print(json.dumps({
             "resample_audio": "deferred: only tests call it",
             "compact_parquet": "deferred: only tests call it",
             "upsert_parquet": "deferred: only tests call it",
-            "lsh_hyperplane_topk": "deferred: only tests call it",
             "resize_images": "deferred: only tests call it",
             "write_bucketed": "deferred: only tests call it",
             "write_zordered": "deferred: only tests call it",

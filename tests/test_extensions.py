@@ -63,6 +63,20 @@ class TestText:
 
 
 class TestDedup:
+    def test_sorted_pairs(self, spark):
+        df = spark.createDataFrame(
+            [(0, []), (1, [7]), (2, [1, 3, 5, 9])], "k int, ids array<int>"
+        )
+        got = {
+            r["k"]: [(p["id_a"], p["id_b"]) for p in r["p"]]
+            for r in df.select("k", D.sorted_pairs("ids").alias("p")).collect()
+        }
+        assert got[0] == [] and got[1] == []
+        pairs = got[2]
+        assert len(pairs) == len(set(pairs)) == 6
+        assert all(a < b for a, b in pairs)
+        assert set(pairs) == {(1, 3), (1, 5), (1, 9), (3, 5), (3, 9), (5, 9)}
+
     def test_exact_groups(self, docs):
         groups = D.exact_dedup_groups(docs).collect()
         multi = [g for g in groups if g["n_copies"] > 1]
@@ -177,7 +191,9 @@ class TestSimilarity:
         }
         approx = {
             (r["query_id"], r["neighbor_id"])
-            for r in S.lsh_hyperplane_topk(q, emb, k=5, n_planes=4, dim=64).collect()
+            for r in S.lsh_multitable_topk(
+                q, emb, k=5, n_planes=4, n_tables=1, dim=64
+            ).collect()
         }
         recall = len(exact & approx) / len(exact)
         assert recall >= 0.2  # 4 planes / 16 buckets on random vectors
@@ -190,7 +206,9 @@ class TestSimilarity:
         }
         single = {
             (r["query_id"], r["neighbor_id"])
-            for r in S.lsh_hyperplane_topk(q, emb, k=5, n_planes=6, dim=64).collect()
+            for r in S.lsh_multitable_topk(
+                q, emb, k=5, n_planes=6, n_tables=1, dim=64
+            ).collect()
         }
         multi = {
             (r["query_id"], r["neighbor_id"])

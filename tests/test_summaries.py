@@ -15,6 +15,7 @@ from employee_analytics_etl_spark.operators.summaries import (
     emp_performance,
     project_workload,
 )
+from employee_analytics_etl_spark.plans.reporting import employee_insights
 from tests.conftest import AS_OF
 
 
@@ -82,6 +83,24 @@ class TestEmpPerformance:
     def test_zero_reviews_path(self, ep):
         assert ep[10]["review_count"] == 0
         assert ep[10]["avg_rating"] is None
+
+
+class TestEmployeeInsights:
+    def test_ties_break_by_employee_id(self, spark):
+        """T2/T4 on a summary whose tied rows sit in two partitions, the
+        higher ids in the one read first: the lower id wins each tie."""
+        rows = [
+            (9, "Ivy", 5.0, 8.0), (7, "Gus", 5.0, 8.0), (6, "Fay", 4.0, 1.0),
+            (4, "Dee", 5.0, 8.0), (2, "Bo", 5.0, 8.0), (1, "Al", None, 2.0),
+        ]
+        summary = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 2),
+            "employee_id int, name string, avg_rating double, tenure_years double",
+        )
+        assert summary.rdd.glom().map(len).collect() == [3, 3]
+        got = employee_insights(summary)
+        assert [r["employee_id"] for r in got["top5"]] == [2, 4, 7, 9, 6]
+        assert [r["employee_id"] for r in got["top_tenure"]] == [2]
 
 
 class TestProjectWorkload:
