@@ -460,16 +460,20 @@ def personalized_pagerank(
     n_s = len(seeds)
     if n_s == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).localCheckpoint(eager=False)
+    # counted from the pinned edges: over the unpinned select, this lazy
+    # checkpoint would run the edges' upstream again at construction
+    deg = (
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).localCheckpoint(eager=False)
+    )
     base_of = lambda col: F.when(  # noqa: E731
         col.isin(*seeds), F.lit((1.0 - damping) / n_s)
     ).otherwise(F.lit(0.0))
     rank = spark.createDataFrame(
         [(int(s),) for s in seeds], "src long"
     ).select("src", F.lit(1.0 / n_s).alias("rank"))
-    e = e.localCheckpoint(eager=False)
-    deg = deg.localCheckpoint(eager=False)
     for _ in range(iters):
         share = rank.join(deg, "src").select(
             "src", (F.col("rank") / F.col("outdeg")).alias("share")

@@ -2,7 +2,10 @@
 
 Design notes (vs reference):
 - S1 (reference scripts/extract.py:28): CSV scan with *inferred* schema →
-  here: explicit ``StructType`` per table; inference is banned.
+  here: explicit ``StructType`` per table; inference is banned. The
+  driver-testdata parquet tables are read with declared schemas too: an
+  inferring parquet read starts a Spark job (~90 ms) when the DataFrame
+  is built, one per table read.
 - S2 (reference scripts/main.py:41-45): required-file manifest check →
   ``check_manifest`` fails fast before any Spark job is submitted.
 - Column tolerance (reference scripts/transform.py:101-111 accepts the
@@ -22,7 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .schemas import HR_SCHEMAS, TESTDATA_TABLES
+from .schemas import HR_SCHEMAS, TESTDATA_SCHEMAS, TESTDATA_TABLES, events_schema
 
 
 class MissingInputError(FileNotFoundError):
@@ -51,35 +54,73 @@ def read_csv_table(spark: SparkSession, path: str, table: str) -> DataFrame:
     )
 
 
-# Parquet TIMESTAMP(NANOS) columns (Spark has no nanos timestamp type).
-# With spark.sql.legacy.parquet.nanosAsLong=true (set in session.py) they
-# arrive as epoch-nanos BIGINT; normalize to TIMESTAMP_NTZ at ingest —
-# integer DIV 1000 truncation matches DuckDB's ns→µs truncation, so the
-# correctness oracle sees identical instants.
-NANOS_TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
+def events_ts_type(path_glob: str) -> str:
+    """The Spark type that inference gives ``events.ts`` in the first file
+    ``path_glob`` matches (a file, or a directory of part files), read
+    from its parquet footer:
+
+    - ``BIGINT`` for TIMESTAMP(NANOS) (under nanosAsLong) or plain int64:
+      epoch nanos, which the readers turn into timestamps;
+    - ``TIMESTAMP`` for INT96 (Spark's default timestamp output) or a
+      timestamp adjusted to UTC;
+    - ``TIMESTAMP_NTZ`` for any other timestamp.
+
+    A read with a declared schema takes the file's word for nothing, so
+    without the probe a dataset that switched ts storage would fail to
+    read or mis-scale every event-time operator by 1000x. One footer
+    read on the driver, whatever the data volume. No file yet (an empty
+    stream directory) reads as ``BIGINT``, the legacy default.
+    """
+    import glob
+    import warnings
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = []
+    for m in sorted(glob.glob(path_glob)):
+        files += sorted(glob.glob(os.path.join(m, "*.parquet"))) if os.path.isdir(m) else [m]
+    if not files:
+        return "BIGINT"
+    try:
+        footer = pq.ParquetFile(files[0])
+        ts = footer.schema_arrow.field("ts").type
+        physical = footer.schema.column(footer.schema_arrow.get_field_index("ts")).physical_type
+    except (OSError, KeyError, pa.ArrowInvalid) as exc:
+        warnings.warn(
+            f"parquet footer probe failed on {files[0]} ({exc!r}): "
+            "falling back to the legacy nanos-long ts default — verify the "
+            "events schema if event-time results look 1000x off",
+            stacklevel=2,
+        )
+        return "BIGINT"
+    if physical == "INT96" or (pa.types.is_timestamp(ts) and ts.tz is not None):
+        return "TIMESTAMP"
+    if pa.types.is_integer(ts) or (pa.types.is_timestamp(ts) and ts.unit == "ns"):
+        return "BIGINT"
+    return "TIMESTAMP_NTZ"
 
 
 def read_parquet_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Parquet scan of one driver-testdata table, with nanos-timestamp
-    normalization for the ``events`` stream table."""
+    """Parquet scan of one driver-testdata table with its declared schema,
+    so building the scan starts no Spark job. ``events.ts`` stored as
+    nanos arrives as an epoch-nanos BIGINT and becomes TIMESTAMP_NTZ
+    here: integer DIV 1000 truncates as DuckDB's ns→µs cast does, so the
+    correctness oracle sees identical instants."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    if table in NANOS_TS_COLUMNS:
-        # runtime-settable SQL conf — makes the reader safe under driver
-        # sessions not built by session.build_session
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-    for c in NANOS_TS_COLUMNS.get(table, []):
-        if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
-            df = df.withColumn(
-                c,
-                F.expr(f"CAST(timestamp_micros(CAST({c} DIV 1000 AS BIGINT)) AS TIMESTAMP_NTZ)"),
-            )
-    return df
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if table != "events":
+        return spark.read.schema(TESTDATA_SCHEMAS[table]).parquet(path)
+    ts_type = events_ts_type(path)
+    if ts_type != "BIGINT":
+        return spark.read.schema(events_schema(ts_type)).parquet(path)
+    # runtime-settable SQL conf (session.py sets it too) — keeps the
+    # reader right under sessions not built by session.build_session
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.schema(events_schema(ts_type)).parquet(path).withColumn(
+        "ts", F.expr("CAST(timestamp_micros(CAST(ts DIV 1000 AS BIGINT)) AS TIMESTAMP_NTZ)")
+    )
 
 
 def read_fixed_width(

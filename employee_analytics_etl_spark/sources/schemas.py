@@ -5,7 +5,9 @@ scripts/extract.py:28) which mutates types on round-trips (ints become
 floats). We declare schemas up front — inference is banned in this
 engine (SURVEY.md §1.2). The five HR input schemas are fixed by the
 reference's generator (reference data/raw/import_csv.py:6-102);
-the testdata schemas mirror /root/testdata parquet files.
+the testdata schemas are the types Spark infers from the driver's
+parquet tables at every scale factor (``tests/test_sources.py``
+checks this on each dataset present).
 """
 
 from __future__ import annotations
@@ -78,7 +80,7 @@ HR_TABLE_ORDER = [
     "project_assignments",
 ]
 
-# --- Driver testdata (TPC-H-ish; /root/testdata/sf*/ parquet) ---------------
+# --- Driver testdata (TPC-H-ish parquet, one ``<table>.parquet`` per table) ---
 
 TESTDATA_TABLES = [
     "region",
@@ -92,3 +94,41 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
+
+# DDL strings: Spark parses them, and a read with a schema lists files
+# but starts no job (an inferring read starts one per table).
+TESTDATA_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+        "p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+        "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+
+def events_schema(ts_type: str) -> str:
+    """The events table's schema with ``ts`` read as ``ts_type``, which
+    ``readers.events_ts_type`` probes from the files: ``events.ts`` is
+    stored as epoch nanos in some datasets and as a timestamp in others.
+    The batch reader and the stream share it."""
+    return (
+        f"event_id BIGINT, ts {ts_type}, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    )

@@ -14,8 +14,13 @@ in production, nothing downstream changes.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.readers import events_ts_type
+from ..sources.schemas import events_schema
 
 # MEASURED default delay for the event-time jobs below (r8, closing the
 # planner loop the way choose_blocking/choose_lsh_bands/choose_ann_index
@@ -86,88 +91,6 @@ def choose_watermark_delay(
     )
 
 
-def events_schema_nanos():
-    """Schema of the raw events parquet when ts is stored as
-    TIMESTAMP(NANOS) (arrives as epoch-nanos long under
-    nanosAsLong — see sources.readers.NANOS_TS_COLUMNS)."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
-def events_schema_micros():
-    """Schema of the raw events parquet when ts is stored as a native
-    micros timestamp (isAdjustedToUTC=false → TIMESTAMP_NTZ in Spark)."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
-def _events_ts_is_nanos_long(sf_dir: str, glob: str) -> bool:
-    """Driver-side footer probe: does the events parquet store ts as
-    TIMESTAMP(NANOS)/plain int64 (→ Spark reads a BIGINT under
-    nanosAsLong) or as a micros timestamp (→ native timestamp)?
-
-    The streaming file source requires an explicit schema (no inference
-    pass), so without the probe a testdata generation that switches ts
-    precision would silently mis-scale every event-time operator — a
-    one-file footer read keeps stream and batch readers in lockstep.
-    Cost is O(1) on the driver, independent of data volume.
-    """
-    import glob as _glob
-    import os
-
-    matches = sorted(_glob.glob(os.path.join(sf_dir, glob)))
-    if not matches:
-        return True  # no file yet (empty stream dir): legacy default
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except ImportError:
-        import warnings
-
-        warnings.warn(
-            "pyarrow unavailable: assuming legacy nanos-long ts schema for "
-            f"{matches[0]} — event-time operators will mis-scale by 1000x "
-            "if the dataset actually carries micros timestamps",
-            stacklevel=2,
-        )
-        return True
-    try:
-        t = pq.ParquetFile(matches[0]).schema_arrow.field("ts").type
-    except (OSError, KeyError, pa.ArrowInvalid) as exc:
-        import warnings
-
-        warnings.warn(
-            f"parquet footer probe failed on {matches[0]} ({exc!r}): "
-            "falling back to the legacy nanos-long ts default — verify the "
-            "events schema if event-time results look 1000x off",
-            stacklevel=2,
-        )
-        return True
-    return pa.types.is_integer(t) or (
-        pa.types.is_timestamp(t) and t.unit == "ns"
-    )
-
-
 def build_events_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -183,21 +106,20 @@ def build_events_stream(
     advance BETWEEN batches, the condition under which late rows are
     actually dropped.
     """
-    nanos = _events_ts_is_nanos_long(sf_dir, glob)
-    if nanos:
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
+    # the file source needs a schema: the batch reader's, picked by the
+    # same footer probe, keeps stream and batch in lockstep
+    ts_type = events_ts_type(os.path.join(sf_dir, glob))
+    if ts_type == "BIGINT":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = (
         spark.readStream.format("parquet")
-        .schema(events_schema_nanos() if nanos else events_schema_micros())
+        .schema(events_schema(ts_type))
         .option("pathGlobFilter", glob)
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.load(sf_dir)
-    if nanos:
+    if ts_type == "BIGINT":
         # ns→µs truncation, identical to the batch reader's normalization
         return raw.withColumn(
             "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")

@@ -37,6 +37,10 @@ FIXED = [
     "order_cents_proration",
     "source_mixture_weights",
 ]
+# An Arrow-UDF query for the topology test, whose sample may hold no
+# Python stage: workers in separate executor JVMs must start from the
+# package's daemon module too.
+ARROW_UDF = "kmeans_embedding_clusters"
 PARTITIONS = (1, 7, 64)
 MASTERS = ("local-cluster[2,1,2048]", "local[3]")
 
@@ -119,6 +123,7 @@ for i, master in enumerate(masters):
 
 def test_multi_jvm_topology_leaves_results_unchanged(names, tmp_path):
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = sorted({*names, ARROW_UDF})
     proc = subprocess.run(
         [sys.executable, "-c", _TOPOLOGY_SCRIPT, str(tmp_path), SF_SMOKE,
          json.dumps(MASTERS), *names],

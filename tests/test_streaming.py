@@ -476,10 +476,7 @@ class TestStreamingDedup:
     ):
         from pyspark.sql import functions as F
 
-        from employee_analytics_etl_spark.streaming.jobs import (
-            dedup_events_stream,
-            events_schema_nanos,
-        )
+        from employee_analytics_etl_spark.streaming.jobs import dedup_events_stream
 
         # build a source with every event duplicated (2nd copy 1 min late)
         src = str(tmp_path_factory.mktemp("dup_events"))
@@ -722,16 +719,11 @@ class TestDebounceStream:
         kept = {r["event_id"] for r in got.collect()}
         assert kept == {1, 4}
 
-        batch = build_events_stream  # readability: batch twin below
-        all_rows = spark.read.schema(
-            __import__(
-                "employee_analytics_etl_spark.streaming.jobs",
-                fromlist=["events_schema_nanos"],
-            ).events_schema_nanos()
-        ).parquet(src)
         from pyspark.sql import functions as F
 
-        all_rows = all_rows.withColumn(
+        from employee_analytics_etl_spark.sources.schemas import events_schema
+
+        all_rows = spark.read.schema(events_schema("BIGINT")).parquet(src).withColumn(
             "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")
         )
         want = {
