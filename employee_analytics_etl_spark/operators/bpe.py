@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import TOKEN_RE, tokens_col
+from .text import tokens_col
 
 
 def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -44,8 +44,6 @@ def _merge_kernel(a: str, b: str):
     """mapInPandas fn replacing every adjacent (a, b) in ``syms`` with
     the concatenation — one sequential left-to-right scan per word,
     matching reference BPE (overlaps resolve leftmost-first)."""
-    import pandas as pd
-
     merged = a + b
 
     def apply(batches):
@@ -112,95 +110,3 @@ def bpe_train(
         ).localCheckpoint()
     return merges, symbols
 
-
-def bpe_encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Apply learned merges to ONE word, in training order with a
-    leftmost-first scan per merge — exactly the semantics bpe_train
-    used to build them, so encode(train corpus) reproduces the final
-    training symbol table. Pure-Python on purpose: shared by the Spark
-    kernel and the pytest reference."""
-    syms = list(word)
-    for a, b in merges:
-        i, n, res = 0, len(syms), []
-        while i < n:
-            if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                res.append(a + b)
-                i += 2
-            else:
-                res.append(syms[i])
-                i += 1
-        syms = res
-    return syms
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Distributed BPE APPLY — the serving half of the tokenizer family
-    (bpe_train learns the merges; this encodes a corpus with them).
-    Returns (id, n_words, n_tokens, n_chars, tokens) per document.
-
-    Scale shape: the merge list is O(vocab) and ships to every task as
-    a closure (broadcast-sized model state — same pattern a real
-    tokenizer uses); the corpus is touched ONCE by an Arrow
-    ``mapInPandas`` kernel with a per-batch word memo, so each distinct
-    word in a batch is encoded once no matter how often it repeats
-    (Zipf makes this the dominant saving). Zero shuffles — encode is
-    embarrassingly parallel over documents.
-
-    Not SQL-expressible (iterative in-row merge application), so this
-    op is pytest-pinned against a pure-Python sequential reference
-    instead of a DuckDB oracle — the same evidence tier as bpe_train's
-    merge-sequence pin.
-
-    ASCII assumption: tokenization here uses Python ``re`` +
-    ``str.lower`` while ``bpe_train`` uses JVM ``regexp_extract_all`` +
-    ``lower()``. For the ASCII ``TOKEN_RE`` vocabulary ([a-z0-9]+)
-    these agree exactly; full-Unicode case folding does NOT (e.g.
-    Python lowers 'İ' to 'i' + combining dot, the JVM to a single
-    char), so a Unicode-token extension must normalize through the SAME
-    Spark expression (``lower()`` in a select) before this kernel."""
-    import re
-
-    pairs = [(a, b) for a, b, *_ in merges]
-    tok_re = TOKEN_RE
-
-    def apply(batches):
-        import pandas as pd
-
-        rx = re.compile(tok_re)
-        memo: dict[str, list[str]] = {}
-        for pdf in batches:
-            ids, n_words, n_tokens, n_chars, toks_out = [], [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = rx.findall((text or "").lower())
-                toks: list[str] = []
-                for wd in words:
-                    enc = memo.get(wd)
-                    if enc is None:
-                        enc = bpe_encode_word(wd, pairs)
-                        memo[wd] = enc
-                    toks.extend(enc)
-                ids.append(did)
-                n_words.append(len(words))
-                n_tokens.append(len(toks))
-                n_chars.append(sum(len(t) for t in toks))
-                toks_out.append(toks)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_words": n_words,
-                    "n_tokens": n_tokens,
-                    "n_chars": n_chars,
-                    "tokens": toks_out,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        apply,
-        f"{id_col} long, n_words long, n_tokens long, n_chars long, "
-        "tokens array<string>",
-    )

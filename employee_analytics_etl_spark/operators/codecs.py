@@ -8,9 +8,9 @@ instead of byte statistics. Animated GIF (full GIF-LZW, below) covers
 the multi-frame/video container case; progressive/subsampled JPEG,
 MP3, and MP4/WebM still raise at the marked codec call site.
 
-All functions are plain ``bytes → numpy`` (and back) so they are unit-
-testable without Spark and ride inside Arrow ``mapInPandas`` kernels
-unchanged. Arrays are HxWx3 uint8 RGB.
+All functions are plain ``bytes → numpy`` (and back for PNG, JPEG,
+WAV and GIF) so they are unit-testable without Spark and ride inside
+Arrow ``mapInPandas`` kernels unchanged. Arrays are HxWx3 uint8 RGB.
 
 r11: MP3 joins at the STRUCTURE level — ``parse_mp3_frames`` walks
 frame headers (duration / per-frame bitrate / channels / ID3 skip)
@@ -60,14 +60,6 @@ def decode_ppm(data: bytes) -> np.ndarray:
     return px.reshape(h, w, 3).copy()
 
 
-def encode_ppm(arr: np.ndarray) -> bytes:
-    h, w, c = arr.shape
-    assert c == 3
-    return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(
-        arr, dtype=np.uint8
-    ).tobytes()
-
-
 # ------------------------------------------------------- BMP (24bpp BI_RGB)
 
 def decode_bmp(data: bytes) -> np.ndarray:
@@ -88,21 +80,6 @@ def decode_bmp(data: bytes) -> np.ndarray:
     if bottom_up:
         rows = rows[::-1]
     return rows[..., ::-1].copy()  # BGR → RGB
-
-
-def encode_bmp(arr: np.ndarray) -> bytes:
-    h, w, c = arr.shape
-    assert c == 3
-    stride = (w * 3 + 3) & ~3
-    body = np.zeros((h, stride), dtype=np.uint8)
-    body[:, : w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    pix = body.tobytes()
-    header = struct.pack(
-        "<2sIHHI" "IiiHHIIiiII",
-        b"BM", 54 + len(pix), 0, 0, 54,
-        40, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0,
-    )
-    return header + pix
 
 
 # ----------------------------------------------------------- PNG (RFC 2083)
@@ -733,15 +710,6 @@ def decode_image(data: bytes) -> np.ndarray:
     )
 
 
-def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample to (height, width) — deterministic,
-    pure index math (what a real resize kernel does before filtering)."""
-    h, w, _ = arr.shape
-    rows = (np.arange(height) * h) // height
-    cols = (np.arange(width) * w) // width
-    return arr[rows][:, cols]
-
-
 # ---------------------------------------------------------------- WAV (PCM)
 
 def decode_wav(data: bytes) -> tuple[int, np.ndarray]:
@@ -787,25 +755,6 @@ def encode_wav(rate: int, samples: np.ndarray) -> bytes:
         w.setframerate(rate)
         w.writeframes(np.ascontiguousarray(samples, dtype="<i2").tobytes())
     return buf.getvalue()
-
-
-def resample_nearest_audio(
-    rate: int, samples: np.ndarray, target_rate: int
-) -> np.ndarray:
-    """Nearest-neighbor sample-rate conversion (the audio analogue of
-    resize_nearest): output frame i takes input frame
-    round(i · rate / target_rate). No interpolation/anti-aliasing — the
-    boundary where a real DSP library would plug in, but exact,
-    deterministic, and correct for the integer-ratio cases pipelines
-    normalize to (16 k→8 k picks every 2nd frame)."""
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n_out = max(1, int(round(samples.shape[0] * target_rate / rate)))
-    idx = np.minimum(
-        np.round(np.arange(n_out) * rate / target_rate).astype(np.int64),
-        samples.shape[0] - 1,
-    )
-    return samples[idx]
 
 
 # ------------------------------------------------------------ GIF (GIF89a)

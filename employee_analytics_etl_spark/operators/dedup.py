@@ -350,9 +350,9 @@ def minhash_band_rows(
     wide: DataFrame | None = None,
 ) -> DataFrame:
     """(id, band, bucket) LSH band table — the persistable index form.
-    At scale this is what you write ``write_bucketed`` on (band,
-    bucket) so that tomorrow's delta joins it with zero base-side
-    exchange; see ``minhash_incremental_candidates``.
+    At scale this is what you write bucketed on (band, bucket) so
+    that tomorrow's delta joins it with zero base-side exchange; see
+    ``minhash_incremental_candidates``.
 
     ``wide``: precomputed ``minhash_signatures_wide`` output. Pass it
     (checkpointed) when the caller also consumes the signatures
@@ -426,37 +426,6 @@ def _bucket_pairs(band_rows: DataFrame) -> DataFrame:
     )
 
 
-def minhash_band_rows_stateless(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, band, bucket) band rows computed entirely per-row — the
-    signature is ``array_min(transform(shingles, md5(seed:s)))`` over
-    the in-row shingle array instead of a groupBy over exploded
-    shingle rows. Bit-identical to ``minhash_band_rows`` (min over a
-    multiset equals min over its set; same md5 family), but with ZERO
-    aggregation: safe inside a Structured Streaming micro-batch (no
-    stateful operator before the index join) and zero-shuffle in
-    batch. The explode emits n_bands skinny rows per document."""
-    sigs = [
-        F.expr(
-            f"array_min(transform(_sh, x -> md5(concat('{s}', ':', x))))"
-        ).alias(f"m{s}")
-        for s in range(num_hashes)
-    ]
-    per_row = (
-        df.select(F.col(id_col).alias("id"), tokens_col(text_col).alias("_tk"))
-        .select("id", _word_ngrams(shingle_n).alias("_sh"))
-        .filter(F.size("_sh") > 0)
-        .select("id", *sigs)
-    )
-    return _band_rows(per_row, num_hashes, rows_per_band)
-
-
 def minhash_incremental_candidates(
     delta: DataFrame,
     base: DataFrame,
@@ -470,8 +439,8 @@ def minhash_incremental_candidates(
     only — hash the delta, never re-mine the base corpus.
 
     The operational dedup shape at scale: the base band table is a
-    persisted artifact (``minhash_band_rows`` written ``write_bucketed``
-    on (band, bucket)); a daily delta only (a) hashes its own
+    persisted artifact (``minhash_band_rows`` written bucketed on
+    (band, bucket)); a daily delta only (a) hashes its own
     documents, (b) equi-joins the base index on (band, bucket) for
     delta-vs-base pairs — zero base-side exchange when the index is
     bucketed — and (c) runs the ordinary bucket pair-explode on

@@ -2,7 +2,7 @@
 
 Treats image/audio/video payloads as opaque ``binary`` columns with a
 typed metadata struct, and implements decode / feature-extraction /
-resize / frame-sampling as Arrow-batched ``mapInPandas`` operators.
+frame-sampling as Arrow-batched ``mapInPandas`` operators.
 
 Decode modes:
 - ``decode="fake"`` (default): deterministic features from the bytes
@@ -11,7 +11,7 @@ Decode modes:
 - ``decode="real"``: TRUE decode for PPM(P6)/BMP/PNG/baseline-JPEG
   images, PCM WAV audio, and animated-GIF video via the in-repo
   pure-Python codecs (``operators.codecs``) — actual pixel statistics,
-  nearest-neighbor resize, PCM sample stats, and per-frame means.
+  PCM sample stats, and per-frame means.
   Formats needing a real codec library (progressive/subsampled JPEG,
   MP4/WebM, MP3 *audio decode*) raise at the call site; MP3 stream
   STRUCTURE (duration/bitrate/channels, r11: ``mp3_stream_stats``)
@@ -41,11 +41,6 @@ FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, "
     "mean_byte double, feature array<double>"
 )
-
-RESIZE_SCHEMA = (
-    "media_id long, kind string, out_width int, out_height int, payload binary"
-)
-
 
 def fake_media_from_documents(docs: DataFrame) -> DataFrame:
     """Derive a deterministic fake media table from the documents table
@@ -164,72 +159,6 @@ def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    decode: str = "fake",
-    out_format: str = "match",
-) -> DataFrame:
-    """Resize image payloads.
-
-    decode="real": PPM/BMP/PNG/baseline-JPEG decode → nearest-neighbor
-    resample → lossless re-encode (true pixel resize, no dependencies).
-    ``out_format``: "match" (default) keeps the input container where a
-    lossless in-repo encoder exists — PNG stays PNG, BMP stays BMP,
-    everything else (PPM, JPEG — no lossless JPEG re-encode) emits PPM
-    — so a PNG-in/PNG-out pipeline round-trips decode(encode(x)) == x
-    (property-tested in tests/test_properties.py). Explicit
-    "png"/"bmp"/"ppm" force one container.
-    decode="fake": truncate/pad bytes to width*height (keeps the
-    byte-budget contract a real resize would have).
-    decode="strict": marks the real-codec call site."""
-
-    def op(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        target = width * height
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                if decode == "strict":
-                    raise NotImplementedError("real resize requires PIL")
-                b = bytes(payload) if payload is not None else b""
-                if decode == "real":
-                    from .codecs import (
-                        decode_image,
-                        encode_bmp,
-                        encode_png,
-                        encode_ppm,
-                        resize_nearest,
-                    )
-
-                    px = resize_nearest(decode_image(b), width, height)
-                    fmt = out_format
-                    if fmt == "match":
-                        if b[:8] == b"\x89PNG\r\n\x1a\n":
-                            fmt = "png"
-                        elif b[:2] == b"BM":
-                            fmt = "bmp"
-                        else:
-                            fmt = "ppm"
-                    enc = {"png": encode_png, "bmp": encode_bmp, "ppm": encode_ppm}[fmt]
-                    out.append(enc(px))
-                else:
-                    out.append(b[:target].ljust(target, b"\0"))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "out_width": width,
-                    "out_height": height,
-                    "payload": out,
-                }
-            )
-
-    return df.filter(F.col("kind") == "image").mapInPandas(op, schema=RESIZE_SCHEMA)
-
-
 def gif_frame_stats(df: DataFrame) -> DataFrame:
     """REAL per-frame decode for video-kind payloads: run each animated
     GIF through ``codecs.decode_gif`` (pure-Python GIF-LZW) and emit one
@@ -284,65 +213,6 @@ def sample_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
                 F.expr(f"sequence(0, meta.n_frames - 1, {every_k})")
             ).alias("frame_idx"),
         )
-    )
-
-
-RESAMPLE_SCHEMA = (
-    "media_id long, kind string, out_rate int, n_frames long, payload binary"
-)
-
-
-def resample_audio(
-    df: DataFrame, target_rate: int, decode: str = "fake"
-) -> DataFrame:
-    """Normalize audio payloads to one sample rate — the audio analogue
-    of resize_images, and the standard first step of an audio training
-    pipeline (models want a single rate).
-
-    decode="real": WAV decode → nearest-neighbor rate conversion →
-    WAV re-encode (codecs.resample_nearest_audio; true sample math,
-    stdlib only). decode="fake": byte-budget stand-in (scaled
-    truncate/pad). decode="strict": marks where a real DSP resampler
-    (soxr/librosa) would plug in."""
-
-    def op(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out, nf = [], []
-            for payload in pdf["payload"]:
-                if decode == "strict":
-                    raise NotImplementedError(
-                        "anti-aliased resampling requires soxr/librosa"
-                    )
-                b = bytes(payload) if payload is not None else b""
-                if decode == "real":
-                    from .codecs import (
-                        decode_wav,
-                        encode_wav,
-                        resample_nearest_audio,
-                    )
-
-                    rate, samples = decode_wav(b)
-                    res = resample_nearest_audio(rate, samples, target_rate)
-                    out.append(encode_wav(target_rate, res))
-                    nf.append(res.shape[0])
-                else:
-                    scaled = b[: max(1, int(len(b) * target_rate / 16000))]
-                    out.append(scaled)
-                    nf.append(len(scaled) // 2)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "out_rate": target_rate,
-                    "n_frames": nf,
-                    "payload": out,
-                }
-            )
-
-    return df.filter(F.col("kind") == "audio").mapInPandas(
-        op, schema=RESAMPLE_SCHEMA
     )
 
 

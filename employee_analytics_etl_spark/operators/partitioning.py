@@ -1,5 +1,6 @@
-"""Physical-layout operators: bucketed co-located joins, skew salting,
-partitioned writes — the cluster-scale levers (SURVEY.md §7 step 8).
+"""Physical-layout operators: skew salting, skew-split joins, Morton
+codes and scan-file counts — the cluster-scale levers (SURVEY.md §7
+step 8).
 
 These are the Spark-side equivalents of the reference's post-load
 B-tree indexes (reference scripts/load.py:49-61): instead of indexing
@@ -8,29 +9,8 @@ after load, lay the data out so the expensive operation never shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a fact bucketed (and optionally sorted) on its join key.
-
-    Subsequent equi-joins/aggregations on ``bucket_col`` between tables
-    bucketed the same way run WITHOUT a shuffle (no Exchange in the
-    plan) — at 100 TB this converts the dominant cost of a fact-fact
-    join into a local zip of pre-sorted buckets.
-    """
-    w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
 
 
 def salted_groupby_sum(
@@ -103,84 +83,6 @@ def salted_join(
     )
 
 
-def upsert_parquet(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key: str,
-    partition_col: str | None = None,
-) -> None:
-    """Key-based MERGE (upsert) into a parquet dataset: same-key rows
-    are replaced by ``updates``, new keys are inserted.
-
-    With ``partition_col``, only the partitions the updates touch are
-    read (partition pruning on the update keys' partition values) and
-    only those directories are rewritten (dynamic partition
-    overwrite) — untouched partitions keep their files byte-for-byte,
-    which is what makes this viable on a 100 TB table where an update
-    batch touches a handful of date partitions. The driver collects
-    only the touched partition VALUES (bounded by the batch, never by
-    the table).
-
-    Without a partition column the whole dataset is rewritten; the
-    merged frame is localCheckpoint'ed first because Spark refuses to
-    overwrite a path its own plan is still reading from (and the
-    checkpoint breaks that lineage)."""
-    if partition_col is not None:
-        parts = [
-            r[0] for r in updates.select(partition_col).distinct().collect()
-        ]
-        existing = spark.read.parquet(path).filter(
-            F.col(partition_col).isin(parts)
-        )
-        merged = existing.join(
-            updates.select(key).distinct(), key, "left_anti"
-        ).unionByName(updates).localCheckpoint(eager=True)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    else:
-        existing = spark.read.parquet(path)
-        merged = existing.join(
-            updates.select(key).distinct(), key, "left_anti"
-        ).unionByName(updates).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_mb: int = 256,
-    sort_within: str | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into
-    ~``target_file_mb``-sized files (computed from the source's actual
-    on-disk bytes via the Hadoop FS API — no driver-side data pull).
-    Returns the number of output files requested.
-
-    The standard hygiene pass after streaming/micro-batch ingestion:
-    thousands of KB-sized files turn every downstream scan into a
-    task-scheduling storm and wreck row-group compression. Optional
-    ``sort_within`` applies sortWithinPartitions before the write so
-    min/max column stats become selective (poor-man's clustering —
-    enables row-group skipping on that column)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(src)
-    fs = path.getFileSystem(conf)
-    total_bytes = fs.getContentSummary(path).getLength()
-    n_files = max(1, int(total_bytes / (target_file_mb * 1024 * 1024)) or 1)
-    df = spark.read.parquet(src).repartition(n_files)
-    if sort_within:
-        df = df.sortWithinPartitions(sort_within)
-    df.write.mode("overwrite").parquet(dst)
-    return n_files
-
-
 def scan_file_count(df: DataFrame) -> int:
     """Execute ``df`` and return how many files its file scans ACTUALLY
     read (the scan's runtime ``numFiles`` metric) — the ground-truth
@@ -244,53 +146,6 @@ def morton_code(col_a, col_b, bits: int = 16):
         return x
 
     return spread(col_a).bitwiseOR(F.shiftleft(spread(col_b), 1))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write parquet Z-ordered on (col_a, col_b): range-partition by
-    the Morton code (balanced file sizes via range exchange, not hash)
-    and sort within partitions, so every file covers a compact 2-D
-    tile and parquet row-group zone-maps prune on EITHER column.
-
-    Both columns are min-max scaled to the full ``bits`` domain before
-    interleaving — raw interleave is worthless when domains differ in
-    magnitude (the wider column's high bits dominate the curve and the
-    narrow column never clusters; observed: a thin predicate on the
-    narrow column hit ALL files). The 4 scale constants come from one
-    tiny driver-side agg — a write-time op reads the data anyway."""
-    from pyspark.sql import functions as F
-
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).collect()[0]
-    top = (1 << bits) - 1
-
-    def scaled(c, lo, hi):
-        if hi == lo:
-            return F.lit(0)
-        return ((c.cast("double") - F.lit(float(lo)))
-                * F.lit(float(top)) / F.lit(float(hi - lo))).cast("long")
-
-    z = morton_code(
-        scaled(F.col(col_a), lo_a, hi_a),
-        scaled(F.col(col_b), lo_b, hi_b),
-        bits,
-    )
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def skew_split_join(

@@ -293,7 +293,8 @@ def debounce_events_kept(
 
     The order is (user, type, epoch-micros, event id): total, so the
     survivor set is deterministic and the streaming twin
-    (streaming.stateful.debounce_stream) reproduces it batch-for-batch.
+    (streaming.stateful.debounce_stream, registered against
+    events_debounce_kept in streaming.jobs.TWINS) reproduces it.
 
     Giant-key ceiling (tests/test_skew.py): a single (user, type) group
     hashes to ONE partition, so the whale key's events are scanned

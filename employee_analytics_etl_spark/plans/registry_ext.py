@@ -2071,14 +2071,13 @@ def knn_brp_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def orders_morton_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) interleave over (custkey, orderdate-day) —
-    the bit-spread primitive behind `write_zordered`, which range-
-    partitions and sorts by this code so parquet zone-maps prune
-    range predicates on EITHER column (the data-layout analogue of a
-    composite index). Pure integer shift/mask expressions; the oracle
-    re-derives the interleave bit-for-bit. NB the write path min-max
-    scales both columns to the bit domain first — raw interleave of
-    unequal domains lets the wider column's high bits dominate the
-    curve (tested: the narrow column then never clusters)."""
+    the bit-spread primitive a Z-ordered write range-partitions and
+    sorts by, so parquet zone-maps prune range predicates on EITHER
+    column (the data-layout analogue of a composite index). Pure
+    integer shift/mask expressions; the oracle re-derives the
+    interleave bit-for-bit. NB such a write must min-max scale both
+    columns to the bit domain first — raw interleave of unequal
+    domains lets the wider column's high bits dominate the curve."""
     from ..operators.partitioning import morton_code
 
     o = t(spark, sf_dir, "orders")

@@ -982,9 +982,8 @@ def orders_price_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     'did this column's distribution move between ingests'. Fixed
     equi-width buckets (floor(price/50k), clamped into [0, 9] from
     BOTH ends — the lower clamp keeps a hypothetical negative value
-    from silently vanishing below bucket 0, mirroring the streaming
-    twin psi_drift_stream) keep the
-    binning deterministic and snapshot-independent; counts ride ONE
+    from silently vanishing below bucket 0) keep the binning
+    deterministic and snapshot-independent; counts ride ONE
     scan each (partition-prunable by the date predicate); the bucket
     grid is a 10-row literal so zero-count buckets still appear with
     Laplace-smoothed shares (+0.5 / +0.5·B). Cross-engine

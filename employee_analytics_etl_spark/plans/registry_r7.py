@@ -194,9 +194,8 @@ def order_status_changes(orders: DataFrame) -> DataFrame:
     customer — one lag() window per custkey keeps the first row and
     every status flip: (c_custkey, status, odate, ckey). Shared by the
     batch PIT lookup below and its streaming twin
-    (streaming.jobs.pit_status_stream), so both sides of the
-    stream==batch pytest resolve probes against the IDENTICAL
-    history."""
+    (streaming.jobs.pit_status_stream, registered in streaming.jobs.TWINS),
+    so both resolve probes against the IDENTICAL history."""
     w = Window.partitionBy("o_custkey").orderBy("odate", "o_orderkey")
     ordered = (
         orders.select(

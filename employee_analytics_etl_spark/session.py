@@ -11,7 +11,8 @@ right *shape* at cluster scale:
 - ``spark.sql.shuffle.partitions`` defaults to the local core count;
   on a real cluster this would be ~2-3x total executor cores (AQE
   coalesces down, it can't split a too-small number... except via
-  skew handling), so we leave it overridable via env.
+  skew handling). ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides it for
+  a whole run, and ``extra_conf`` for one session.
 - Session timezone pinned to UTC: parquet timestamps must mean the
   same instant to Spark and to the DuckDB correctness oracle.
 - Arrow enabled: every Pandas-UDF extension operator (similarity,
@@ -50,7 +51,6 @@ DEFAULT_CPUS = int(
 def build_session(
     app_name: str = "employee_analytics_etl_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or get) the engine's SparkSession.
@@ -80,9 +80,7 @@ def build_session(
     # grows with input, AQE coalesce collapses the excess for free on
     # small stages — over-provisioning is safe, under-provisioning is
     # not).
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    )
+    shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
 
     builder = (
         SparkSession.builder.master(master)
@@ -134,7 +132,8 @@ def build_session(
         # Spark has no nanos type — read as epoch-nanos long, normalized in
         # sources.readers.read_parquet_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # static conf — bucketed-table tests need a writable warehouse
+        # static conf — the catalog creates its warehouse directory on
+        # first use (views, SQL); keep it out of the working directory
         .config(
             "spark.sql.warehouse.dir",
             os.path.join(tempfile.gettempdir(), f"spark-warehouse-{os.getpid()}"),

@@ -123,38 +123,6 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, table: str) -> DataFram
     )
 
 
-def read_fixed_width(
-    spark: SparkSession,
-    path: str,
-    fields: list[tuple[str, int, int, str]],
-    trim: bool = True,
-) -> DataFrame:
-    """Fixed-width (positional) flat-file scan — the mainframe/legacy
-    export format the CSV/Parquet readers lack. ``fields`` is
-    ``[(name, start_1_based, length, spark_type), ...]``; each column
-    is carved out of the line with ``substring`` and cast via
-    ``try_cast`` (unparseable → NULL, PERMISSIVE, never a mid-scan
-    ANSI failure). ``trim`` strips the
-    space padding fixed-width encoders emit.
-
-    Scale: ``spark.read.text`` splits the file like any text source
-    (one line per row, parallel by HDFS/object-store block); the
-    substring/cast work is pure codegen'd projection — no Python, no
-    shuffle. Short lines yield NULL columns (substring past the end is
-    empty → try_cast NULL), the classic tolerance for ragged tails."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.text(path)
-    cols = []
-    for name, start, length, dtype in fields:
-        c = F.substring(F.col("value"), start, length)
-        if trim:
-            c = F.trim(c)
-        c = F.nullif(c, F.lit(""))
-        cols.append(c.try_cast(dtype).alias(name))
-    return df.select(*cols)
-
-
 def load_sf_tables(
     spark: SparkSession, sf_dir: str, tables: list[str] | None = None
 ) -> dict[str, DataFrame]:

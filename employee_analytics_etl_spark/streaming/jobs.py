@@ -1,11 +1,20 @@
-"""Structured Streaming twins of the batch event-time operators
-(operators.windows). The reference has no streaming surface
-(SURVEY.md §2.11); this is the extension tier's stream path.
+"""Structured Streaming twins of the batch event-time queries. The
+reference has no streaming surface (SURVEY.md §2.11); this is the
+extension tier's stream path.
 
-Batch-first contract: every streaming job here has a batch twin whose
-semantics are DuckDB-oracle-checked (plans.registry events_* queries);
-the streaming tests then assert stream == batch on the same input via
-the file source + availableNow trigger + memory sink.
+``TWINS`` at the end of this module is the one place that pairs a
+stream twin with a batch registry query: it maps the query name to a
+builder ``(spark, sf_dir) -> streaming DataFrame`` and the twin's output
+mode. Drained over the query's input (file source, availableNow
+trigger, memory sink via ``run_to_memory``), each registered twin
+returns exactly the rows of that query's DuckDB oracle;
+tests/test_streaming.py checks every entry through
+``perfbench.oracle.compare``.
+
+``session_window_stream``, ``clicks_before_purchase_stream`` and
+``dedup_events_stream`` have no batch query with the same output.
+tools/bench_streaming.py and perfbench's ``llm_data`` workload drive
+them.
 
 Scale notes: watermark bounds state; the parquet file source is a
 stand-in for Kafka — swap ``build_events_stream`` for a kafka reader
@@ -15,12 +24,14 @@ in production, nothing downstream changes.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import events_ts_type
-from ..sources.schemas import events_schema
+from ..sources.readers import events_ts_type, read_parquet_table
+from ..sources.schemas import TESTDATA_SCHEMAS, events_schema
+from .stateful import debounce_stream, ewma_stream
 
 # MEASURED default delay for the event-time jobs below (r8, closing the
 # planner loop the way choose_blocking/choose_lsh_bands/choose_ann_index
@@ -36,8 +47,7 @@ from ..sources.schemas import events_schema
 # (in event time) behind the observed maximum is dropped by every job
 # that takes this default. Jobs whose delay is part of their RESULT
 # CONTRACT rather than a freshness/completeness trade keep their own
-# explicit defaults: the outer-join null emission horizon, the 8-day
-# sliding KMV, and dedup_events_stream (DEDUP_WATERMARK below — its
+# explicit default: dedup_events_stream (DEDUP_WATERMARK below — its
 # watermark bounds which duplicates are REMOVED, not merely which late
 # rows are admitted, so the measured loss curve doesn't license
 # shrinking it).
@@ -130,19 +140,17 @@ def build_events_stream(
 
 
 def tumbling_counts_stream(
-    events: DataFrame,
-    width: str = "1 hour",
-    watermark: str = DEFAULT_WATERMARK,
+    events: DataFrame, watermark: str = DEFAULT_WATERMARK
 ) -> DataFrame:
-    """Streaming tumbling-window counts+sums per event_type.
+    """Streaming hourly tumbling-window counts+sums per event_type.
 
     Watermark bounds state: windows older than (max event time −
-    watermark) are finalized and evicted. Output schema matches the
-    batch twin (window start epoch-seconds) for direct comparison.
+    watermark) are finalized and evicted. Streaming twin of
+    events_tumbling_hour (``TWINS``).
     """
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width), F.col("event_type"))
+        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
@@ -161,8 +169,10 @@ def session_window_stream(
     gap: str = "30 minutes",
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """Streaming sessionization via native session_window (the batch
-    twin is operators.windows.sessionize, gaps-and-islands)."""
+    """Streaming sessionization via native session_window. The batch
+    gaps-and-islands form (operators.windows.sessionize, query
+    events_sessionize) also emits each session's end and index, so this
+    twin is not in ``TWINS``; tools/bench_streaming.py drives it."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap), F.col("user_id"))
@@ -175,134 +185,6 @@ def session_window_stream(
             "user_id",
             "n_events",
             "total_value",
-        )
-    )
-
-
-def cms_user_counts_stream(
-    events: DataFrame,
-    width: str = "1 hour",
-    watermark: str = DEFAULT_WATERMARK,
-    depth: int = 4,
-    cms_width: int = 256,
-) -> DataFrame:
-    """Streaming count-min sketch of per-user event frequency, one
-    sketch per tumbling window: (window_start_sec, seed, bucket, cnt)
-    with bucket = md5('seed:user_id') mod width — the same
-    engine-portable hash family as the batch sketch_cms_token_counts
-    query, so stream and batch sketches are directly comparable (and
-    mergeable by summing cells).
-
-    Why a sketch in the stream: a per-user groupBy keys state by USER
-    (unbounded as the population grows); the sketch keys state by
-    (window × depth × cms_width) — CONSTANT per window regardless of
-    how many users appear. The watermark evicts finalized windows, so
-    total state is horizon/width × depth × cms_width cells. Point
-    estimates (min over depth rows) answer "roughly how active was
-    user u in hour h" without per-user state; exact top-k runs in
-    batch over the same parquet if needed."""
-    seeds = F.array(*[F.lit(s) for s in range(depth)])
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("seed").cast("string"),
-                        F.col("user_id").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % cms_width
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .select("ts", F.explode(seeds).alias("seed"), "user_id")
-        .withColumn("bucket", bucket)
-        .groupBy(F.window("ts", width), "seed", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("window_start_sec"),
-            "seed",
-            "bucket",
-            "cnt",
-        )
-    )
-
-
-def psi_drift_stream(
-    events: DataFrame,
-    reference: DataFrame,
-    width: str = "6 hours",
-    watermark: str = DEFAULT_WATERMARK,
-    n_buckets: int = 10,
-    bucket_width: float = 50.0,
-) -> DataFrame:
-    """Streaming distribution-drift monitor: per tumbling window, the
-    PSI contribution of each value bucket against a STATIC reference
-    histogram — drift detection in motion, the streaming twin of
-    orders_price_drift_psi.
-
-    ``reference`` is (bucket, share_ref) — precomputed from a trusted
-    snapshot, broadcast into every micro-batch (stream-static join,
-    no state beyond the windowed counts). The stream side is a single
-    windowed aggregation (valid in append mode); per-bucket psi_term
-    rows localize WHICH band drifted, and consumers sum terms per
-    window — the same reporting shape as the batch monitor, so one
-    dashboard serves both. Laplace smoothing keeps empty stream
-    buckets finite; ln is computed on single-division shares. Values
-    are clamped into [0, n_buckets-1] from BOTH ends — without the
-    lower clamp a negative value would bucket below 0 and silently
-    vanish from the counts AND the total, making drift in a negative
-    band invisible (mirrored in the batch twin)."""
-    bucket = F.greatest(
-        F.least(
-            F.floor(F.col("value") / bucket_width).cast("int"),
-            F.lit(n_buckets - 1),
-        ),
-        F.lit(0),
-    )
-    # Streaming forbids a SECOND aggregation (window totals), so all
-    # bucket counts come out of ONE windowed agg as conditional sums;
-    # the total is their row-local sum and the per-bucket rows are a
-    # post-agg posexplode (projection, not aggregation — legal in
-    # append mode). State per window: n_buckets longs.
-    win = (
-        events.withWatermark("ts", watermark)
-        .withColumn("bucket", bucket)
-        .groupBy(F.window("ts", width))
-        .agg(
-            *[
-                F.sum((F.col("bucket") == b).cast("long")).alias(f"n{b}")
-                for b in range(n_buckets)
-            ]
-        )
-    )
-    counts = F.array(*[F.col(f"n{b}") for b in range(n_buckets)])
-    exploded = win.select(
-        F.unix_timestamp(F.col("window.start")).alias("window_start_sec"),
-        F.aggregate(
-            counts, F.lit(0).cast("long"), lambda acc, v: acc + v
-        ).alias("n_total"),
-        F.posexplode(counts).alias("bucket", "n"),
-    )
-    share_cur = (F.col("n") + 0.5) / (F.col("n_total") + 0.5 * n_buckets)
-    psi_term = (share_cur - F.col("share_ref")) * F.log(
-        share_cur / F.col("share_ref")
-    )
-    return (
-        exploded.join(F.broadcast(reference), "bucket")
-        .select(
-            "window_start_sec",
-            "bucket",
-            F.col("n").cast("long").alias("n_events"),
-            F.col("share_ref"),
-            psi_term.alias("psi_term"),
         )
     )
 
@@ -399,403 +281,18 @@ def clicks_before_purchase_stream(
     ).select("purchase_id", "click_id", "p_user_id")
 
 
-def purchases_with_clicks_outer_stream(
-    events: DataFrame,
-    lookback_sec: int = 3600,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every purchase emits —
-    matched purchases as (purchase, click) pairs immediately, and
-    purchases with NO qualifying click as a null-padded row once the
-    watermark passes their join interval (the engine must hold the
-    purchase in state exactly that long to PROVE no click can still
-    arrive; this is the semantics inner joins cannot express and the
-    reason outer stream-stream joins require watermarks on both sides).
-    Null rows therefore arrive delayed by the watermark horizon — the
-    correctness/latency trade a production funnel pipeline tunes via
-    the watermark. Batch twin: the same condition as a left join."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            f"""
-            c_user_id = p_user_id AND
-            click_ts >= purchase_ts - INTERVAL {lookback_sec} SECONDS AND
-            click_ts < purchase_ts
-            """
-        ),
-        "left_outer",
-    ).select("purchase_id", "click_id", "p_user_id")
-
-
-def run_foreach_batch_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    inject_failure_batch: int | None = None,
-) -> None:
-    """Exactly-once file sink via foreachBatch: each micro-batch writes
-    to a ``batch_id=N`` subdirectory with mode=overwrite, so a batch
-    replayed after a failure overwrites its own output instead of
-    appending duplicates — idempotence from (deterministic batch id ×
-    overwrite), the standard recipe for non-transactional sinks
-    (JDBC upserts follow the same shape with a keyed MERGE).
-
-    The checkpoint directory records which batches committed; on
-    restart Structured Streaming replays only uncommitted batches.
-
-    ``inject_failure_batch`` is a chaos hook for the kill/recovery test
-    (tests/test_streaming.py): when the given batch id arrives it
-    writes only HALF the batch (a torn write — exactly what a mid-write
-    crash leaves behind) and raises, failing the query AFTER earlier
-    batches committed to the checkpoint. A restart on the same
-    checkpoint must replay that batch, overwrite the torn directory,
-    and end exactly-once.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if inject_failure_batch is not None and batch_id == inject_failure_batch:
-            half = max(1, batch_df.count() // 2)
-            batch_df.limit(half).write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
-            )
-            raise RuntimeError(
-                f"injected failure: torn write of batch {batch_id}"
-            )
-        (
-            batch_df.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
-            )
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def enriched_segment_counts_stream(
-    events: DataFrame, customer_dim: DataFrame
-) -> DataFrame:
-    """Stream-static join: enrich the event stream with a static
-    dimension (user → market segment), then count per segment. The
-    static side needs NO streaming state — Spark re-plans it into each
-    micro-batch as an ordinary broadcast-hash join, so dimension
-    updates between batches are picked up for free. This is the
-    streaming twin of J3 (emp ⟕ dept name lookup, transform.py:163):
-    same join, unbounded probe side."""
-    dim = customer_dim.select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    return (
-        events.join(F.broadcast(dim), "user_id", "left")
-        .groupBy(F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("segment"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-
-
-def near_dup_flag_stream(docs: DataFrame, base_bands: DataFrame) -> DataFrame:
-    """Stream-static near-dup screen: flag incoming documents whose
-    MinHash band buckets collide with a static base-corpus LSH index
-    (``operators.dedup.minhash_band_rows``, persisted and bucketable).
-
-    The stream side uses the STATELESS band computation
-    (``minhash_band_rows_stateless`` — per-row array_min signatures,
-    no aggregation), so the only operator touching streaming state is
-    nothing at all: banding is a projection, the index join is
-    stream-static (re-planned per micro-batch, so a nightly index
-    rebuild is picked up for free), and the output is one collision
-    row per (doc, band) hit carrying the matched base doc for
-    explainability. Downstream either dedups with
-    dropDuplicatesWithinWatermark or routes to the exact Jaccard
-    verifier — same generate→verify split as batch."""
-    from ..operators.dedup import minhash_band_rows_stateless
-
-    stream_bands = minhash_band_rows_stateless(docs)
-    idx = base_bands.select(
-        "band", "bucket", F.col("id").alias("base_id")
-    )
-    return (
-        stream_bands.join(F.broadcast(idx), ["band", "bucket"])
-        .filter(F.col("id") != F.col("base_id"))
-        .select(
-            F.col("id").alias("doc_id"), "band", "bucket", "base_id"
-        )
-    )
-
-
-def json_props_stream(
-    events: DataFrame,
-    width: str = "6 hours",
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
-    """Streaming semi-structured extraction: parse the events.props
-    JSON bag with a typed ``from_json`` schema inside the stream and
-    aggregate the extracted field per (window, event_type) — the
-    streaming twin of the batch events_props_json_stats query
-    (identical parse expression, so a schema change can't silently
-    diverge the two paths). Parsing is scan-side JVM work (malformed
-    rows → NULL, never a failed batch); state is the windowed
-    aggregate only, bounded by the watermark."""
-    k = F.from_json(F.col("props"), "k int")["k"]
-    return (
-        events.withWatermark("ts", watermark)
-        .select("ts", "event_type", k.alias("k"))
-        .groupBy(F.window("ts", width), F.col("event_type"))
-        .agg(
-            F.count("k").alias("n_with_k"),
-            F.sum("k").cast("long").alias("k_sum"),
-            F.min("k").cast("int").alias("k_min"),
-            F.max("k").cast("int").alias("k_max"),
-        )
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("window_start_sec"),
-            "event_type",
-            "n_with_k",
-            "k_sum",
-            "k_min",
-            "k_max",
-        )
-    )
-
-
-def distinct_users_stream(
-    events: DataFrame,
-    width: str = "6 hours",
-    watermark: str = DEFAULT_WATERMARK,
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Streaming windowed distinct users via approx_count_distinct
-    (HyperLogLog++) — EXACT windowed distinct counting in a stream
-    needs per-key state proportional to the distinct set, while the
-    HLL sketch is constant-size per window and mergeable across
-    micro-batches, which is why it's the streaming standard. Same
-    function and rsd on the batch twin, so stream == batch
-    cell-for-cell on bounded input (the sketch is deterministic for a
-    given value multiset)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width))
-        .agg(
-            F.approx_count_distinct("user_id", rsd).alias("approx_users"),
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-        )
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("window_start_sec"),
-            "approx_users",
-            "n_events",
-        )
-    )
-
-
-def run_foreach_batch_jdbc(
-    stream_df: DataFrame,
-    jdbc_options: dict,
-    checkpoint_dir: str,
-    spark: SparkSession | None = None,
-) -> None:
-    """Exactly-once STREAM → JDBC load via foreachBatch: each
-    micro-batch is stamped with its deterministic ``batch_id``, any
-    prior rows of that batch are DELETEd, then the batch appends —
-    (deterministic id × delete-before-insert) is the idempotence
-    recipe for non-transactional relational sinks, the JDBC analogue
-    of the ``batch_id=N`` overwrite directories in
-    ``run_foreach_batch_parquet``. A batch replayed after a crash
-    deletes its own torn rows first, so the table converges to
-    exactly-once regardless of where the failure landed; the
-    checkpoint decides WHICH batches replay.
-
-    This is the streaming version of the reference's MySQL load
-    (SURVEY S6) — same ``df.write.format("jdbc")`` path, driven by
-    Structured Streaming instead of a one-shot job."""
-    from ..sources.sinks import exec_jdbc_statement, jdbc_table_exists
-
-    table = jdbc_options["dbtable"]
-    url = jdbc_options["url"]
-    driver = jdbc_options.get("driver")
-    # Memoized existence probe: once the table is seen, the pre-append
-    # DELETE runs UNGUARDED — a delete that fails for any real reason
-    # (connection drop, lock timeout, permissions) must fail the
-    # micro-batch so the checkpoint replays it, NOT be swallowed as if
-    # the table were merely absent (appending after a swallowed DELETE
-    # failure duplicates rows and silently breaks exactly-once).
-    table_seen = [False]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = spark or batch_df.sparkSession
-        bdf = batch_df.withColumn(
-            "batch_id", F.lit(int(batch_id)).cast("long")
-        )
-        if not table_seen[0]:
-            table_seen[0] = jdbc_table_exists(s, url, table, driver=driver)
-        if table_seen[0]:
-            exec_jdbc_statement(
-                s, url, f"DELETE FROM {table} WHERE batch_id = {batch_id}",
-                driver=driver,
-            )
-        bdf.write.format("jdbc").options(**jdbc_options).mode("append").save()
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def kmv_distinct_stream(
-    events: DataFrame,
-    width: str = "1 hour",
-    watermark: str = DEFAULT_WATERMARK,
-    k: int = 64,
-) -> DataFrame:
-    """Streaming distinct-user sketch per tumbling window via BUCKETED
-    MINIMUM HASHES (the stochastic-averaging form of KMV, mergeable
-    like the batch bottom-k sketch in events_kmv_set_overlap): each
-    user hashes to one of ``k`` buckets (md5 bits) and the stream keeps
-    only min(h) per (window, bucket) — ``min`` is an ordinary
-    streaming aggregate, so state is EXACTLY k cells per open window
-    no matter how many users appear (the same constant-state argument
-    as cms_user_counts_stream; a bottom-k list is not expressible as a
-    built-in streaming aggregate, a per-bucket min is).
-
-    Emits (window_start_sec, bucket, min_h). The consumer estimates
-    distinct users as k²/Σmin − k (E[min of m uniforms] = 1/(m+1));
-    duplicates are free — a repeated user lands in the same bucket
-    with the same hash. Deterministic (md5-derived hashes), so the
-    batch twin is cell-for-cell comparable."""
-    fp = F.expr(
-        "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 15), 16, 10) "
-        "AS BIGINT)"
-    )
-    h = fp / F.lit(1152921504606846976.0)
-    bucket = F.pmod(
-        F.expr(
-            "CAST(conv(substr(md5(CAST(user_id AS STRING)), 16, 8), 16, 10) "
-            "AS BIGINT)"
-        ),
-        F.lit(k),
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .select("ts", h.alias("h"), bucket.alias("bucket"))
-        .groupBy(F.window("ts", width), "bucket")
-        .agg(F.min("h").alias("min_h"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("window_start_sec"),
-            "bucket",
-            "min_h",
-        )
-    )
-
-
-def kmv_rolling_distinct_stream(
-    events: DataFrame,
-    width: str = "7 days",
-    slide: str = "1 day",
-    watermark: str = "8 days",
-    k: int = 64,
-) -> DataFrame:
-    """Streaming twin of ``events_rolling_7d_active_users`` (judge r5
-    #7): rolling-window distinct-user sketch via the same BUCKETED
-    MINIMUM HASHES as ``kmv_distinct_stream``, over a SLIDING window
-    instead of a tumbling one. COUNT(DISTINCT) over a sliding frame is
-    not a streaming aggregate in any engine; per-bucket min IS — it is
-    mergeable (min of mins) and idempotent (a repeated user rehashes to
-    the same cell), which is exactly what a window that sees each event
-    ``width/slide`` times needs.
-
-    Spark's sliding window assigns each event to its (width/slide)
-    covering window instances; state is EXACTLY k cells per OPEN window
-    instance regardless of user count, and the watermark (one slide
-    past the width) bounds how many instances stay open. Emits
-    (window_end_sec, bucket, min_h) — window END because the rolling
-    WAU curve anchors on "the 7 days ending here". The consumer
-    estimates distinct users as k²/Σmin − k; md5-derived hashes make
-    the batch twin cell-for-cell identical.
-
-    Epoch-aligned window boundaries (Spark's sliding spec) vs the batch
-    query's activity-anchored days is a DOCUMENTED divergence: the
-    batch registry query emits one row per active calendar day; this
-    stream emits one row-group per epoch-aligned day boundary. Same
-    metric, different spine — the pytest twins against the same window
-    spec run in batch mode, which Spark guarantees identical."""
-    fp = F.expr(
-        "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 15), 16, 10) "
-        "AS BIGINT)"
-    )
-    h = fp / F.lit(1152921504606846976.0)
-    bucket = F.pmod(
-        F.expr(
-            "CAST(conv(substr(md5(CAST(user_id AS STRING)), 16, 8), 16, 10) "
-            "AS BIGINT)"
-        ),
-        F.lit(k),
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .select("ts", h.alias("h"), bucket.alias("bucket"))
-        .groupBy(F.window("ts", width, slide), "bucket")
-        .agg(F.min("h").alias("min_h"))
-        .select(
-            F.unix_timestamp(F.col("window.end")).alias("window_end_sec"),
-            "bucket",
-            "min_h",
-        )
-    )
-
-
-ORDERS_SCHEMA = (
-    "o_orderkey long, o_custkey long, o_orderstatus string, "
-    "o_totalprice double, o_orderdate timestamp, o_orderpriority string"
-)
-
-
-def build_orders_probe_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "orders.parquet",
-    probe_modulus: int = 7,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def build_orders_probe_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of PIT probes over the orders table: every
-    ``probe_modulus``-th order asks "what was this customer's status
-    dimension as of my order date?" — the probe side of the
-    feature-store lookup. Emits (o_orderkey, o_custkey, pdate,
-    own_status), the exact probe relation of the batch
-    ``orders_pit_status_lookup`` so the twin test compares
-    cell-for-cell."""
-    reader = (
-        spark.readStream.format("parquet")
-        .schema(ORDERS_SCHEMA)
-        .option("pathGlobFilter", glob)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    7th order asks "what was this customer's status dimension as of my
+    order date?" — the probe side of the feature-store lookup. Emits
+    (o_orderkey, o_custkey, pdate, own_status), the exact probe
+    relation of the batch ``orders_pit_status_lookup``."""
     return (
-        reader.load(sf_dir)
-        .filter(F.col("o_orderkey") % probe_modulus == 0)
+        spark.readStream.format("parquet")
+        .schema(TESTDATA_SCHEMAS["orders"])
+        .option("pathGlobFilter", "orders.parquet")
+        .load(sf_dir)
+        .filter(F.col("o_orderkey") % 7 == 0)
         .select(
             "o_orderkey",
             "o_custkey",
@@ -824,12 +321,11 @@ def pit_status_stream(probes: DataFrame, changes: DataFrame) -> DataFrame:
     streaming aggregation keyed by probe id, so each probe holds ONE
     (status, odate, ckey) cell of state — max_by is mergeable, so late
     fragments of the same probe's candidate set fold in correctly.
-    The twin test drives it availableNow/complete over a bounded
-    probe file; an unbounded production probe stream caps state by
-    either watermarking pdate (probes expire once resolved) or the
-    ``run_foreach_batch_parquet`` point-serve shape — resolve each
-    micro-batch against the history with the BATCH argmax and write
-    exactly-once, holding zero streaming state."""
+    ``TWINS`` drains it availableNow/complete over a bounded probe
+    file; an unbounded production probe stream caps state by either
+    watermarking pdate (probes expire once resolved) or a foreachBatch
+    point-serve — resolve each micro-batch against the history with the
+    BATCH argmax and write exactly-once, holding zero streaming state."""
     j = probes.join(
         changes,
         (probes.o_custkey == changes.c_custkey)
@@ -857,7 +353,7 @@ def ohlc_stream(events: DataFrame, watermark: str = DEFAULT_WATERMARK) -> DataFr
     (ts, event_id) total-order struct, low/high/count as plain
     min/max/count. Every aggregate here is a MERGEABLE monoid
     (min_by/max_by merge by comparing order keys), so unlike the
-    funnel/EWMA state machines this twin needs NO in-order-replay
+    EWMA/debounce state machines this twin needs NO in-order-replay
     contract: state folds correctly under ANY arrival order, and the
     watermark only bounds how long window state stays open. One row
     per (user, hour) of state — the candlestick itself."""
@@ -889,3 +385,32 @@ def ohlc_stream(events: DataFrame, watermark: str = DEFAULT_WATERMARK) -> DataFr
             "n_events",
         )
     )
+
+
+def _pit_status_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..plans.registry_r7 import order_status_changes
+
+    changes = order_status_changes(read_parquet_table(spark, sf_dir, "orders"))
+    return pit_status_stream(build_orders_probe_stream(spark, sf_dir), changes)
+
+
+# Batch registry query name -> (builder, output mode) of its stream twin.
+TWINS: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "events_tumbling_hour": (
+        lambda spark, sf_dir: tumbling_counts_stream(build_events_stream(spark, sf_dir)),
+        "complete",
+    ),
+    "events_value_ohlc": (
+        lambda spark, sf_dir: ohlc_stream(build_events_stream(spark, sf_dir)),
+        "complete",
+    ),
+    "events_value_ewma": (
+        lambda spark, sf_dir: ewma_stream(build_events_stream(spark, sf_dir)),
+        "update",
+    ),
+    "events_debounce_kept": (
+        lambda spark, sf_dir: debounce_stream(build_events_stream(spark, sf_dir)),
+        "append",
+    ),
+    "orders_pit_status_lookup": (_pit_status_twin, "complete"),
+}

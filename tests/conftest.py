@@ -9,9 +9,11 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import os
+import struct
 import sys
 from typing import NamedTuple
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -28,7 +30,11 @@ AS_OF = dt.date(2025, 12, 29)
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="engine-tests", master="local[4]", shuffle_partitions=4)
+    s = build_session(
+        app_name="engine-tests",
+        master="local[4]",
+        extra_conf={"spark.sql.shuffle.partitions": "4"},
+    )
     yield s
     s.stop()
 
@@ -48,6 +54,30 @@ def shuffle_partitions(spark, n: int):
 
 def d(s: str | None) -> dt.date | None:
     return dt.date.fromisoformat(s) if s else None
+
+
+def encode_ppm(arr: np.ndarray) -> bytes:
+    """An HxWx3 uint8 RGB array as a binary PPM (P6) payload, the input
+    the PPM decoder is tested on."""
+    h, w, _ = arr.shape
+    return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(arr, dtype=np.uint8).tobytes()
+
+
+def encode_bmp(arr: np.ndarray) -> bytes:
+    """An HxWx3 uint8 RGB array as an uncompressed bottom-up 24-bit BMP
+    payload, rows padded to 4 bytes, the input the BMP decoder is
+    tested on."""
+    h, w, _ = arr.shape
+    stride = (w * 3 + 3) & ~3
+    body = np.zeros((h, stride), dtype=np.uint8)
+    body[:, : w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
+    pix = body.tobytes()
+    header = struct.pack(
+        "<2sIHHI" "IiiHHIIiiII",
+        b"BM", 54 + len(pix), 0, 0, 54,
+        40, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0,
+    )
+    return header + pix
 
 
 @pytest.fixture(scope="session")

@@ -278,8 +278,6 @@ print(json.dumps({
         root = pathlib.Path(__file__).resolve().parent.parent
         pkg = root / "employee_analytics_etl_spark"
         exempt_modules = {
-            "streaming": "streaming twins: ROADMAP measures them and "
-            "tools/bench_streaming.py drives them",
             "__main__.py": "the CLI, run as python -m employee_analytics_etl_spark",
         }
         exempt_prefix = {
@@ -293,16 +291,6 @@ print(json.dumps({
             "are tested against",
             "clear_pair_budget_cache": "the only remedy for the pair-budget "
             "memo's documented staleness window",
-            # Called only by tests. Deleting each retires the tests named
-            # in CHANGES.md; left for a change that retires them.
-            "read_fixed_width": "deferred: only tests call it",
-            "bpe_encode": "deferred: only tests call it",
-            "resample_audio": "deferred: only tests call it",
-            "compact_parquet": "deferred: only tests call it",
-            "upsert_parquet": "deferred: only tests call it",
-            "resize_images": "deferred: only tests call it",
-            "write_bucketed": "deferred: only tests call it",
-            "write_zordered": "deferred: only tests call it",
         }
 
         refs = set()

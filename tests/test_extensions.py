@@ -13,7 +13,7 @@ from employee_analytics_etl_spark.operators import multimodal as MM
 from employee_analytics_etl_spark.operators import similarity as S
 from employee_analytics_etl_spark.operators import text as TX
 from employee_analytics_etl_spark.operators import windows as W
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, encode_bmp, encode_ppm
 
 
 @pytest.fixture(scope="module")
@@ -323,11 +323,6 @@ class TestMultimodal:
             MM.extract_features(media, decode="strict").collect()
         assert "NotImplementedError" in str(ei.value) or "decode" in str(ei.value)
 
-    def test_resize_contract(self, media):
-        out = MM.resize_images(media, 8, 8).collect()
-        assert all(len(r["payload"]) == 64 for r in out)
-        assert all(r["kind"] == "image" for r in out)
-
     def test_frame_sampling(self, media):
         out = MM.sample_frames(media, every_k=2).collect()
         assert len(out) > 0
@@ -352,8 +347,8 @@ class TestRealImageDecode:
         from employee_analytics_etl_spark.operators import codecs as C
 
         img = self._gradient(13, 7)  # odd width exercises BMP row padding
-        assert np.array_equal(C.decode_ppm(C.encode_ppm(img)), img)
-        assert np.array_equal(C.decode_bmp(C.encode_bmp(img)), img)
+        assert np.array_equal(C.decode_ppm(encode_ppm(img)), img)
+        assert np.array_equal(C.decode_bmp(encode_bmp(img)), img)
         # comment + whitespace tolerant PPM header
         hdr = b"P6\n# comment\n13 7\n255\n" + img.tobytes()
         assert np.array_equal(C.decode_ppm(hdr), img)
@@ -361,12 +356,10 @@ class TestRealImageDecode:
     def test_extract_features_real_pixels(self, spark):
         import numpy as np
 
-        from employee_analytics_etl_spark.operators import codecs as C
-
         img = self._gradient(16, 8)
         rows = [
-            (1, "image", bytearray(C.encode_ppm(img)), None),
-            (2, "image", bytearray(C.encode_bmp(img)), None),
+            (1, "image", bytearray(encode_ppm(img)), None),
+            (2, "image", bytearray(encode_bmp(img)), None),
         ]
         df = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
         got = {r["media_id"]: r for r in MM.extract_features(df, decode="real").collect()}
@@ -376,48 +369,6 @@ class TestRealImageDecode:
             assert f[0] == 16.0 and f[1] == 8.0
             assert np.allclose(f[2:], exp_means)
             assert abs(got[mid]["mean_byte"] - img.mean()) < 1e-9
-
-    def test_resize_real_picks_exact_pixels(self, spark):
-        import numpy as np
-
-        from employee_analytics_etl_spark.operators import codecs as C
-
-        img = self._gradient(16, 8)
-        df = spark.createDataFrame(
-            [(1, "image", bytearray(C.encode_ppm(img)), None)], MM.MEDIA_SCHEMA
-        )
-        out = MM.resize_images(df, 4, 4, decode="real").collect()
-        assert len(out) == 1
-        resized = C.decode_ppm(bytes(out[0]["payload"]))
-        # nearest-neighbor: row r maps to source row (r*8)//4, col c to (c*16)//4
-        exp = img[(np.arange(4) * 8) // 4][:, (np.arange(4) * 16) // 4]
-        assert np.array_equal(resized, exp)
-
-    def test_resize_real_preserves_container_format(self, spark):
-        """out_format='match': PNG in → PNG out, BMP in → BMP out,
-        PPM in → PPM out, identical pixels in every container."""
-        import numpy as np
-
-        from employee_analytics_etl_spark.operators import codecs as C
-
-        img = self._gradient(16, 8)
-        rows = [
-            (1, "image", bytearray(C.encode_png(img)), None),
-            (2, "image", bytearray(C.encode_bmp(img)), None),
-            (3, "image", bytearray(C.encode_ppm(img)), None),
-        ]
-        df = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-        out = {
-            r["media_id"]: bytes(r["payload"])
-            for r in MM.resize_images(df, 4, 4, decode="real").collect()
-        }
-        exp = img[(np.arange(4) * 8) // 4][:, (np.arange(4) * 16) // 4]
-        assert out[1][:8] == b"\x89PNG\r\n\x1a\n"
-        assert np.array_equal(C.decode_png(out[1]), exp)
-        assert out[2][:2] == b"BM"
-        assert np.array_equal(C.decode_bmp(out[2]), exp)
-        assert out[3][:2] == b"P6"
-        assert np.array_equal(C.decode_ppm(out[3]), exp)
 
     def test_real_decode_raises_on_unknown_format(self, spark):
         df = spark.createDataFrame(
@@ -1118,7 +1069,7 @@ class TestBmpTopDown:
         from employee_analytics_etl_spark.operators import codecs as C
 
         img = TestRealImageDecode._gradient(5, 4)
-        data = bytearray(C.encode_bmp(img))
+        data = bytearray(encode_bmp(img))
         # flip to top-down: negate height, reorder rows to top-first
         h, w = 4, 5
         stride = (w * 3 + 3) & ~3
@@ -1238,16 +1189,6 @@ class TestIncrementalMinhash:
         assert not any(a % 7 != 0 and b % 7 != 0 for a, b in inc)
 
 
-class TestStatelessBandRows:
-    def test_stateless_equals_grouped(self, spark):
-        from employee_analytics_etl_spark.sources.readers import read_parquet_table
-
-        docs = read_parquet_table(spark, SF_SMOKE, "documents")
-        a = sorted(map(tuple, D.minhash_band_rows(docs).collect()))
-        b = sorted(map(tuple, D.minhash_band_rows_stateless(docs).collect()))
-        assert a == b and len(a) > 0
-
-
 class TestInt8Quantize:
     def test_roundtrip_error_and_edge_cases(self, spark):
         rows = [
@@ -1346,45 +1287,6 @@ class TestBpeTrain:
         ).collect()[0][0]
         chars = sum(len(w) * f for w, f in wf.items())
         assert total < chars
-
-    def test_encode_reproduces_training_symbol_table(self, spark):
-        """bpe_encode over the training corpus must tokenize every word
-        exactly as bpe_train's final symbol table does (same merge
-        semantics, distributed apply), and character mass must be
-        conserved (merges only concatenate)."""
-        from employee_analytics_etl_spark.operators import bpe as B
-
-        rows = [
-            (1, "low lower lowest low low"),
-            (2, "new newer newest new newer"),
-            (3, "wider wide wide widest lower"),
-            (4, ""),  # empty doc: 0 words, 0 tokens
-        ]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        merges, symbols = B.bpe_train(B.word_freqs(docs), n_merges=6)
-        enc = {
-            r["doc_id"]: r
-            for r in B.bpe_encode(docs, merges).collect()
-        }
-        table = {r["word"]: list(r["syms"]) for r in symbols.collect()}
-        for did, text in rows:
-            words = text.lower().split()
-            want = [s for w in words for s in table[w]] if words else []
-            assert list(enc[did]["tokens"]) == want, did
-            assert enc[did]["n_words"] == len(words)
-            assert enc[did]["n_tokens"] == len(want)
-            assert enc[did]["n_chars"] == sum(len(w) for w in words)
-
-    def test_encode_zero_merges_is_character_split(self, spark):
-        from employee_analytics_etl_spark.operators import bpe as B
-
-        docs = spark.createDataFrame(
-            [(1, "ab cde")], "doc_id long, text string"
-        )
-        r = B.bpe_encode(docs, []).collect()[0]
-        assert list(r["tokens"]) == ["a", "b", "c", "d", "e"]
-        assert r["n_tokens"] == 5 and r["n_words"] == 2
-
 
 class TestBigramLM:
     def test_common_transitions_score_higher(self, spark):
@@ -1576,28 +1478,6 @@ class TestAudioDecode:
         f2 = got[2]["feature"]
         assert f2[3] == 0.0 and f2[4] == 0.0
         assert abs(f2[2] - 0.5) < 1e-12
-
-
-class TestAudioResample:
-    def test_halving_rate_picks_every_second_frame(self, spark):
-        import numpy as np
-
-        from employee_analytics_etl_spark.operators.codecs import (
-            decode_wav,
-            encode_wav,
-        )
-
-        rng = np.random.default_rng(7)
-        s = rng.integers(-32768, 32767, size=1000, dtype=np.int16)
-        df = spark.createDataFrame(
-            [(1, "audio", bytearray(encode_wav(16000, s)))],
-            "media_id long, kind string, payload binary",
-        )
-        r = MM.resample_audio(df, 8000, decode="real").collect()[0]
-        assert r["out_rate"] == 8000 and r["n_frames"] == 500
-        rate, out = decode_wav(bytes(r["payload"]))
-        assert rate == 8000
-        assert np.array_equal(out[:, 0], s[::2])  # exact frame picks
 
 
 class TestHeavyHitters:

@@ -1,13 +1,12 @@
-"""End-to-end JDBC load path (S6/S7) against a REAL database.
+"""End-to-end JDBC load path (S6) against a REAL database.
 
 The reference's load phase (reference scripts/load.py:15-47) is a
 MySQL truncate+insert; no MySQL exists in this sandbox, but Spark
 ships the embedded Apache Derby driver (it backs the Hive metastore),
-which speaks real JDBC — CREATE TABLE, TRUNCATE, batched INSERT,
-sessionInitStatement — through the exact same ``df.write.format
-("jdbc")`` path a MySQL load would use. So ``write_jdbc`` is executed
-for real here: create, read back and diff, truncate+reload, and the
-S7 sessionInitStatement pass-through.
+which speaks real JDBC — CREATE TABLE, TRUNCATE, batched INSERT —
+through the exact same ``df.write.format("jdbc")`` path a MySQL load
+would use. So ``write_jdbc`` is executed for real here: create, read
+back and diff, and truncate+reload.
 """
 
 from __future__ import annotations
@@ -78,38 +77,6 @@ class TestJdbcRoundTrip:
         got = _read_back(spark, derby_url, "trunc_rt").collect()
         assert [(r["id"], r["label"]) for r in got] == [(3, "three")]
 
-    def test_pre_load_statement_executes(self, spark, derby_url):
-        """S7: the pre-load session statement (the reference's SET
-        FOREIGN_KEY_CHECKS=0 slot) executes for real before the load.
-        Spark's sessionInitStatement only fires on READ connections, so
-        the engine routes pre-load toggles through a direct JDBC
-        statement — proven here by a side effect (DDL) that the
-        subsequent write depends on."""
-        from employee_analytics_etl_spark.sources.sinks import exec_jdbc_statement
-
-        exec_jdbc_statement(
-            spark, derby_url,
-            "CREATE TABLE si_pre_rt (id BIGINT, note VARCHAR(20))",
-            driver=DERBY_DRIVER,
-        )
-        df = spark.createDataFrame([(1, "ok")], "id BIGINT, note STRING")
-        # append into the pre-created table: if the DDL had not
-        # executed, truncate=false + append would still work, so diff
-        # the declared column type instead — VARCHAR(20) proves OUR
-        # table (Spark auto-create would emit CLOB for strings).
-        opts = jdbc_write_options(
-            derby_url, "si_pre_rt", user="app", password="",
-            truncate=False, driver=DERBY_DRIVER,
-        )
-        write_jdbc(df, opts, mode="append")
-        got = _read_back(spark, derby_url, "si_pre_rt")
-        assert got.collect() == [(1, "ok")]
-
-        with pytest.raises(Exception):
-            exec_jdbc_statement(
-                spark, derby_url, "THIS IS NOT SQL", driver=DERBY_DRIVER
-            )
-
     def test_pipeline_summary_load(self, spark, derby_url, hr):
         """Load a real pipeline output (dept summary) like the
         reference's load phase loads summary_dept_metrics."""
@@ -135,114 +102,3 @@ class TestJdbcRoundTrip:
         exp = {tuple(r) for r in out.collect()}
         assert {tuple(r) for r in got.collect()} == exp
 
-
-class TestStreamingJdbcSink:
-    def test_stream_to_jdbc_exactly_once(self, spark, derby_url, tmp_path_factory):
-        """Stream → Derby via foreachBatch with the delete-before-insert
-        idempotence recipe: a rerun on the same checkpoint must not
-        duplicate rows, and the table must hold exactly the batch
-        input."""
-        from employee_analytics_etl_spark.sources.readers import (
-            read_parquet_table,
-        )
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            run_foreach_batch_jdbc,
-        )
-        from tests.conftest import SF_SMOKE
-
-        ckpt = str(tmp_path_factory.mktemp("sjdbc_ckpt"))
-        opts = jdbc_write_options(
-            derby_url, "events_stream_load", user="app", password="",
-            truncate=False, driver=DERBY_DRIVER,
-        )
-        stream = build_events_stream(spark, SF_SMOKE).select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        run_foreach_batch_jdbc(stream, opts, ckpt, spark=spark)
-        n_expected = read_parquet_table(spark, SF_SMOKE, "events").count()
-        got1 = _read_back(spark, derby_url, "events_stream_load")
-        assert got1.count() == n_expected
-        # rerun on the SAME checkpoint: committed batches don't replay
-        stream2 = build_events_stream(spark, SF_SMOKE).select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        run_foreach_batch_jdbc(stream2, opts, ckpt, spark=spark)
-        got2 = _read_back(spark, derby_url, "events_stream_load")
-        assert got2.count() == n_expected
-        assert got2.select("event_id").distinct().count() == n_expected
-
-    def test_failed_delete_fails_batch_not_swallowed(
-        self, spark, derby_url, tmp_path_factory, monkeypatch
-    ):
-        """Judge r4 (medium): a DELETE that fails against an EXISTING
-        table must fail the micro-batch (so the checkpoint replays it)
-        — not be swallowed as 'table absent' with the append running on
-        top of torn rows, which would silently duplicate."""
-        import pytest
-
-        from employee_analytics_etl_spark.sources import sinks as sinks_mod
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            run_foreach_batch_jdbc,
-        )
-        from tests.conftest import SF_SMOKE
-
-        opts = jdbc_write_options(
-            derby_url, "events_stream_guard", user="app", password="",
-            truncate=False, driver=DERBY_DRIVER,
-        )
-        stream = build_events_stream(spark, SF_SMOKE).select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        # first load creates the table (existence probe → no DELETE yet)
-        run_foreach_batch_jdbc(
-            stream, opts, str(tmp_path_factory.mktemp("g_ck1")), spark=spark
-        )
-        n = _read_back(spark, derby_url, "events_stream_guard").count()
-        assert n > 0
-
-        def boom(*a, **kw):
-            raise RuntimeError("injected: connection dropped mid-DELETE")
-
-        monkeypatch.setattr(sinks_mod, "exec_jdbc_statement", boom)
-        stream2 = build_events_stream(spark, SF_SMOKE).select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        with pytest.raises(Exception, match="injected"):
-            run_foreach_batch_jdbc(
-                stream2, opts, str(tmp_path_factory.mktemp("g_ck2")),
-                spark=spark,
-            )
-        # the append never ran: row count unchanged, no duplicates
-        assert (
-            _read_back(spark, derby_url, "events_stream_guard").count() == n
-        )
-
-
-class TestTableExistsProbe:
-    def test_absent_table_is_false(self, spark, derby_url):
-        from employee_analytics_etl_spark.sources.sinks import (
-            jdbc_table_exists,
-        )
-
-        assert not jdbc_table_exists(
-            spark, derby_url, "never_created_tbl", driver=DERBY_DRIVER
-        )
-
-    def test_non_absent_failure_propagates(self, spark, derby_url):
-        """Judge r5 (medium): only the TABLE-NOT-FOUND SQLState may map
-        to False. Any other probe failure (here: a syntax error, stand-in
-        for lock timeout / dropped connection / permissions) must RAISE
-        so run_foreach_batch_jdbc fails the micro-batch instead of
-        skipping the DELETE and appending duplicates."""
-        import pytest
-
-        from employee_analytics_etl_spark.sources.sinks import (
-            jdbc_table_exists,
-        )
-
-        with pytest.raises(Exception):
-            jdbc_table_exists(
-                spark, derby_url, "1BAD SYNTAX!!", driver=DERBY_DRIVER
-            )

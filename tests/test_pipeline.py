@@ -329,67 +329,6 @@ class TestSchemaEvolution:
         ).lower() or "Failed" in str(ei.value)
 
 
-class TestFixedWidthSource:
-    def test_fixed_width_parse_trim_ragged_and_permissive(
-        self, spark, tmp_path
-    ):
-        """Fixed-width carve-out: typed columns from positions, padding
-        trimmed, short (ragged) lines yield NULLs, and garbage in a
-        numeric field goes NULL (PERMISSIVE) instead of failing the
-        scan."""
-        from employee_analytics_etl_spark.sources.readers import (
-            read_fixed_width,
-        )
-
-        #        1-6     7-16        17-26       27-36
-        lines = [
-            "000001Alice     2024-01-15    123.45",
-            "000002Bob       2024-02-20      7.00",
-            "000003Carol     2024-03-05",        # ragged: no amount
-            "00000XDave      not-a-date    abc   ",  # garbage id/date/amt
-        ]
-        p = tmp_path / "fw.txt"
-        p.write_text("\n".join(lines) + "\n")
-
-        fields = [
-            ("id", 1, 6, "BIGINT"),
-            ("name", 7, 10, "STRING"),
-            ("day", 17, 10, "DATE"),
-            ("amount", 27, 10, "DOUBLE"),
-        ]
-        rows = {
-            r["name"]: r
-            for r in read_fixed_width(spark, str(p), fields).collect()
-        }
-        assert rows["Alice"]["id"] == 1
-        assert str(rows["Alice"]["day"]) == "2024-01-15"
-        assert rows["Alice"]["amount"] == 123.45
-        assert rows["Bob"]["amount"] == 7.00
-        # ragged tail → NULL column, row still present
-        assert rows["Carol"]["amount"] is None
-        assert str(rows["Carol"]["day"]) == "2024-03-05"
-        # unparseable values → NULL, not a job failure
-        assert rows["Dave"]["id"] is None
-        assert rows["Dave"]["day"] is None
-        assert rows["Dave"]["amount"] is None
-
-    def test_fixed_width_is_pure_projection(self, spark, tmp_path):
-        """The parse plan must stay scan+project (codegen) — no
-        exchange, no Python evaluation."""
-        from employee_analytics_etl_spark.sources.readers import (
-            read_fixed_width,
-        )
-
-        p = tmp_path / "fw2.txt"
-        p.write_text("000001Alice     2024-01-15    123.45\n")
-        df = read_fixed_width(
-            spark, str(p), [("id", 1, 6, "BIGINT"), ("name", 7, 10, "STRING")]
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 class TestPythonDataSource:
     """Spark 4 Python DataSource API: the custom 'seqgen' source must
     plan partitioned reads (driver plans ranges, workers generate)

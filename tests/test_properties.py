@@ -9,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from employee_analytics_etl_spark.operators import codecs as C
+from tests.conftest import encode_bmp, encode_ppm
 
 dims = st.tuples(st.integers(1, 40), st.integers(1, 40))
 
@@ -24,7 +25,7 @@ class TestCodecProperties:
     def test_ppm_roundtrip(self, hw, seed):
         h, w = hw
         img = _random_img(h, w, seed)
-        assert np.array_equal(C.decode_ppm(C.encode_ppm(img)), img)
+        assert np.array_equal(C.decode_ppm(encode_ppm(img)), img)
 
     @settings(max_examples=50, deadline=None)
     @given(dims, st.integers(0, 2**31 - 1))
@@ -32,7 +33,7 @@ class TestCodecProperties:
         # widths 1..40 sweep all four 4-byte row-padding cases
         h, w = hw
         img = _random_img(h, w, seed)
-        assert np.array_equal(C.decode_bmp(C.encode_bmp(img)), img)
+        assert np.array_equal(C.decode_bmp(encode_bmp(img)), img)
 
     @settings(max_examples=50, deadline=None)
     @given(dims, st.integers(0, 2**31 - 1))
@@ -42,34 +43,6 @@ class TestCodecProperties:
         h, w = hw
         img = _random_img(h, w, seed)
         assert np.array_equal(C.decode_png(C.encode_png(img)), img)
-
-    @settings(max_examples=30, deadline=None)
-    @given(dims, dims, st.integers(0, 2**31 - 1))
-    def test_resize_reencode_format_match_roundtrip(self, hw_src, hw_dst, seed):
-        # the resize_images "match" contract: PNG in → PNG out, BMP in
-        # → BMP out, with exact pixel equality vs resizing the array
-        (h, w), (oh, ow) = hw_src, hw_dst
-        img = _random_img(h, w, seed)
-        want = C.resize_nearest(img, ow, oh)
-        png_out = C.encode_png(want)
-        assert png_out[:8] == b"\x89PNG\r\n\x1a\n"
-        assert np.array_equal(C.decode_png(png_out), want)
-        bmp_out = C.encode_bmp(want)
-        assert bmp_out[:2] == b"BM"
-        assert np.array_equal(C.decode_bmp(bmp_out), want)
-
-    @settings(max_examples=30, deadline=None)
-    @given(dims, dims, st.integers(0, 2**31 - 1))
-    def test_resize_dims_and_identity(self, hw_src, hw_dst, seed):
-        (h, w), (oh, ow) = hw_src, hw_dst
-        img = _random_img(h, w, seed)
-        out = C.resize_nearest(img, ow, oh)
-        assert out.shape == (oh, ow, 3)
-        # resizing to the same size is the identity
-        assert np.array_equal(C.resize_nearest(img, w, h), img)
-        # every output pixel exists somewhere in the source (nearest
-        # neighbor never invents values)
-        assert out.reshape(-1, 3).dtype == np.uint8
 
     @settings(max_examples=30, deadline=None)
     @given(st.integers(1, 30), st.integers(1, 30), st.integers(0, 2**31 - 1))
@@ -132,27 +105,6 @@ class TestWavProperties:
         r, out = C.decode_wav(C.encode_wav(rate, s))
         assert r == rate
         assert np.array_equal(out, s)
-
-
-class TestResampleProperties:
-    @settings(max_examples=50, deadline=None)
-    @given(
-        st.integers(1, 3000),
-        st.sampled_from([(16000, 8000), (16000, 4000), (8000, 16000), (44100, 22050)]),
-        st.integers(0, 2**31 - 1),
-    )
-    def test_length_and_integer_ratio_slicing(self, n, rates, seed):
-        rate, target = rates
-        rng = np.random.default_rng(seed)
-        s = rng.integers(-32768, 32767, size=n, dtype=np.int16)
-        out = C.resample_nearest_audio(rate, s, target)
-        assert out.shape[0] == max(1, int(round(n * target / rate)))
-        if rate % target == 0:
-            k = rate // target
-            # integer-ratio downsample == exact every-k-th-frame slice
-            assert np.array_equal(out[:, 0], s[::k][: out.shape[0]])
-        # every output frame exists in the input (nearest never invents)
-        assert np.isin(out[:, 0], s).all()
 
 
 class TestGifProperties:

@@ -1,59 +1,14 @@
-"""Scale-pattern tests: bucketed shuffle-free joins, skew salting
-exactness, stateful streaming, partitioned writes."""
+"""Scale-pattern tests: skew salting exactness, skew-split joins,
+Morton codes, partitioned writes."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from employee_analytics_etl_spark.operators import partitioning as P
 from employee_analytics_etl_spark.sources.readers import read_parquet_table
 from employee_analytics_etl_spark.sources.sinks import write_parquet
 from tests.conftest import SF_SMOKE
-
-
-def _has_exchange(df) -> bool:
-    """True if the physical plan contains a hash-shuffle Exchange."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" in plan
-
-
-class TestBucketing:
-    @pytest.fixture(scope="class")
-    def bucketed(self, spark):
-        # warehouse dir is a static conf set by build_session (tempdir)
-        orders = read_parquet_table(spark, SF_SMOKE, "orders")
-        li = read_parquet_table(spark, SF_SMOKE, "lineitem")
-        P.write_bucketed(orders, "b_orders", "o_orderkey", 8, sort_col="o_orderkey")
-        P.write_bucketed(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "b_lineitem", "o_orderkey", 8, sort_col="o_orderkey",
-        )
-        return spark
-
-    def test_bucketed_join_has_no_shuffle(self, bucketed):
-        spark = bucketed
-        joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
-        assert not _has_exchange(joined)
-        # and it computes the right row count (every lineitem matches)
-        li_n = spark.table("b_lineitem").count()
-        assert joined.count() == li_n
-
-    def test_unbucketed_join_does_shuffle(self, spark):
-        orders = read_parquet_table(spark, SF_SMOKE, "orders")
-        li = read_parquet_table(spark, SF_SMOKE, "lineitem").withColumnRenamed(
-            "l_orderkey", "o_orderkey"
-        )
-        # disable auto-broadcast so the contrast is shuffle vs bucketing,
-        # not shuffle vs broadcast
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = orders.join(li, "o_orderkey")
-            assert _has_exchange(joined)
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-            )
 
 
 class TestSalting:
@@ -108,43 +63,6 @@ class TestPartitionedWrite:
             F.col("event_date").between("2024-01-10", "2024-01-12")
         ).count()
         assert ranged.count() == expect > 0
-
-
-class TestStatefulStreaming:
-    def test_user_profile_stream_matches_batch(self, spark):
-        from employee_analytics_etl_spark.streaming.jobs import build_events_stream
-        from employee_analytics_etl_spark.streaming.stateful import user_profile_stream
-
-        stream = build_events_stream(spark, SF_SMOKE)
-        q = (
-            user_profile_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("t_profiles")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {
-            r["user_id"]: r for r in spark.table("t_profiles").collect()
-        }
-        ev = read_parquet_table(spark, SF_SMOKE, "events")
-        want = {
-            r["user_id"]: r
-            for r in ev.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("value").alias("total_value"),
-                F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("last_us"),
-            )
-            .collect()
-        }
-        assert set(got) == set(want)
-        for uid, w in want.items():
-            g = got[uid]
-            assert g["n_events"] == w["n_events"]
-            assert abs(g["total_value"] - w["total_value"]) < 1e-6
-            assert g["last_ts_micros"] == w["last_us"]
 
 
 class TestSkewHardening:
@@ -229,154 +147,7 @@ class TestSaltedJoin:
         assert out["orphan"]["rank"] is None
 
 
-class TestCompaction:
-    def test_compact_small_files(self, spark, tmp_path):
-        events = read_parquet_table(spark, SF_SMOKE, "events")
-        src = str(tmp_path / "fragmented")
-        dst = str(tmp_path / "compacted")
-        # simulate micro-batch ingestion debris: 30 tiny files
-        events.repartition(30).write.parquet(src)
-        n_src = len([f for f in os.listdir(src) if f.endswith(".parquet")])
-        assert n_src == 30
-        P.compact_parquet(spark, src, dst, target_file_mb=256)
-        n_dst = len([f for f in os.listdir(dst) if f.endswith(".parquet")])
-        assert n_dst < n_src
-        # content preserved exactly
-        a = sorted(r["event_id"] for r in spark.read.parquet(dst).collect())
-        b = sorted(r["event_id"] for r in events.collect())
-        assert a == b
-
-    def test_compact_sort_within_improves_stats(self, spark, tmp_path):
-        events = read_parquet_table(spark, SF_SMOKE, "events")
-        src = str(tmp_path / "frag2")
-        dst = str(tmp_path / "sorted")
-        events.repartition(8).write.parquet(src)
-        P.compact_parquet(spark, src, dst, target_file_mb=1, sort_within="user_id")
-        import pyarrow.parquet as pq
-
-        files = [f for f in os.listdir(dst) if f.endswith(".parquet")]
-        assert files
-        for f in files:
-            col = pq.read_table(os.path.join(dst, f), columns=["user_id"])
-            vals = col.column("user_id").to_pylist()
-            # sortWithinPartitions → each output file is fully sorted,
-            # so min/max row-group stats are selective (row-group skip)
-            assert vals == sorted(vals)
-
-
-class TestUpsert:
-    def test_unpartitioned_upsert_replaces_and_inserts(self, spark, tmp_path):
-        path = str(tmp_path / "tbl")
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "id LONG, v STRING"
-        ).write.parquet(path)
-        updates = spark.createDataFrame(
-            [(2, "B2"), (9, "new")], "id LONG, v STRING"
-        )
-        P.upsert_parquet(spark, path, updates, "id")
-        got = sorted(map(tuple, spark.read.parquet(path).collect()))
-        assert got == [(1, "a"), (2, "B2"), (3, "c"), (9, "new")]
-
-    def test_partition_scoped_upsert_leaves_other_partitions_untouched(
-        self, spark, tmp_path
-    ):
-        import glob
-        import os
-
-        path = str(tmp_path / "ptbl")
-        spark.createDataFrame(
-            [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2"), (4, "d", "d3")],
-            "id LONG, v STRING, day STRING",
-        ).write.partitionBy("day").parquet(path)
-        before = {
-            f: os.path.getmtime(f)
-            for f in glob.glob(f"{path}/day=*/*.parquet")
-        }
-        updates = spark.createDataFrame(
-            [(2, "B2", "d1"), (9, "new", "d9")], "id LONG, v STRING, day STRING"
-        )
-        P.upsert_parquet(spark, path, updates, "id", partition_col="day")
-        got = sorted(map(tuple, spark.read.parquet(path).collect()))
-        assert got == [
-            (1, "a", "d1"), (2, "B2", "d1"), (3, "c", "d2"),
-            (4, "d", "d3"), (9, "new", "d9"),
-        ]
-        # untouched partitions (d2, d3) keep their exact files
-        after_untouched = [
-            f for f in glob.glob(f"{path}/day=*/*.parquet")
-            if "day=d2" in f or "day=d3" in f
-        ]
-        assert after_untouched
-        for f in after_untouched:
-            assert f in before and os.path.getmtime(f) == before[f]
-
-
 class TestZOrder:
-    def test_zorder_tiles_prune_on_both_columns(self, spark, tmp_path_factory):
-        import glob
-
-        import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.operators.partitioning import (
-            write_zordered,
-        )
-        from employee_analytics_etl_spark.sources.readers import read_parquet_table
-        from tests.conftest import SF_SMOKE
-
-        o = read_parquet_table(spark, SF_SMOKE, "orders").withColumn(
-            "o_day",
-            F.expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000"),
-        )
-        naive = str(tmp_path_factory.mktemp("naive"))
-        zord = str(tmp_path_factory.mktemp("zord"))
-        # naive layout: range-partitioned by orderkey (the typical
-        # ingest order) — custkey/day spread across every file
-        o.repartitionByRange(8, "o_orderkey").write.mode("overwrite").parquet(naive)
-        write_zordered(o, zord, "o_custkey", "o_day", num_files=8)
-
-        def files_overlapping(path, col, lo, hi):
-            total, hit = 0, 0
-            for f in glob.glob(f"{path}/*.parquet"):
-                md = pq.ParquetFile(f).metadata
-                mn = min(
-                    md.row_group(i).column(
-                        next(
-                            j
-                            for j in range(md.num_columns)
-                            if md.row_group(i).column(j).path_in_schema == col
-                        )
-                    ).statistics.min
-                    for i in range(md.num_row_groups)
-                )
-                mx = max(
-                    md.row_group(i).column(
-                        next(
-                            j
-                            for j in range(md.num_columns)
-                            if md.row_group(i).column(j).path_in_schema == col
-                        )
-                    ).statistics.max
-                    for i in range(md.num_row_groups)
-                )
-                total += 1
-                if not (mx < lo or mn > hi):
-                    hit += 1
-            return hit, total
-
-        # a thin band predicate — at the 25th percentile, NOT the
-        # median: the median sits exactly on the curve's top-bit
-        # boundary, which every tile borders
-        ck = [r[0] for r in o.agg(F.expr("percentile(o_custkey, 0.25)")).collect()]
-        band = (int(ck[0]) - 5, int(ck[0]) + 5)
-        naive_hit, naive_total = files_overlapping(naive, "o_custkey", *band)
-        z_hit, z_total = files_overlapping(zord, "o_custkey", *band)
-        assert naive_total == z_total == 8
-        # ingest-ordered files ALL overlap the custkey band; Z-order
-        # confines it to a strict subset of tiles
-        assert naive_hit == naive_total
-        assert z_hit < z_total
-
     def test_morton_matches_python_reference(self, spark):
         import random
 
@@ -405,70 +176,6 @@ class TestZOrder:
 
         for i, a, b in rows:
             assert out[i] == ref(a, b)
-
-
-class TestStatefulMultiBatch:
-    def test_profile_state_survives_across_batches(
-        self, spark, tmp_path_factory
-    ):
-        """Regression: GroupState.get is a pyspark PROPERTY; calling it
-        as a method only crashes once state EXISTS — i.e. from a key's
-        SECOND micro-batch onward. One-batch smoke tests can't see it,
-        so this drives two files through maxFilesPerTrigger=1."""
-        import datetime as dt
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-        )
-        from employee_analytics_etl_spark.streaming.stateful import (
-            user_profile_stream,
-        )
-
-        src = str(tmp_path_factory.mktemp("profile_events"))
-
-        def ns(mm):
-            t = dt.datetime(2024, 1, 1, 10, mm, tzinfo=dt.timezone.utc)
-            return int(t.timestamp()) * 1_000_000_000
-
-        def write(name, rows, mtime):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.int64()),
-                    "user_id": pa.array([7] * len(rows), pa.int64()),
-                    "event_type": pa.array(["click"] * len(rows)),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
-            )
-            path = os.path.join(src, name)
-            pq.write_table(tbl, path)
-            os.utime(path, (mtime, mtime))
-
-        write("a.parquet", [(1, ns(0)), (2, ns(2))], 1_000)
-        write("b.parquet", [(3, ns(4)), (4, ns(8))], 2_000)
-
-        stream = build_events_stream(
-            spark, src, glob="*.parquet", max_files_per_trigger=1
-        )
-        q = (
-            user_profile_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("t_profiles_mb")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = spark.table("t_profiles_mb").collect()
-        final = max(rows, key=lambda r: r["n_events"])
-        assert final["n_events"] == 4
-        assert abs(final["total_value"] - 4.0) < 1e-9
-        assert final["last_ts_micros"] == ns(8) // 1000
 
 
 class TestHllRollup:

@@ -1,19 +1,31 @@
-"""Structured Streaming tests: stream results must equal the batch
-twins on the same bounded input (file source + availableNow + memory
-sink)."""
+"""Structured Streaming tests.
+
+Every twin registered in ``streaming.jobs.TWINS`` is drained over the
+sf0.001 testdata (file source, availableNow trigger, memory sink) and
+compared with its batch query's DuckDB oracle through
+``perfbench.oracle.compare``. The other tests check what a one-batch
+oracle comparison cannot state — equality with the Spark batch plan of
+the same query, exactly-once output across a crash and restart, state
+carried across micro-batches and bounded by key cardinality, late and
+out-of-order arrival — and the twins that perfbench and
+tools/bench_streaming.py drive."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from employee_analytics_etl_spark.operators.windows import tumbling_window_agg
+from employee_analytics_etl_spark.plans import load_all
 from employee_analytics_etl_spark.sources.readers import read_parquet_table
 from employee_analytics_etl_spark.streaming.jobs import (
+    TWINS,
     build_events_stream,
     run_to_memory,
     session_window_stream,
-    tumbling_counts_stream,
 )
+from perfbench.oracle import compare
 from tests.conftest import SF_SMOKE
+from tools.selfcheck import connect
 
 
 @pytest.fixture(scope="module")
@@ -21,8 +33,57 @@ def batch_events(spark):
     return read_parquet_table(spark, SF_SMOKE, "events")
 
 
+def write_events(path, rows, mtime, event_type="click"):
+    """One events parquet file of (event_id, epoch-nanos ts, user_id[,
+    value]) rows, stamped with ``mtime`` so the file source lists it in
+    order. ``value`` defaults to 1.0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array([r[1] for r in rows], pa.int64()),
+                "user_id": pa.array([r[2] for r in rows], pa.int64()),
+                "event_type": pa.array([event_type] * len(rows)),
+                "value": pa.array([r[3] if len(r) > 3 else 1.0 for r in rows], pa.float64()),
+                "props": pa.array(["{}"] * len(rows)),
+            }
+        ),
+        path,
+    )
+    os.utime(path, (mtime, mtime))
+
+
+@pytest.mark.parametrize("name", sorted(TWINS))
+def test_registered_twin_equals_batch_oracle(spark, name):
+    """A registered twin, drained to completion, returns exactly its
+    batch query's DuckDB oracle rows: names, dtypes and values."""
+    build, output_mode = TWINS[name]
+    got = run_to_memory(
+        build(spark, SF_SMOKE), f"twin_{name}", spark, output_mode=output_mode
+    ).toPandas()
+    con = connect(SF_SMOKE)
+    try:
+        want = con.execute(load_all()[1][name]).df()
+    finally:
+        con.close()
+    assert len(want) > 0
+    assert compare(got, want) == []
+
+
 class TestStreaming:
     def test_tumbling_stream_equals_batch(self, spark, batch_events):
+        """The tumbling twin equals the batch operator it mirrors, run
+        by Spark over the same rows."""
+        from employee_analytics_etl_spark.operators.windows import (
+            tumbling_window_agg,
+        )
+        from employee_analytics_etl_spark.streaming.jobs import (
+            tumbling_counts_stream,
+        )
+
         stream = build_events_stream(spark, SF_SMOKE)
         got = run_to_memory(
             tumbling_counts_stream(stream), "t_tumbling", spark
@@ -35,7 +96,33 @@ class TestStreaming:
                 for r in rows
             )
 
+        assert len(got) > 0
         assert key(got) == key(want)
+
+    def test_foreach_batch_sink_idempotent(self, spark, batch_events, tmp_path_factory):
+        """A foreachBatch sink that overwrites one directory per batch
+        id, rerun on the SAME checkpoint: every batch is committed, so
+        nothing replays and each event is written exactly once."""
+        out = str(tmp_path_factory.mktemp("fb_out"))
+        ckpt = str(tmp_path_factory.mktemp("fb_ckpt"))
+
+        def write_batch(batch_df, batch_id):
+            batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
+
+        def run():
+            q = (
+                build_events_stream(spark, SF_SMOKE)
+                .writeStream.foreachBatch(write_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return spark.read.parquet(out).count()
+
+        want = batch_events.count()
+        assert run() == want
+        assert run() == want
 
     def test_session_window_stream_runs(self, spark):
         stream = build_events_stream(spark, SF_SMOKE)
@@ -94,380 +181,69 @@ class TestStreaming:
         assert len(got_pairs) > 0
         assert got_pairs == want_pairs
 
-    def test_foreach_batch_sink_idempotent(self, spark, batch_events, tmp_path_factory):
-        from employee_analytics_etl_spark.streaming.jobs import (
-            run_foreach_batch_parquet,
-        )
-
-        out = str(tmp_path_factory.mktemp("fb_out"))
-        ckpt = str(tmp_path_factory.mktemp("fb_ckpt"))
-        stream = build_events_stream(spark, SF_SMOKE)
-        run_foreach_batch_parquet(stream, out, ckpt)
-        n1 = spark.read.parquet(out).count()
-        # rerun with the SAME checkpoint: all batches already committed,
-        # nothing replays, output unchanged (no duplicates)
-        stream2 = build_events_stream(spark, SF_SMOKE)
-        run_foreach_batch_parquet(stream2, out, ckpt)
-        n2 = spark.read.parquet(out).count()
-        want = batch_events.count()
-        assert n1 == want and n2 == want
-
-
-class TestStreamingCms:
-    def test_stream_sketch_equals_batch_sketch(self, spark, batch_events):
-        """The streamed per-window CMS must be cell-for-cell identical
-        to the batch sketch on the same bounded input, and every point
-        estimate must dominate the exact per-user count (the one-sided
-        CMS guarantee)."""
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            cms_user_counts_stream,
-        )
-
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            cms_user_counts_stream(stream), "t_cms", spark
-        ).collect()
-
-        bucket = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            F.col("seed").cast("string"),
-                            F.col("user_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 256
-        )
-        want = (
-            batch_events.select(
-                "ts",
-                F.explode(F.array(*[F.lit(s) for s in range(4)])).alias("seed"),
-                "user_id",
-            )
-            .withColumn("bucket", bucket)
-            .groupBy(
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000").alias("hb"),
-                "seed",
-                "bucket",
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .select(
-                (F.col("hb") * 3600).alias("window_start_sec"),
-                "seed",
-                "bucket",
-                "cnt",
-            )
-            .collect()
-        )
-
-        def key(rows):
-            return sorted(
-                (r["window_start_sec"], r["seed"], r["bucket"], r["cnt"])
-                for r in rows
-            )
-
-        assert key(got) == key(want)
-
-        # point-estimate guarantee on one window: est >= exact per user
-        sketch = {}
-        for r in got:
-            sketch[(r["window_start_sec"], r["seed"], r["bucket"])] = r["cnt"]
-        target_win = got[0]["window_start_sec"]
-        exact = (
-            batch_events.filter(
-                (F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000") * 3600) == target_win
-            )
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        import hashlib
-
-        for r in exact:
-            est = min(
-                sketch.get(
-                    (
-                        target_win,
-                        s,
-                        int(
-                            hashlib.md5(
-                                f"{s}:{r['user_id']}".encode()
-                            ).hexdigest()[:8],
-                            16,
-                        )
-                        % 256,
-                    ),
-                    0,
-                )
-                for s in range(4)
-            )
-            assert est >= r["n"]
-
-
-class TestStreamingPsi:
-    def test_stream_psi_equals_batch_twin(self, spark, batch_events):
-        """Streamed per-window PSI terms must equal the batch
-        computation on the same bounded input, and a reference built
-        from the data itself must yield near-zero total PSI."""
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import psi_drift_stream
-
-        n_buckets, bw = 10, 50.0
-        # mirror of the operator's two-sided clamp (greatest+least)
-        bucket = F.greatest(
-            F.least(
-                F.floor(F.col("value") / bw).cast("int"), F.lit(n_buckets - 1)
-            ),
-            F.lit(0),
-        )
-        grid = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-        ref_counts = (
-            batch_events.withColumn("bucket", bucket)
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("rn"))
-        )
-        tot = batch_events.count()
-        reference = (
-            grid.join(ref_counts, "bucket", "left")
-            .select(
-                "bucket",
-                (
-                    (F.coalesce(F.col("rn"), F.lit(0)) + 0.5)
-                    / (F.lit(tot) + 0.5 * n_buckets)
-                ).alias("share_ref"),
-            )
-        )
-
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            psi_drift_stream(stream, reference), "t_psi", spark
-        ).collect()
-        assert len(got) > 0
-
-        # batch twin: same windows, same smoothing
-        win = (
-            batch_events.withColumn("bucket", bucket)
-            .groupBy(
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 21600000000").alias(
-                    "wb"
-                ),
-                "bucket",
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        wtot = win.groupBy("wb").agg(F.sum("n").alias("n_total"))
-        twin = (
-            wtot.join(grid, how="cross")
-            .join(win, ["wb", "bucket"], "left")
-            .join(reference, "bucket")
-            .select(
-                (F.col("wb") * 21600).alias("window_start_sec"),
-                "bucket",
-                F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_events"),
-                "share_ref",
-                (
-                    (
-                        (F.coalesce(F.col("n"), F.lit(0)) + 0.5)
-                        / (F.col("n_total") + 0.5 * n_buckets)
-                        - F.col("share_ref")
-                    )
-                    * F.log(
-                        (
-                            (F.coalesce(F.col("n"), F.lit(0)) + 0.5)
-                            / (F.col("n_total") + 0.5 * n_buckets)
-                        )
-                        / F.col("share_ref")
-                    )
-                ).alias("psi_term"),
-            )
-            .collect()
-        )
-
-        def key(rows):
-            return sorted(
-                (
-                    r["window_start_sec"],
-                    r["bucket"],
-                    r["n_events"],
-                    round(r["psi_term"], 12),
-                )
-                for r in rows
-            )
-
-        assert key(got) == key(twin)
-
-        # Laplace smoothing must keep every term finite even for empty
-        # buckets (smoke-scale windows hold ~8 events, so PSI
-        # MAGNITUDE is sample noise here — the cell equality above is
-        # the correctness gate; magnitude calibration belongs to the
-        # batch monitor's larger windows)
-        import math
-
-        assert all(math.isfinite(r["psi_term"]) for r in got)
-
-    def test_negative_values_clamp_to_bucket_zero(self, spark, tmp_path_factory):
-        """Regression (r3 ADVICE): without the lower clamp, events with
-        negative value bucketed below 0 and silently vanished from both
-        the per-bucket counts and n_total — drift in a negative band
-        was invisible. They must land in bucket 0 and be counted."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import psi_drift_stream
-
-        d = str(tmp_path_factory.mktemp("neg_events"))
-        base = 1_700_000_000_000_000  # epoch micros
-        vals = [-125.0, -3.0, 10.0, 75.0, 499.0, 600.0, -0.01, 0.0]
-        n = len(vals)
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array(range(n), pa.int64()),
-                    "ts": pa.array(
-                        [base + i * 60_000_000 for i in range(n)],
-                        pa.timestamp("us"),
-                    ),
-                    "user_id": pa.array([1] * n, pa.int64()),
-                    "event_type": pa.array(["click"] * n),
-                    "value": pa.array(vals, pa.float64()),
-                    "props": pa.array([""] * n),
-                }
-            ),
-            f"{d}/events.parquet",
-        )
-        reference = spark.range(10).select(
-            F.col("id").cast("int").alias("bucket"),
-            F.lit(0.1).alias("share_ref"),
-        )
-        stream = build_events_stream(spark, d)
-        got = run_to_memory(
-            psi_drift_stream(stream, reference), "t_psi_neg", spark
-        ).collect()
-        # nothing vanished: all events counted across buckets
-        assert sum(r["n_events"] for r in got) == n
-        by_bucket: dict[int, int] = {}
-        for r in got:
-            by_bucket[r["bucket"]] = by_bucket.get(r["bucket"], 0) + r["n_events"]
-        # negatives (-125, -3, -0.01) + [0,50) values (0.0, 10.0) → bucket 0
-        assert by_bucket.get(0, 0) == 5
-        assert by_bucket.get(9, 0) == 2  # 499 and clamped-high 600
-
-
-class TestOuterStreamJoin:
-    """Left-outer stream-stream join: matched purchases pair up, and
-    purchases with no qualifying click emit NULL-padded once the
-    watermark proves no click can still arrive."""
-
-    def test_unmatched_purchases_null_padded(self, spark, tmp_path_factory):
-        import datetime as dt
-
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            purchases_with_clicks_outer_stream,
-            run_to_memory,
-        )
-
-        t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-
-        def ev(eid, mins, uid, etype):
-            return (eid, t0 + dt.timedelta(minutes=mins), uid, etype, 1.0)
-
-        rows = [
-            ev(1, 0, 1, "click"),
-            ev(2, 30, 1, "purchase"),   # matched by click 1
-            ev(3, 40, 2, "purchase"),   # user 2 has no clicks -> null row
-            ev(4, 50, 3, "click"),
-            ev(5, 45, 3, "purchase"),   # click AFTER purchase -> no match
-            # sentinels push the final watermark far past every interval
-            # (both sides need their event-time to advance)
-            ev(100, 3000, 99, "click"),
-            ev(101, 3000, 99, "purchase"),
-        ]
-        src = str(tmp_path_factory.mktemp("outer_join_src"))
-        batch = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        batch.coalesce(1).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(batch.schema)
-            .load(src)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        got = run_to_memory(
-            purchases_with_clicks_outer_stream(stream, lookback_sec=3600),
-            "t_outer_join",
-            spark,
-            output_mode="append",
-        )
-        res = {
-            (r["purchase_id"], r["click_id"])
-            for r in got.filter(F.col("purchase_id") < 100).collect()
-        }
-        assert res == {(2, 1), (3, None), (5, None)}
-
 
 class TestCheckpointRecovery:
-    """Kill the query mid-stream (torn write + failure on batch 1 of 3),
-    restart on the SAME checkpoint, and assert exactly-once output
-    across the restart — the contract the idempotent-replay test alone
-    does not cover (r2 verdict #6)."""
+    """Kill a stateful twin's query mid-stream (a torn write and a
+    failure in batch 1 of 3), restart it on the SAME checkpoint, and
+    assert exactly-once output across the restart, with the debounce
+    state of batch 0 restored for the replayed batch."""
 
     def test_kill_midstream_restart_exactly_once(self, spark, tmp_path_factory):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            run_foreach_batch_parquet,
+        from employee_analytics_etl_spark.streaming.stateful import (
+            debounce_stream,
         )
 
         src = str(tmp_path_factory.mktemp("ckpt_src"))
         out = str(tmp_path_factory.mktemp("ckpt_out"))
         ckpt = str(tmp_path_factory.mktemp("ckpt_ckpt"))
-        for i in range(3):
-            ids = list(range(i * 100, (i + 1) * 100))
-            pq.write_table(
-                pa.table({"event_id": ids, "v": [x % 7 for x in ids]}),
-                f"{src}/f{i}.parquet",
-            )
 
-        def mk_stream():
-            return (
-                spark.readStream.format("parquet")
-                .schema("event_id long, v long")
-                .option("maxFilesPerTrigger", 1)
-                .load(src)
-            )
+        def ns(mm):
+            return (1_704_103_200 + mm * 60) * 1_000_000_000  # 10:00 + mm
 
-        # run 1: batch 0 commits; batch 1 tears (half written) and fails
+        # (event_id, ts, user_id); a user's kept events are >= 5 min apart
+        write_events(f"{src}/f0.parquet", [(1, ns(0), 7), (2, ns(2), 7), (11, ns(0), 8)], 1_000)
+        # 3 falls within 5 min of 1, kept in batch 0: only the state knows
+        write_events(f"{src}/f1.parquet", [(3, ns(4), 7), (4, ns(8), 7), (12, ns(6), 8)], 2_000)
+        write_events(f"{src}/f2.parquet", [(5, ns(10), 7), (6, ns(14), 7), (13, ns(20), 8)], 3_000)
+
+        def run(fail_batch=None):
+            def write_batch(batch_df, batch_id):
+                path = f"{out}/batch_id={batch_id}"
+                if batch_id == fail_batch:
+                    batch_df.limit(1).write.mode("overwrite").parquet(path)
+                    raise RuntimeError(f"injected failure: torn write of batch {batch_id}")
+                batch_df.write.mode("overwrite").parquet(path)
+
+            stream = build_events_stream(
+                spark, src, glob="*.parquet", max_files_per_trigger=1
+            )
+            q = (
+                debounce_stream(stream)
+                .writeStream.foreachBatch(write_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+        def ids():
+            return sorted(r["event_id"] for r in spark.read.parquet(out).collect())
+
+        # run 1: batch 0 commits; batch 1 writes one of its two rows and fails
         with pytest.raises(Exception, match="injected failure|Streaming"):
-            run_foreach_batch_parquet(mk_stream(), out, ckpt, inject_failure_batch=1)
-        crashed = spark.read.parquet(out)
-        assert crashed.count() < 300  # torn state visible: not all rows landed
-        torn = spark.read.parquet(f"{out}/batch_id=1")
-        assert torn.count() == 50  # the half-written batch
+            run(fail_batch=1)
+        assert spark.read.parquet(f"{out}/batch_id=1").count() == 1  # torn
+        assert len(ids()) == 3
 
-        # run 2: same checkpoint, no injection — batch 1 replays and
-        # OVERWRITES its torn directory, batch 2 runs, batch 0 untouched
-        run_foreach_batch_parquet(mk_stream(), out, ckpt)
-        final = spark.read.parquet(out)
-        assert final.count() == 300
-        ids = [r["event_id"] for r in final.select("event_id").collect()]
-        assert sorted(ids) == list(range(300))  # each row exactly once
-        assert spark.read.parquet(f"{out}/batch_id=1").count() == 100
+        # run 2: batch 1 replays from batch 0's state and OVERWRITES its
+        # torn directory; batch 2 runs; batch 0 is untouched
+        run()
+        assert ids() == [1, 4, 6, 11, 12, 13]
+        assert spark.read.parquet(f"{out}/batch_id=1").count() == 2
+
+        # run 3: every batch is committed, so nothing replays
+        run()
+        assert ids() == [1, 4, 6, 11, 12, 13]
 
 
 class TestStreamingDedup:
@@ -515,23 +291,6 @@ class TestStreamingDedup:
         assert jobs.DEFAULT_WATERMARK == "15 minutes"
 
 
-class TestStreamStatic:
-    def test_stream_static_join_equals_batch(self, spark, batch_events):
-        from employee_analytics_etl_spark.streaming.jobs import (
-            enriched_segment_counts_stream,
-        )
-
-        dim = read_parquet_table(spark, SF_SMOKE, "customer")
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            enriched_segment_counts_stream(stream, dim), "t_enrich", spark
-        ).collect()
-        want = enriched_segment_counts_stream(batch_events, dim).collect()
-        key = lambda rows: sorted((r["segment"], r["n_events"]) for r in rows)
-        assert key(got) == key(want)
-        assert sum(r["n_events"] for r in got) == batch_events.count()
-
-
 class TestLateDataDrop:
     """availableNow multi-batch run where the watermark advances
     between micro-batches: rows arriving later than the watermark must
@@ -540,33 +299,20 @@ class TestLateDataDrop:
     def test_late_rows_beyond_watermark_are_dropped(
         self, spark, tmp_path_factory
     ):
-        import os
+        import datetime as dt
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        from employee_analytics_etl_spark.streaming.jobs import (
+            tumbling_counts_stream,
+        )
 
         src = str(tmp_path_factory.mktemp("late_events"))
 
         def ns(hh, mm):
-            import datetime as dt
-
             t = dt.datetime(2024, 1, 1, hh, mm, tzinfo=dt.timezone.utc)
             return int(t.timestamp()) * 1_000_000_000
 
         def write(name, rows, mtime):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.int64()),
-                    "user_id": pa.array([1] * len(rows), pa.int64()),
-                    "event_type": pa.array(["click"] * len(rows)),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
-            )
-            path = os.path.join(src, name)
-            pq.write_table(tbl, path)
-            os.utime(path, (mtime, mtime))
+            write_events(os.path.join(src, name), [(e, t, 1) for e, t in rows], mtime)
 
         # The watermark advances one batch AFTER the advancing row's
         # batch commits (progress reports are post-batch), so the late
@@ -587,26 +333,18 @@ class TestLateDataDrop:
         # window finalizes and is emitted in append mode
         write("d.parquet", [(6, ns(16, 30))], 4_000)
 
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            run_to_memory,
-            tumbling_counts_stream,
-        )
-
         stream = build_events_stream(
             spark, src, glob="*.parquet", max_files_per_trigger=1
         )
         got = run_to_memory(
-            tumbling_counts_stream(stream, "1 hour", "2 hours"),
+            tumbling_counts_stream(stream, watermark="2 hours"),
             "t_late_drop",
             spark,
             output_mode="append",
         ).collect()
         by_window = {r["window_start_sec"]: r["n_events"] for r in got}
 
-        h10 = int(__import__("datetime").datetime(
-            2024, 1, 1, 10, tzinfo=__import__("datetime").timezone.utc
-        ).timestamp())
+        h10 = ns(10, 0) // 1_000_000_000
         h13 = h10 + 3 * 3600
         h16 = h10 + 6 * 3600
         # 10:00 window: the late 10:15 row (event 4) was dropped
@@ -618,97 +356,29 @@ class TestLateDataDrop:
         assert h16 not in by_window
 
 
-class TestStreamingNearDup:
-    def test_stream_flags_match_batch_incremental(self, spark, tmp_path_factory):
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.operators import dedup as D
-        from employee_analytics_etl_spark.sources.readers import read_parquet_table
-        from employee_analytics_etl_spark.streaming.jobs import near_dup_flag_stream
-        from tests.conftest import SF_SMOKE
-
-        docs = read_parquet_table(spark, SF_SMOKE, "documents")
-        delta = docs.filter(F.col("doc_id") % 10 == 0)
-        base = docs.filter(F.col("doc_id") % 10 != 0)
-        base_bands = D.minhash_band_rows(base)
-
-        src = str(tmp_path_factory.mktemp("doc_stream"))
-        delta.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.format("parquet").schema(delta.schema).load(src)
-
-        got = run_to_memory(
-            near_dup_flag_stream(stream, base_bands),
-            "t_neardup",
-            spark,
-            output_mode="append",
-        )
-        flagged = {r["doc_id"] for r in got.select("doc_id").collect()}
-
-        # batch truth: delta docs appearing in any delta-vs-base
-        # incremental candidate pair
-        pairs = D.minhash_incremental_candidates(delta, base).collect()
-        delta_ids = {r["doc_id"] for r in delta.select("doc_id").collect()}
-        base_truth = set()
-        for r in pairs:
-            a, b = r["id_a"], r["id_b"]
-            if a in delta_ids and b not in delta_ids:
-                base_truth.add(a)
-            elif b in delta_ids and a not in delta_ids:
-                base_truth.add(b)
-        assert flagged == base_truth
-
-
 class TestDebounceStream:
-    """Sequential (kept-lag) debounce with per-key state carried ACROSS
-    micro-batches: a double-fire straddling a batch boundary must still
-    be suppressed, and the final survivor set must equal the batch twin
-    run over all rows at once."""
-
     def test_state_carries_across_batches(self, spark, tmp_path_factory):
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        src = str(tmp_path_factory.mktemp("debounce_events"))
-
-        def ns(mm, ss=0):
-            import datetime as dt
-
-            t = dt.datetime(2024, 1, 1, 10, mm, ss, tzinfo=dt.timezone.utc)
-            return int(t.timestamp()) * 1_000_000_000
-
-        def write(name, rows, mtime):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.int64()),
-                    "user_id": pa.array([7] * len(rows), pa.int64()),
-                    "event_type": pa.array(["click"] * len(rows)),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
-            )
-            path = os.path.join(src, name)
-            pq.write_table(tbl, path)
-            os.utime(path, (mtime, mtime))
-
-        # batch 1: 10:00 kept; 10:02 dropped (within 5 min)
-        write("a.parquet", [(1, ns(0)), (2, ns(2))], 1_000)
-        # batch 2: 10:04 must be dropped against batch 1's kept 10:00 —
-        # only cross-batch state can know that; 10:08 kept (vs 10:00)
-        write("b.parquet", [(3, ns(4)), (4, ns(8))], 2_000)
-
+        """A double-fire straddling a micro-batch boundary is still
+        suppressed, and the survivors equal the batch operator run over
+        all rows at once."""
         from employee_analytics_etl_spark.operators.windows import (
             debounce_events_kept,
         )
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            run_to_memory,
-        )
+        from employee_analytics_etl_spark.sources.schemas import events_schema
         from employee_analytics_etl_spark.streaming.stateful import (
             debounce_stream,
         )
+
+        src = str(tmp_path_factory.mktemp("debounce_events"))
+
+        def ns(mm):
+            return (1_704_103_200 + mm * 60) * 1_000_000_000  # 10:00 + mm
+
+        # batch 1: 10:00 kept; 10:02 dropped (within 5 min)
+        write_events(f"{src}/a.parquet", [(1, ns(0), 7), (2, ns(2), 7)], 1_000)
+        # batch 2: 10:04 must be dropped against batch 1's kept 10:00 —
+        # only cross-batch state can know that; 10:08 kept (vs 10:00)
+        write_events(f"{src}/b.parquet", [(3, ns(4), 7), (4, ns(8), 7)], 2_000)
 
         stream = build_events_stream(
             spark, src, glob="*.parquet", max_files_per_trigger=1
@@ -719,62 +389,38 @@ class TestDebounceStream:
         kept = {r["event_id"] for r in got.collect()}
         assert kept == {1, 4}
 
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.sources.schemas import events_schema
-
         all_rows = spark.read.schema(events_schema("BIGINT")).parquet(src).withColumn(
             "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")
         )
-        want = {
-            r["event_id"] for r in debounce_events_kept(all_rows).collect()
-        }
-        assert kept == want
+        assert kept == {r["event_id"] for r in debounce_events_kept(all_rows).collect()}
 
     def test_state_rows_bounded_by_key_cardinality(
         self, spark, tmp_path_factory
     ):
-        """Observability guard (r3 verdict #6): debounce state is ONE
-        row per (user, type) key, so across ≥3 micro-batches the
-        stateOperators metrics must report numRowsTotal ≤ |keys| —
-        state growth proportional to batches or events would be a
-        state leak, invisible without this assertion."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-        )
+        """Debounce state is ONE row per (user, type) key, so across ≥3
+        micro-batches the stateOperators metrics must report
+        numRowsTotal ≤ |keys|, and the state read back from the
+        checkpoint (the state-store batch reader) must hold exactly one
+        row per key with its last kept event time — state growth
+        proportional to batches or events would be a state leak,
+        invisible without this assertion."""
         from employee_analytics_etl_spark.streaming.stateful import (
             debounce_stream,
         )
 
         src = str(tmp_path_factory.mktemp("debounce_state_metrics"))
+        ckpt = str(tmp_path_factory.mktemp("debounce_state_ckpt"))
         users = [1, 2, 3, 4]
 
-        def write(name, minute, mtime):
-            base_ns = (1_704_103_200 + minute * 60) * 1_000_000_000
-            tbl = pa.table(
-                {
-                    "event_id": pa.array(
-                        [minute * 100 + u for u in users], pa.int64()
-                    ),
-                    "ts": pa.array([base_ns] * len(users), pa.int64()),
-                    "user_id": pa.array(users, pa.int64()),
-                    "event_type": pa.array(["click"] * len(users)),
-                    "value": pa.array([1.0] * len(users), pa.float64()),
-                    "props": pa.array(["{}"] * len(users)),
-                }
-            )
-            path = os.path.join(src, name)
-            pq.write_table(tbl, path)
-            os.utime(path, (mtime, mtime))
+        def ns(minute):
+            return (1_704_103_200 + minute * 60) * 1_000_000_000
 
-        write("a.parquet", 0, 1_000)
-        write("b.parquet", 10, 2_000)
-        write("c.parquet", 20, 3_000)
+        for i, minute in enumerate((0, 10, 20)):
+            write_events(
+                os.path.join(src, f"f{i}.parquet"),
+                [(minute * 100 + u, ns(minute), u) for u in users],
+                1_000 * (i + 1),
+            )
 
         stream = build_events_stream(
             spark, src, glob="*.parquet", max_files_per_trigger=1
@@ -784,6 +430,7 @@ class TestDebounceStream:
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("t_debounce_state")
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -801,429 +448,19 @@ class TestDebounceStream:
         assert state_rows[-1] == len(users)
         # all 10-minute-spaced events survive the 5-min debounce
         assert spark.table("t_debounce_state").count() == 3 * len(users)
-
-
-class TestTransformWithState:
-    """transformWithState (Spark 4): event-time TIMERS finalize idle
-    sessions — acting on the ABSENCE of data, which
-    applyInPandasWithState cannot express. The end-to-end run needs
-    google.protobuf (the TWS Python-JVM state protocol), absent in this
-    container — importorskip gates it; the kernel state machine is
-    unit-tested against a fake handle below either way."""
-
-    def test_session_kernel_state_machine(self):
-        import pandas as pd
-
-        from employee_analytics_etl_spark.streaming.tws import (
-            SessionTimeoutProcessor,
-        )
-
-        class FakeValueState:
-            def __init__(self):
-                self._v = None
-
-            def exists(self):
-                return self._v is not None
-
-            def get(self):
-                return self._v
-
-            def update(self, v):
-                self._v = v
-
-            def clear(self):
-                self._v = None
-
-        class FakeHandle:
-            def __init__(self):
-                self.state = FakeValueState()
-                self.timers = []
-
-            def getValueState(self, name, schema, ttlDurationMs=None):
-                return self.state
-
-            def listTimers(self):
-                return list(self.timers)
-
-            def deleteTimer(self, t):
-                self.timers.remove(t)
-
-            def registerTimer(self, t):
-                self.timers.append(t)
-
-        proc = SessionTimeoutProcessor(gap_ms=30 * 60 * 1000)
-        h = FakeHandle()
-        proc.init(h)
-
-        def batch(rows):  # rows: [(ts_us, value)]
-            return iter(
-                [pd.DataFrame({"ts_us": [r[0] for r in rows],
-                               "value": [r[1] for r in rows]})]
-            )
-
-        M = 60 * 1_000_000  # one minute in micros
-        # batch 1: three events 10:00/10:05/10:10 → state extends,
-        # one timer armed at last + gap
-        out = list(proc.handleInputRows((7,), batch(
-            [(600 * M, 1.0), (605 * M, 1.0), (610 * M, 1.0)]), None))
-        assert out == []
-        assert h.state.get() == (600 * M // 1000, 610 * M // 1000, 3, 3.0)
-        assert h.timers == [610 * M // 1000 + 30 * 60 * 1000]
-        # batch 2 extends the session and RE-ARMS (old timer deleted)
-        list(proc.handleInputRows((7,), batch([(615 * M, 2.0)]), None))
-        assert h.state.get()[1:] == (615 * M // 1000, 4, 5.0)
-        assert h.timers == [615 * M // 1000 + 30 * 60 * 1000]
-        # timer fires: session emitted once, state cleared; a second
-        # fire emits nothing
-        rows = pd.concat(list(proc.handleExpiredTimer((7,), None, None)))
-        assert len(rows) == 1
-        r = rows.iloc[0]
-        assert (r["user_id"], r["n_events"], r["total_value"]) == (7, 4, 5.0)
-        assert r["session_start_sec"] == 600 * 60
-        assert r["session_end_sec"] == 615 * 60
-        assert not h.state.exists()
-        assert list(proc.handleExpiredTimer((7,), None, None)) == []
-
-    def test_session_finalized_by_timer(self, spark, tmp_path_factory):
-        pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithState needs protobuf for its "
-            "Python-JVM state protocol; not installed in this container",
-        )
-        import datetime as dt
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        src = str(tmp_path_factory.mktemp("tws_events"))
-
-        def ns(hh, mm):
-            t = dt.datetime(2024, 1, 1, hh, mm, tzinfo=dt.timezone.utc)
-            return int(t.timestamp()) * 1_000_000_000
-
-        def write(name, rows, mtime):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.int64()),
-                    "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                    "event_type": pa.array(["click"] * len(rows)),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
-            )
-            path = os.path.join(src, name)
-            pq.write_table(tbl, path)
-            os.utime(path, (mtime, mtime))
-
-        # batch 1: user 7's session (10:00-10:10, 3 events)
-        write("a.parquet", [(1, ns(10, 0), 7), (2, ns(10, 5), 7), (3, ns(10, 10), 7)], 1_000)
-        # batch 2: user 8 at 13:00 advances the watermark to 12:50 —
-        # far past user 7's timeout (10:10 + 30 min)
-        write("b.parquet", [(4, ns(13, 0), 8)], 2_000)
-        # batch 3: watermark from batch 2 is now in effect; the timer
-        # fires during this batch
-        write("c.parquet", [(5, ns(13, 5), 8)], 3_000)
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            run_to_memory,
-        )
-        from employee_analytics_etl_spark.streaming.tws import (
-            session_timeout_stream,
-        )
-
-        prov_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(prov_key, None)
-        spark.conf.set(
-            prov_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            stream = build_events_stream(
-                spark, src, glob="*.parquet", max_files_per_trigger=1
-            )
-            got = run_to_memory(
-                session_timeout_stream(stream),
-                "t_tws_sessions",
-                spark,
-                output_mode="append",
-            ).collect()
-        finally:
-            if prev is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, prev)
-
-        assert len(got) == 1
-        r = got[0]
-        assert r["user_id"] == 7
-        assert r["session_start_sec"] == ns(10, 0) // 1_000_000_000
-        assert r["session_end_sec"] == ns(10, 10) // 1_000_000_000
-        assert r["n_events"] == 3
-        assert abs(r["total_value"] - 3.0) < 1e-9
-
-
-class TestJsonPropsStream:
-    def test_stream_json_extraction_equals_batch_twin(
-        self, spark, batch_events
-    ):
-        """Windowed typed-JSON aggregates from the stream must equal the
-        same computation over the bounded batch input."""
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            json_props_stream,
-        )
-
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            json_props_stream(stream), "t_json_props", spark
-        ).collect()
-        assert len(got) > 0
-
-        k = F.from_json(F.col("props"), "k int")["k"]
-        twin = (
-            batch_events.select("ts", "event_type", k.alias("k"))
-            .groupBy(
-                F.expr(
-                    "unix_micros(CAST(ts AS TIMESTAMP)) DIV 21600000000"
-                ).alias("wb"),
-                "event_type",
-            )
-            .agg(
-                F.count("k").alias("n_with_k"),
-                F.sum("k").cast("long").alias("k_sum"),
-                F.min("k").cast("int").alias("k_min"),
-                F.max("k").cast("int").alias("k_max"),
-            )
-            .select(
-                (F.col("wb") * 21600).alias("window_start_sec"),
-                "event_type",
-                "n_with_k",
-                "k_sum",
-                "k_min",
-                "k_max",
-            )
-            .collect()
-        )
-
-        def key(rows):
-            return sorted(tuple(r) for r in rows)
-
-        assert key(got) == key(twin)
-
-
-class TestDistinctUsersStream:
-    def test_stream_hll_equals_batch_twin_and_bounds(self, spark, batch_events):
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            distinct_users_stream,
-        )
-
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            distinct_users_stream(stream), "t_hll_users", spark
-        ).collect()
-        assert len(got) > 0
-
-        twin = (
-            batch_events.groupBy(
-                F.expr(
-                    "unix_micros(CAST(ts AS TIMESTAMP)) DIV 21600000000"
-                ).alias("wb")
-            )
-            .agg(
-                F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.countDistinct("user_id").alias("exact_users"),
-            )
-            .collect()
-        )
-        twin_map = {
-            r["wb"] * 21600: (r["approx_users"], r["n_events"], r["exact_users"])
-            for r in twin
+        state = {
+            (r["key"]["user_id"], r["key"]["event_type"]): r["value"]["groupState"]["last_kept_us"]
+            for r in spark.read.format("statestore").load(ckpt).collect()
         }
-        for r in got:
-            a, n, exact = twin_map[r["window_start_sec"]]
-            assert r["approx_users"] == a  # sketch ≡ batch sketch
-            assert r["n_events"] == n
-            # rsd=2%: generous 10% envelope vs exact at smoke scale
-            assert abs(r["approx_users"] - exact) <= max(2, 0.1 * exact)
-
-
-class TestStreamingKmv:
-    def test_stream_sketch_equals_batch_and_estimates(
-        self, spark, batch_events
-    ):
-        """The streamed per-window bucketed-min KMV must be
-        cell-for-cell identical to the batch computation on the same
-        bounded input, and the k²/Σmin − k estimator must land within
-        35% of the exact hourly distinct-user count whenever the hour
-        has enough users to estimate (n ≥ k)."""
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            kmv_distinct_stream,
-        )
-
-        K = 64
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            kmv_distinct_stream(stream, k=K), "t_kmv", spark
-        ).collect()
-        got_cells = {(r[0], r[1]): r[2] for r in got}
-
-        fp = F.expr(
-            "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-            " AS BIGINT)"
-        )
-        bucket = F.pmod(
-            F.expr(
-                "CAST(conv(substr(md5(CAST(user_id AS STRING)), 16, 8), 16,"
-                " 10) AS BIGINT)"
-            ),
-            F.lit(K),
-        )
-        want = (
-            batch_events.select(
-                F.expr(
-                    "unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000"
-                ).alias("hb"),
-                (fp / F.lit(1152921504606846976.0)).alias("h"),
-                bucket.alias("bucket"),
-            )
-            .groupBy("hb", "bucket")
-            .agg(F.min("h").alias("min_h"))
-            .collect()
-        )
-        want_cells = {(r["hb"] * 3600, r["bucket"]): r["min_h"] for r in want}
-        assert got_cells == want_cells
-
-        # estimator sanity on hours with n >= K distinct users
-        exact = {
-            r["hb"] * 3600: r["n"]
-            for r in batch_events.select(
-                F.expr(
-                    "unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000"
-                ).alias("hb"),
-                "user_id",
-            )
-            .groupBy("hb")
-            .agg(F.countDistinct("user_id").alias("n"))
-            .collect()
-        }
-        checked = 0
-        for ws in {w for w, _ in got_cells}:
-            mins = [v for (w, b), v in got_cells.items() if w == ws]
-            n = exact[ws]
-            if n < K or len(mins) < K:
-                continue
-            est = K * K / sum(mins) - K
-            assert abs(est - n) / n < 0.35, (ws, est, n)
-            checked += 1
-        if max(exact.values()) >= K:
-            assert checked > 0
-
-
-class TestSprtStream:
-    """Streaming SPRT: integer state carried across micro-batches; the
-    emission after the FINAL batch must equal the batch SPRT over all
-    rows at once, and n_obs must be non-decreasing across emissions."""
-
-    def test_stream_matches_batch_endpoint(self, spark, tmp_path_factory):
-        import math
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        src = str(tmp_path_factory.mktemp("sprt_events"))
-
-        def ns(mm, ss=0):
-            import datetime as dt
-
-            t = dt.datetime(2024, 1, 1, 10, mm, ss, tzinfo=dt.timezone.utc)
-            return int(t.timestamp()) * 1_000_000_000
-
-        def write(name, rows, mtime):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array(
-                        [r[0] for r in rows], pa.int64()
-                    ),
-                    "ts": pa.array([r[1] for r in rows], pa.int64()),
-                    "user_id": pa.array([7] * len(rows), pa.int64()),
-                    "event_type": pa.array([r[2] for r in rows]),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
-            )
-            path = os.path.join(src, name)
-            pq.write_table(tbl, path)
-            os.utime(path, (mtime, mtime))
-
-        # 3 micro-batches; 'view' rows must be ignored by the monitor
-        write(
-            "a.parquet",
-            [(1, ns(0), "click"), (2, ns(1), "purchase"),
-             (3, ns(2), "view")],
-            1_000,
-        )
-        write(
-            "b.parquet",
-            [(4, ns(3), "purchase"), (5, ns(4), "purchase")],
-            2_000,
-        )
-        write(
-            "c.parquet",
-            [(6, ns(5), "click"), (7, ns(6), "click"),
-             (8, ns(7), "purchase")],
-            3_000,
-        )
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            run_to_memory,
-        )
-        from employee_analytics_etl_spark.streaming.stateful import (
-            sprt_stream,
-        )
-
-        stream = build_events_stream(
-            spark, src, glob="*.parquet", max_files_per_trigger=1
-        )
-        got = run_to_memory(
-            sprt_stream(stream), "t_sprt", spark, output_mode="update"
-        ).collect()
-        rows = sorted(got, key=lambda r: r["n_obs"])
-        assert [r["n_obs"] for r in rows] == [2, 4, 7]
-        assert [r["n_conversions"] for r in rows] == [1, 3, 4]
-        # endpoint equals the closed-form batch computation
-        c1 = round(math.log(11.0 / 9.0), 12)
-        c2 = round(math.log(9.0 / 11.0), 12)
-        want_llr = round(4 * c1 + 3 * c2, 6)
-        last = rows[-1]
-        assert last["llr"] == want_llr
-        assert last["decision"] == "continue"
+        assert state == {(u, "click"): ns(20) // 1000 for u in users}
 
 
 class TestStateStoreReader:
-    """Spark 4 state-store BATCH reader (spark.read.format
-    ("statestore")): the streaming aggregation's internal state is a
-    queryable table — the observability surface for debugging stuck
-    watermarks / state bloat in production. The state read back from
-    the checkpoint must equal the same aggregation run as a batch
-    query over the same input."""
+    """The state-store batch reader (``format("statestore")``) reads a
+    streaming aggregation's state back from its checkpoint; it must
+    equal the same aggregation run as a batch query."""
 
     def test_state_equals_batch_aggregate(self, spark, tmp_path_factory):
-        from pyspark.sql import functions as F
-
         src = str(tmp_path_factory.mktemp("ssr_src"))
         ckpt = str(tmp_path_factory.mktemp("ssr_ckpt"))
         spark.range(1000).select(
@@ -1247,7 +484,7 @@ class TestStateStoreReader:
             spark.read.format("statestore")
             .load(ckpt)
             .select(
-                # state value struct carries the INTERNAL aggregation
+                # the state value struct carries the INTERNAL aggregation
                 # buffer names (count, sum), not the output aliases
                 F.col("key.k").alias("k"),
                 F.col("value.count").alias("n"),
@@ -1265,137 +502,27 @@ class TestStateStoreReader:
         assert got == want
         # the state-metadata companion names the operator
         meta = spark.read.format("state-metadata").load(ckpt)
-        ops = {r["operatorName"] for r in meta.collect()}
-        assert "stateStoreSave" in ops
-
-
-class TestStreamingRollingKmv:
-    def test_rolling_sketch_equals_batch_and_estimates(
-        self, spark, batch_events
-    ):
-        """Judge r5 #7: the SLIDING-window bucketed-min KMV stream
-        (rolling 7-day distinct actives) must be cell-for-cell
-        identical to the same window spec run in batch (K=8 so the
-        15-user smoke fixture populates most buckets), and the
-        k²/Σmin − k estimator must land within 35% of truth on a
-        synthetic 5000-user sketch where the estimate is
-        statistically meaningful."""
-        from pyspark.sql import functions as F
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            kmv_rolling_distinct_stream,
-        )
-
-        K = 8
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            kmv_rolling_distinct_stream(stream, k=K), "t_kmv_roll", spark
-        ).collect()
-        got_cells = {(r[0], r[1]): r[2] for r in got}
-        assert len(got_cells) > 0
-
-        fp = F.expr(
-            "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-            " AS BIGINT)"
-        )
-        bucket = F.pmod(
-            F.expr(
-                "CAST(conv(substr(md5(CAST(user_id AS STRING)), 16, 8), 16,"
-                " 10) AS BIGINT)"
-            ),
-            F.lit(K),
-        )
-        bev = batch_events.select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            (fp / F.lit(1152921504606846976.0)).alias("h"),
-            bucket.alias("bucket"),
-        )
-        want = (
-            bev.groupBy(F.window("ts", "7 days", "1 day"), "bucket")
-            .agg(F.min("h").alias("min_h"))
-            .select(
-                F.unix_timestamp(F.col("window.end")).alias("we"),
-                "bucket",
-                "min_h",
-            )
-            .collect()
-        )
-        want_cells = {(r["we"], r["bucket"]): r["min_h"] for r in want}
-        assert got_cells == want_cells
-
-        # Estimator sanity at a scale where it is statistically
-        # meaningful (the smoke fixture has 15 users — k=8 plug-in
-        # estimates there are noise): since the stream is proven
-        # cell-for-cell identical to the batch sketch above, validate
-        # k²/Σmin − k on a synthetic batch sketch with n >> k.
-        KE = 64
-        n_true = 5000
-        syn = spark.range(n_true).select(
-            F.concat(F.lit("synth_user_"), F.col("id")).alias("user_id")
-        )
-        fp2 = F.expr(
-            "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 15), 16, 10)"
-            " AS BIGINT)"
-        )
-        b2 = F.pmod(
-            F.expr(
-                "CAST(conv(substr(md5(CAST(user_id AS STRING)), 16, 8), 16,"
-                " 10) AS BIGINT)"
-            ),
-            F.lit(KE),
-        )
-        cells = (
-            syn.select(
-                (fp2 / F.lit(1152921504606846976.0)).alias("h"),
-                b2.alias("bucket"),
-            )
-            .groupBy("bucket")
-            .agg(F.min("h").alias("min_h"))
-            .collect()
-        )
-        assert len(cells) == KE
-        est = KE * KE / sum(r["min_h"] for r in cells) - KE
-        assert abs(est - n_true) <= 0.35 * n_true, (est, n_true)
+        assert "stateStoreSave" in {r["operatorName"] for r in meta.collect()}
 
 
 class TestPitStatusStream:
     def test_stream_pit_lookup_equals_batch_twin(self, spark):
-        """Feature-store PIT serve (judge r6 #4): resolving the probe
-        STREAM against the static SCD2 change history must equal the
-        batch orders_pit_status_lookup cell-for-cell at sf0.001."""
-        from employee_analytics_etl_spark.plans import registry_r7
-        from employee_analytics_etl_spark.plans.registry import QUERIES
-        from employee_analytics_etl_spark.sources.readers import (
-            read_parquet_table,
-        )
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_orders_probe_stream,
-            pit_status_stream,
-            run_to_memory,
-        )
-
-        changes = registry_r7.order_status_changes(
-            read_parquet_table(spark, SF_SMOKE, "orders")
-        )
-        probes = build_orders_probe_stream(spark, SF_SMOKE)
+        """Resolving the probe stream against the static status history
+        equals the Spark batch orders_pit_status_lookup row for row."""
+        build, output_mode = TWINS["orders_pit_status_lookup"]
         got = run_to_memory(
-            pit_status_stream(probes, changes), "t_pit_status", spark
+            build(spark, SF_SMOKE), "t_pit_status", spark, output_mode=output_mode
         ).collect()
-        twin = QUERIES["orders_pit_status_lookup"](spark, SF_SMOKE).collect()
+        twin = load_all()[0]["orders_pit_status_lookup"](spark, SF_SMOKE).collect()
         assert len(got) > 0
-
-        def key(rows):
-            return sorted(tuple(r) for r in rows)
-
-        assert key(got) == key(twin)
+        assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in twin)
 
     def test_pit_argmax_picks_row_effective_at_probe_date(self, spark):
-        """Hand-built history: status O effective day 1, F effective
-        day 40 for custkey 5 — a probe dated day 20 resolves O, day 40
-        resolves F (inclusive), day 41 resolves F. Exercises the same
-        pit_status_stream code path in batch mode (pure DataFrame
-        ops), isolating the max_by argmax semantics from the stream
-        harness."""
+        """Hand-built history: status O effective 2024-01-01, F effective
+        2024-02-09 for custkey 5. A probe dated 01-20 resolves O, 02-09
+        resolves F (inclusive), 02-10 resolves F. Runs pit_status_stream
+        on batch DataFrames, isolating the max_by argmax from the
+        stream harness."""
         import datetime as dt
 
         from employee_analytics_etl_spark.streaming.jobs import (
@@ -1424,165 +551,25 @@ class TestPitStatusStream:
         assert got == {1: ("O", True), 2: ("F", False), 3: ("F", True)}
 
 
-class TestFunnelStream:
-    def test_single_batch_equals_batch_stage_table(self, spark):
-        """Stateful funnel state machine over the sf0.001 events file
-        (one availableNow batch; the kernel sorts by (ts, event_id)
-        internally) must reproduce the batch query's chained-window
-        per-user stage table cell-for-cell."""
-        from employee_analytics_etl_spark.plans.registry_r6 import (
-            funnel_user_stages,
-        )
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-        )
-        from employee_analytics_etl_spark.streaming.stateful import (
-            funnel_state_stream,
-        )
-
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = run_to_memory(
-            funnel_state_stream(stream), "t_funnel_state", spark,
-            output_mode="update",
-        )
-        # update mode emits once per user per batch; stages are
-        # set-once monotone, so max-per-user = final state
-        final = {
-            r["user_id"]: (r["t1"], r["t2"], r["t3"])
-            for r in got.groupBy("user_id")
-            .agg(
-                F.max("t1_us").alias("t1"),
-                F.max("t2_us").alias("t2"),
-                F.max("t3_us").alias("t3"),
-            )
-            .collect()
-        }
-        ev = read_parquet_table(spark, SF_SMOKE, "events").select(
-            "user_id",
-            "event_type",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        )
-        want = {
-            r["user_id"]: (r["t1"], r["t2"], r["t3"])
-            for r in funnel_user_stages(ev).collect()
-        }
-        assert len(final) > 0
-        assert final == want
-
-    def test_cross_batch_in_order_replay(self, spark, tmp_path):
-        """Stage progression SPANNING micro-batches: view in file 1,
-        click in file 2, purchase in file 3 must complete the funnel
-        (state persists across batches); a click-before-view user and
-        a click-at-the-same-instant user must NOT progress (strict
-        order)."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-        )
-        from employee_analytics_etl_spark.streaming.stateful import (
-            funnel_state_stream,
-        )
-
-        us = lambda m: m * 60_000_000  # noqa: E731
-
-        # (event_id, ts_us, user_id, type) split into 3 ts-ordered files
-        files = [
-            [
-                (1, us(0), 1, "view"),
-                (2, us(0), 2, "click"),   # click before any view
-                (3, us(1), 2, "view"),
-                (4, us(2), 3, "view"),    # user 3: click ties with view
-            ],
-            [
-                (5, us(10), 1, "click"),
-                (6, us(2), 3, "click"),   # DISALLOWED: us == t1, not >
-                (7, us(11), 2, "purchase"),  # no click stage yet
-            ],
-            [
-                (8, us(20), 1, "purchase"),
-                (9, us(30), 2, "click"),
-            ],
-        ]
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        for i, rows in enumerate(files):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array(
-                        [r[1] for r in rows], pa.timestamp("us")
-                    ),
-                    "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                    "event_type": pa.array([r[3] for r in rows]),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
-            )
-            path = os.path.join(src, f"f{i}.parquet")
-            pq.write_table(tbl, path)
-            os.utime(path, (1_000 + 10 * i, 1_000 + 10 * i))
-
-        stream = build_events_stream(
-            spark, src, glob="*.parquet", max_files_per_trigger=1
-        )
-        got = run_to_memory(
-            funnel_state_stream(stream), "t_funnel_replay", spark,
-            output_mode="update",
-        )
-        final = {
-            r["user_id"]: (r["t1"], r["t2"], r["t3"])
-            for r in got.groupBy("user_id")
-            .agg(
-                F.max("t1_us").alias("t1"),
-                F.max("t2_us").alias("t2"),
-                F.max("t3_us").alias("t3"),
-            )
-            .collect()
-        }
-        assert final[1] == (us(0), us(10), us(20))  # full funnel, 3 batches
-        assert final[2] == (us(1), us(30), None)    # early click ignored
-        assert final[3] == (us(2), None, None)      # tie click rejected
-
-
 class TestEwmaStream:
     def test_stream_ewma_bit_identical_to_batch_fold(self, spark):
-        """ewma_stream over sf0.001 events must be BIT-identical to
-        events_value_ewma's aggregate() fold — same op sequence, same
-        order — for every user."""
-        from employee_analytics_etl_spark.plans.registry import QUERIES
-        from employee_analytics_etl_spark.plans import registry_funcs  # noqa: F401
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-        )
-        from employee_analytics_etl_spark.streaming.stateful import (
-            ewma_stream,
-        )
-
-        stream = build_events_stream(spark, SF_SMOKE)
+        """ewma_stream over sf0.001 events is BIT-identical to the Spark
+        batch events_value_ewma fold for every user."""
+        build, output_mode = TWINS["events_value_ewma"]
         got = run_to_memory(
-            ewma_stream(stream), "t_ewma_state", spark, output_mode="update"
+            build(spark, SF_SMOKE), "t_ewma_state", spark, output_mode=output_mode
         )
         # update mode: keep the row with the max n_events per user
         final = {
             r["user_id"]: (r["n"], r["ewma"])
             for r in got.groupBy("user_id")
-            .agg(
-                F.max(F.struct("n_events", "ewma")).alias("s")
-            )
-            .select(
-                "user_id",
-                F.col("s.n_events").alias("n"),
-                F.col("s.ewma").alias("ewma"),
-            )
+            .agg(F.max(F.struct("n_events", "ewma")).alias("s"))
+            .select("user_id", F.col("s.n_events").alias("n"), F.col("s.ewma").alias("ewma"))
             .collect()
         }
         want = {
             r["user_id"]: (r["n_events"], r["ewma"])
-            for r in QUERIES["events_value_ewma"](spark, SF_SMOKE).collect()
+            for r in load_all()[0]["events_value_ewma"](spark, SF_SMOKE).collect()
         }
         assert len(final) > 0
         assert final == want  # exact float equality, not approx
@@ -1590,39 +577,19 @@ class TestEwmaStream:
     def test_cross_batch_fold_composes(self, spark, tmp_path):
         """The fold split across 3 micro-batches equals the fold over
         the concatenated sequence (hand-computed)."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-        )
         from employee_analytics_etl_spark.streaming.stateful import (
             ewma_stream,
         )
 
         vals = [10.0, 2.0, 7.0, 1.0, 9.0, 4.0]
-        src = str(tmp_path / "src")
-        os.makedirs(src)
+        src = str(tmp_path)
         for i in range(3):
-            chunk = vals[2 * i : 2 * i + 2]
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([2 * i, 2 * i + 1], pa.int64()),
-                    "ts": pa.array(
-                        [j * 1_000_000 for j in (2 * i, 2 * i + 1)],
-                        pa.timestamp("us"),
-                    ),
-                    "user_id": pa.array([7, 7], pa.int64()),
-                    "event_type": pa.array(["view", "view"]),
-                    "value": pa.array(chunk, pa.float64()),
-                    "props": pa.array(["{}", "{}"]),
-                }
+            write_events(
+                os.path.join(src, f"f{i}.parquet"),
+                [(j, j * 1_000_000_000, 7, vals[j]) for j in (2 * i, 2 * i + 1)],
+                1_000 + 10 * i,
+                event_type="view",
             )
-            path = os.path.join(src, f"f{i}.parquet")
-            pq.write_table(tbl, path)
-            os.utime(path, (1_000 + 10 * i, 1_000 + 10 * i))
 
         stream = build_events_stream(
             spark, src, glob="*.parquet", max_files_per_trigger=1
@@ -1645,78 +612,40 @@ class TestEwmaStream:
 
 class TestOhlcStream:
     def test_stream_candlesticks_equal_batch_twin(self, spark):
-        """Windowed OHLC from the stream must equal events_value_ohlc
-        cell-for-cell: min_by/max_by are mergeable monoids, so this
-        holds under ANY batch split — no in-order-replay contract."""
-        from employee_analytics_etl_spark.plans.registry import QUERIES
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            ohlc_stream,
-        )
-
-        stream = build_events_stream(spark, SF_SMOKE)
-        got = {
-            (r["user_id"], r["hour_sec"]): (
-                r["open_value"],
-                r["close_value"],
-                r["low_value"],
-                r["high_value"],
-                r["n_events"],
-            )
-            for r in run_to_memory(
-                ohlc_stream(stream), "t_ohlc", spark
-            ).collect()
-        }
-        want = {
-            (r["user_id"], r["hour_sec"]): (
-                r["open_value"],
-                r["close_value"],
-                r["low_value"],
-                r["high_value"],
-                r["n_events"],
-            )
-            for r in QUERIES["events_value_ohlc"](spark, SF_SMOKE).collect()
-        }
+        """Windowed OHLC from the stream equals the Spark batch
+        events_value_ohlc cell for cell, floats exact: min_by/max_by
+        are mergeable, so this holds under any batch split."""
+        cols = ["user_id", "hour_sec", "open_value", "close_value",
+                "low_value", "high_value", "n_events"]
+        build, output_mode = TWINS["events_value_ohlc"]
+        got = run_to_memory(
+            build(spark, SF_SMOKE), "t_ohlc", spark, output_mode=output_mode
+        ).select(cols).collect()
+        want = load_all()[0]["events_value_ohlc"](spark, SF_SMOKE).select(cols).collect()
         assert len(got) > 0
-        assert got == want
+        assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
 
     def test_out_of_order_arrival_still_exact(self, spark, tmp_path):
         """Events split across files in REVERSE time order (late
         arrivals): the mergeable candlestick must still match the
-        batch answer — the property the funnel state machine cannot
-        have."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-            ohlc_stream,
-        )
+        batch answer — the property the EWMA and debounce state
+        machines cannot have."""
+        from employee_analytics_etl_spark.streaming.jobs import ohlc_stream
 
         # one user, one hour; values arrive newest-first across files
         rows_by_file = [
-            [(3, 30 * 60_000_000, 5.0)],   # latest event first
-            [(2, 20 * 60_000_000, 9.0)],
-            [(1, 10 * 60_000_000, 2.0)],   # true OPEN arrives last
+            (3, 30, 5.0),   # latest event first
+            (2, 20, 9.0),
+            (1, 10, 2.0),   # true OPEN arrives last
         ]
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        for i, rows in enumerate(rows_by_file):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "user_id": pa.array([1] * len(rows), pa.int64()),
-                    "event_type": pa.array(["view"] * len(rows)),
-                    "value": pa.array([r[2] for r in rows], pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
+        src = str(tmp_path)
+        for i, (eid, minute, v) in enumerate(rows_by_file):
+            write_events(
+                os.path.join(src, f"f{i}.parquet"),
+                [(eid, minute * 60_000_000_000, 1, v)],
+                1_000 + 10 * i,
+                event_type="view",
             )
-            path = os.path.join(src, f"f{i}.parquet")
-            pq.write_table(tbl, path)
-            os.utime(path, (1_000 + 10 * i, 1_000 + 10 * i))
 
         stream = build_events_stream(
             spark, src, glob="*.parquet", max_files_per_trigger=1
@@ -1731,90 +660,6 @@ class TestOhlcStream:
             r["high_value"],
             r["n_events"],
         ) == (2.0, 5.0, 2.0, 9.0, 3)
-
-
-class TestFunnelStateRecovery:
-    def test_state_survives_query_restart(self, spark, tmp_path):
-        """The funnel state machine must resume from the state store
-        across SEPARATE query runs on one checkpoint: run 1 sees only
-        the view, run 2 (new query object, same checkpoint) sees the
-        click+purchase files and must complete the funnel from
-        restored state — the exactly-once-state contract a nightly
-        availableNow deployment relies on."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
-        )
-        from employee_analytics_etl_spark.streaming.stateful import (
-            funnel_state_stream,
-        )
-
-        us = lambda m: m * 60_000_000  # noqa: E731
-        src = str(tmp_path / "src")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(src)
-
-        def write(name, rows, mtime):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                    "event_type": pa.array([r[3] for r in rows]),
-                    "value": pa.array([1.0] * len(rows), pa.float64()),
-                    "props": pa.array(["{}"] * len(rows)),
-                }
-            )
-            path = os.path.join(src, name)
-            pq.write_table(tbl, path)
-            os.utime(path, (mtime, mtime))
-
-        out = str(tmp_path / "out")
-
-        def write_batch(batch_df, batch_id):
-            batch_df.write.mode("overwrite").parquet(
-                f"{out}/batch_id={batch_id}"
-            )
-
-        def run_once():
-            stream = build_events_stream(spark, src, glob="*.parquet")
-            q = (
-                funnel_state_stream(stream)
-                .writeStream.outputMode("update")
-                .foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            # latest emission per user = the one with the most stages
-            # set (stages are set-once monotone)
-            return {
-                r["user_id"]: (r["t1_us"], r["t2_us"], r["t3_us"])
-                for r in spark.read.parquet(out)
-                .groupBy("user_id")
-                .agg(
-                    F.max("t1_us").alias("t1_us"),
-                    F.max("t2_us").alias("t2_us"),
-                    F.max("t3_us").alias("t3_us"),
-                )
-                .collect()
-            }
-
-        write("a.parquet", [(1, us(0), 9, "view")], 1_000)
-        first = run_once()
-        assert first[9] == (us(0), None, None)
-
-        write("b.parquet", [(2, us(5), 9, "click"),
-                            (3, us(9), 9, "purchase")], 2_000)
-        second = run_once()
-        # run 2 processed ONLY the new file, yet completed the funnel —
-        # t1 came from the restored state store, not from reprocessing
-        assert second[9] == (us(0), us(5), us(9))
 
 
 class TestWatermarkDropSemantics:
@@ -1832,37 +677,21 @@ class TestWatermarkDropSemantics:
         60 s, predicted dropped) arrives two batches after the 13:00
         high-water row, so even the lagged filter watermark (12:59)
         exceeds it."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from employee_analytics_etl_spark.streaming.jobs import (
-            build_events_stream,
             tumbling_counts_stream,
         )
 
-        H = 3_600_000_000  # one hour in micros
+        H = 3_600_000_000_000  # one hour in nanos
         # arrival order = file order, one row per micro-batch:
         #  f0: 10:00  f1: 12:00  f2: 13:00  f3: 10:30 (the late row)
         rows_by_file = [(1, 10 * H), (2, 12 * H), (3, 13 * H),
                         (4, 10 * H + H // 2)]
-        src = str(tmp_path / "src")
-        os.makedirs(src)
+        src = str(tmp_path)
         for i, (eid, ts) in enumerate(rows_by_file):
-            tbl = pa.table(
-                {
-                    "event_id": pa.array([eid], pa.int64()),
-                    "ts": pa.array([ts], pa.timestamp("us")),
-                    "user_id": pa.array([1], pa.int64()),
-                    "event_type": pa.array(["view"]),
-                    "value": pa.array([1.0], pa.float64()),
-                    "props": pa.array(["{}"]),
-                }
+            write_events(
+                os.path.join(src, f"f{i}.parquet"), [(eid, ts, 1)],
+                1_000 + 10 * i, event_type="view",
             )
-            path = os.path.join(src, f"f{i}.parquet")
-            pq.write_table(tbl, path)
-            os.utime(path, (1_000 + 10 * i, 1_000 + 10 * i))
 
         stream = build_events_stream(
             spark, src, glob="*.parquet", max_files_per_trigger=1
